@@ -39,8 +39,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Scale note: this is a LATENCY path for interactive dashboards, not
   * a throughput path — per-request work is O(row groups containing the
-  * channel in the requested window), bounded by [[MaxDecodedGroups]]
-  * regardless of store size; scans and aggregates stay on the engine.
+  * channel in the requested window), bounded by
+  * [[DecodedRowCache.MaxDecodedGroups]] regardless of store size; scans
+  * and aggregates stay on the engine. Decoded rows are shared across
+  * requests and manifest versions through [[DecodedRowCache]], so a
+  * repeated request decodes only files it has not seen.
   */
 object DirectServe {
 
@@ -102,12 +105,6 @@ object DirectServe {
     }
   }
 
-  /** Decoded-row-group budget per request: a request that would decode
-    * more groups than this (pathological fragmentation, or a window so
-    * wide the read is a real scan) is the DataFrame engine's job.
-    */
-  private val MaxDecodedGroups = 64
-
   private val manifestMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, Long), ManifestStore.Manifest]()
   private val levelStatesMemo = new java.util.concurrent.ConcurrentHashMap[
@@ -116,15 +113,8 @@ object DirectServe {
   // a store deleted and recreated at the same path restarts version
   // numbering — (path, version) keys would serve the DEAD store's
   // manifest; ManifestStore detects the regression and purges us
-  ManifestStore.onVersionRegression { path =>
-    manifestMemo.keySet.removeIf(_._1 == path)
-    levelStatesMemo.keySet.removeIf(_._1 == path)
-  }
+  ManifestStore.onVersionRegression(invalidateStore)
 
-  /** One request's decode state: per-(file, projection) row cache (the
-    * inner scan and both boundary lookups often hit the same day file)
-    * plus the decoded-group budget.
-    */
   /** Decoded row: (ts, value, sample_id). sample_id participates only
     * as the duplicate-timestamp tiebreak (first arrival = min
     * sample_id wins — the querySamples survivor rule); 0 when the
@@ -132,11 +122,29 @@ object DirectServe {
     */
   private[archive] type DRow = (Long, java.lang.Double, Long)
 
+  /** One channel's rows in one file as the decoded-rows cache holds
+    * them: ts-ascending in file order, column-wise. `values` is null
+    * for the ts-only planning projection, `nulls` marks null values,
+    * `sid` is null when sample_id was not decoded. Never mutated after
+    * construction.
+    */
+  private[archive] final class ScalarRows(val ts: Array[Long],
+      values: Array[Double], nulls: java.util.BitSet, sid: Array[Long]) {
+    def length: Int = ts.length
+    def row(i: Int): DRow = (ts(i),
+      if (values == null || nulls.get(i)) null
+      else java.lang.Double.valueOf(values(i)),
+      if (sid == null) 0L else sid(i))
+  }
+
+  /** One request's decode state: the channel and the decoded-group
+    * budget, which also remembers the files this request already read
+    * (the inner scan and both boundary lookups often hit the same day
+    * file).
+    */
   private final class Ctx(val conf: Configuration, val root: String,
                           val channel: String) {
-    val fileRows = mutable.Map.empty[
-      (String, Option[String]), IndexedSeq[DRow]]
-    var groupsDecoded = 0
+    val budget = new DecodedRowCache.Budget
   }
 
   /** The full fast-path serve, or None when out of envelope. Throws the
@@ -169,11 +177,13 @@ object DirectServe {
           count, backend, loMode, hiMode, refuseDisabled)
     }
 
-  /** Drop this JVM's cached planning metadata for one store — the
-    * missing-file re-resolve path. */
+  /** Drop this JVM's cached planning metadata and decoded rows for one
+    * store — the missing-file re-resolve path, and the purge on a
+    * version regression (a store deleted and recreated at its path). */
   private[archive] def invalidateStore(storePath: String): Unit = {
     manifestMemo.keySet.removeIf(_._1 == storePath)
     levelStatesMemo.keySet.removeIf(_._1 == storePath)
+    DecodedRowCache.purge(storePath)
   }
 
   private def tryServeOnce(spark: SparkSession, configPath: String,
@@ -325,16 +335,16 @@ object DirectServe {
         for (e <- cands.sortBy(_.minTs)) {
           if (e.minTs < earliest) {
             val rows = channelRows(ctx, e, None)
-            if (rows.nonEmpty && rows.head._1 < earliest)
-              earliest = rows.head._1
+            if (rows.length > 0 && rows.ts(0) < earliest)
+              earliest = rows.ts(0)
           }
         }
         var latest = Long.MinValue
         for (e <- cands.sortBy(f => -f.maxTs)) {
           if (e.maxTs > latest) {
             val rows = channelRows(ctx, e, None)
-            if (rows.nonEmpty && rows.last._1 > latest)
-              latest = rows.last._1
+            if (rows.length > 0 && rows.ts(rows.length - 1) > latest)
+              latest = rows.ts(rows.length - 1)
           }
         }
         if (earliest == Long.MaxValue) None
@@ -346,13 +356,24 @@ object DirectServe {
 
   // ---- row assembly --------------------------------------------------
 
+  /** Rows with `lo <= ts <= hi`, each file's slice found by binary
+    * search over its ts-ascending rows. */
   private def rangeRows(ctx: Ctx, entries: Seq[ManifestStore.FileEntry],
                         valueCol: String, lo: Long, hi: Long)
-      : Seq[DRow] =
+      : Seq[DRow] = {
+    val out = mutable.ArrayBuffer.empty[DRow]
     entries.filter(e => mayContain(e, ctx.channel) &&
         e.maxTs >= lo && e.minTs <= hi)
-      .flatMap(e => channelRows(ctx, e, Some(valueCol))
-        .filter(r => r._1 >= lo && r._1 <= hi))
+      .foreach { e =>
+        val rows = channelRows(ctx, e, Some(valueCol))
+        var i = firstIndexAtOrAfter(rows, lo)
+        while (i < rows.length && rows.ts(i) <= hi) {
+          out += rows.row(i)
+          i += 1
+        }
+      }
+    out.toSeq
+  }
 
   /** `h` beats `best` as the at-or-before boundary: later ts wins;
     * equal ts → earlier arrival (min sample_id), the survivor rule. */
@@ -383,12 +404,12 @@ object DirectServe {
         val rows = channelRows(ctx, e, Some(valueCol))
         // all rows at the candidate boundary ts (a compacted file can
         // hold same-ts rows from several source commits)
-        val i = lastIndexAtOrBefore(rows, t)
-        if (i >= 0) {
-          val bt = rows(i)._1
-          var j = i
-          while (j >= 0 && rows(j)._1 == bt) {
-            if (beatsBack(rows(j), best)) best = Some(rows(j))
+        var j = lastIndexAtOrBefore(rows, t)
+        if (j >= 0) {
+          val bt = rows.ts(j)
+          while (j >= 0 && rows.ts(j) == bt) {
+            val h = rows.row(j)
+            if (beatsBack(h, best)) best = Some(h)
             j -= 1
           }
         }
@@ -397,15 +418,26 @@ object DirectServe {
     best
   }
 
-  /** Index of the LAST row with ts <= t in a ts-ascending seq, -1 if
+  /** Index of the LAST row with ts <= t in ts-ascending rows, -1 if
     * none. */
-  private def lastIndexAtOrBefore(rows: IndexedSeq[DRow], t: Long): Int = {
-    var lo = 0; var hi = rows.length - 1; var ans = -1
-    while (lo <= hi) {
+  private def lastIndexAtOrBefore(rows: ScalarRows, t: Long): Int = {
+    var lo = 0; var hi = rows.length
+    while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      if (rows(mid)._1 <= t) { ans = mid; lo = mid + 1 } else hi = mid - 1
+      if (rows.ts(mid) <= t) lo = mid + 1 else hi = mid
     }
-    ans
+    lo - 1
+  }
+
+  /** Index of the FIRST row with ts >= t in ts-ascending rows, `length`
+    * if none. */
+  private def firstIndexAtOrAfter(rows: ScalarRows, t: Long): Int = {
+    var lo = 0; var hi = rows.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (rows.ts(mid) < t) lo = mid + 1 else hi = mid
+    }
+    lo
   }
 
   private def firstAtOrAfter(ctx: Ctx, entries: Seq[ManifestStore.FileEntry],
@@ -422,11 +454,12 @@ object DirectServe {
         val rows = channelRows(ctx, e, Some(valueCol))
         // first index with ts >= t; then all rows at that ts (see
         // lastAtOrBefore)
-        var i = lastIndexAtOrBefore(rows, t - 1) + 1
+        var i = firstIndexAtOrAfter(rows, t)
         if (i < rows.length) {
-          val bt = rows(i)._1
-          while (i < rows.length && rows(i)._1 == bt) {
-            if (beatsFwd(rows(i), best)) best = Some(rows(i))
+          val bt = rows.ts(i)
+          while (i < rows.length && rows.ts(i) == bt) {
+            val h = rows.row(i)
+            if (beatsFwd(h, best)) best = Some(h)
             i += 1
           }
         }
@@ -437,16 +470,20 @@ object DirectServe {
 
   // ---- parquet decode ------------------------------------------------
 
-  /** One channel's (ts, value, sample_id) rows in one file,
-    * ts-ascending, cached per request per projection (`valueCol` None =
-    * planning: ts only, sample_id not decoded). Row groups whose
-    * channel stats exclude the channel never decode.
+  /** One channel's rows in one file through the process-wide
+    * [[DecodedRowCache]] (`valueCol` None = planning: ts only,
+    * sample_id not decoded). Row groups whose channel stats exclude
+    * the channel never decode.
     */
   private def channelRows(ctx: Ctx, e: ManifestStore.FileEntry,
-                          valueCol: Option[String])
-      : IndexedSeq[DRow] =
-    ctx.fileRows.getOrElseUpdate((e.path, valueCol),
-      decodeFile(ctx, resolveDataPath(ctx.root, e.path), valueCol))
+                          valueCol: Option[String]): ScalarRows = {
+    val file = resolveDataPath(ctx.root, e.path)
+    DecodedRowCache.rows(ctx.budget, ctx.root, file, e.bytes, ctx.channel,
+        valueCol.getOrElse("")) {
+      val rows = decodeFile(ctx, file, valueCol)
+      (rows, rows.length.toLong)
+    }
+  }
 
   /** Channel-match converter: with dictionary-encoded pages (the
     * normal case for a (channel, ts)-sorted file) the comparison runs
@@ -479,19 +516,24 @@ object DirectServe {
   }
 
   /** Zero-allocation row sink: primitives land in field converters and
-    * `end()` appends the row iff the channel matched — no per-row
-    * Group objects (the example GroupRecordConverter was the decode
-    * bottleneck: ~300 k materialized rows to keep ~1 k).
+    * `end()` appends the row to primitive column builders iff the
+    * channel matched — no per-row objects (the example
+    * GroupRecordConverter was the decode bottleneck: ~300 k
+    * materialized rows to keep ~1 k).
     * Projection order: channel, ts, [value], [sample_id].
     */
   private final class RowsMaterializer(chBin: Binary, hasValue: Boolean,
-      hasSid: Boolean, out: mutable.ArrayBuffer[DRow])
-      extends RecordMaterializer[java.lang.Void] {
+      hasSid: Boolean) extends RecordMaterializer[java.lang.Void] {
     private val ch = new ChannelConverter(chBin)
     private val ts = new LongConverter
     private val dv = new DoubleConverter
     private val sid = new LongConverter
     private val sidIdx = if (hasValue) 3 else 2
+    private val tsOut = new mutable.ArrayBuilder.ofLong
+    private val valueOut = new mutable.ArrayBuilder.ofDouble
+    private val nulls = new java.util.BitSet
+    private val sidOut = new mutable.ArrayBuilder.ofLong
+    private var n = 0
     private val root: GroupConverter = new GroupConverter {
       def getConverter(i: Int): Converter =
         if (i == 0) ch else if (i == 1) ts
@@ -499,23 +541,43 @@ object DirectServe {
       def start(): Unit = { ch.isMatch = false; ts.set = false
         dv.set = false; sid.set = false }
       def end(): Unit =
-        if (ch.isMatch && ts.set)
-          out += ((ts.v,
-            if (hasValue && dv.set) java.lang.Double.valueOf(dv.v) else null,
-            if (hasSid && sid.set) sid.v else 0L))
+        if (ch.isMatch && ts.set) {
+          tsOut += ts.v
+          if (hasValue) {
+            valueOut += dv.v
+            if (!dv.set) nulls.set(n)
+          }
+          if (hasSid) sidOut += (if (sid.set) sid.v else 0L)
+          n += 1
+        }
     }
     def getCurrentRecord: java.lang.Void = null
     def getRootConverter: GroupConverter = root
+
+    /** The decoded rows, ts-ascending. Within a file, groups are
+      * (channel, ts)-sorted by the writer — sort defensively anyway,
+      * stably by (ts, sample_id); correctness over one O(n log n). */
+    def result(): ScalarRows = {
+      val t = tsOut.result()
+      val v = if (hasValue) valueOut.result() else null
+      val s = if (hasSid) sidOut.result() else null
+      var asc = true
+      var i = 1
+      while (asc && i < t.length) { if (t(i - 1) > t(i)) asc = false; i += 1 }
+      if (asc) new ScalarRows(t, v, nulls, s)
+      else {
+        val order = (0 until t.length)
+          .sortBy(j => (t(j), if (s == null) 0L else s(j))).toArray
+        val sortedNulls = new java.util.BitSet
+        order.indices.foreach(k => if (nulls.get(order(k))) sortedNulls.set(k))
+        new ScalarRows(order.map(t), if (v == null) null else order.map(v),
+          sortedNulls, if (s == null) null else order.map(s))
+      }
+    }
   }
 
-  private val debugTiming = sys.env.contains("GRAFT_DIRECT_DEBUG")
-
   private def decodeFile(ctx: Ctx, file: String, valueCol: Option[String])
-      : IndexedSeq[DRow] = {
-    val dbg0 = if (debugTiming) System.nanoTime() else 0L
-    var dbgOpened = 0L
-    var dbgRows = 0L
-    val out = mutable.ArrayBuffer.empty[DRow]
+      : ScalarRows = {
     val chBin = Binary.fromString(ctx.channel)
     val path = new Path(file)
     // the record filter drives row-group stats AND column-index page
@@ -529,7 +591,6 @@ object DirectServe {
       .build()
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(path, ctx.conf), opts)
-    if (debugTiming) dbgOpened = System.nanoTime()
     try {
       val fileSchema = reader.getFooter.getFileMetaData.getSchema
       if (!fileSchema.containsField("channel") ||
@@ -561,38 +622,20 @@ object DirectServe {
         throw new FallbackException
       reader.setRequestedSchema(proj)
       val io = new ColumnIOFactory().getColumnIO(proj)
-      val mat = new RowsMaterializer(chBin, valueCol.isDefined, hasSid, out)
+      val mat = new RowsMaterializer(chBin, valueCol.isDefined, hasSid)
       var pages = reader.readNextFilteredRowGroup()
       while (pages != null) {
         val n = pages.getRowCount
         if (n > 0) {
-          ctx.groupsDecoded += 1
-          if (ctx.groupsDecoded > MaxDecodedGroups)
-            throw new FallbackException
+          ctx.budget.decodedGroup()
           val rr = io.getRecordReader(pages, mat)
           var r = 0L
           while (r < n) { rr.read(); r += 1 }
-          dbgRows += n
         }
         pages = reader.readNextFilteredRowGroup()
       }
+      mat.result()
     } finally reader.close()
-    if (debugTiming) {
-      val now = System.nanoTime()
-      println(f"[direct] $file%s open ${(dbgOpened - dbg0) / 1e6}%.1f ms " +
-        f"decode ${(now - dbgOpened) / 1e6}%.1f ms rows $dbgRows " +
-        s"kept ${out.length}")
-    }
-    // within a file, groups are (channel, ts)-sorted by the writer —
-    // sort defensively anyway; correctness over one O(n log n)
-    var asc = true
-    var i = 1
-    while (asc && i < out.length) {
-      if (out(i - 1)._1 > out(i)._1) asc = false
-      i += 1
-    }
-    if (asc) out.toIndexedSeq
-    else out.sortBy(r => (r._1, r._3)).toIndexedSeq
   }
 
   // ---- wire format ---------------------------------------------------

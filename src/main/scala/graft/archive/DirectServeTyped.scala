@@ -110,16 +110,18 @@ object DirectServeTyped {
       if (level != 0L) return None // decimated typed serve → engine
       val entries = manifest.files.filter(_.levelSec == 0L)
       val conf = spark.sparkContext.hadoopConfiguration
-      val cache = mutable.Map.empty[String, IndexedSeq[TRow]]
-      // decoded-row-group budget, like the scalar path's: a request
-      // whose window is a real scan belongs to the engine, not the
-      // serving driver
-      val groupsLeft = new java.util.concurrent.atomic.AtomicInteger(64)
-      def fileRows(e: ManifestStore.FileEntry): IndexedSeq[TRow] =
-        cache.getOrElseUpdate(e.path,
-          decodeTypedFile(conf,
-            DirectServe.resolveDataPath(storePath, e.path), channel,
-            groupsLeft))
+      // the decoded-rows cache and row-group budget shared with the
+      // scalar path: a request whose window is a real scan belongs to
+      // the engine, not the serving driver
+      val budget = new DecodedRowCache.Budget
+      def fileRows(e: ManifestStore.FileEntry): IndexedSeq[TRow] = {
+        val file = DirectServe.resolveDataPath(storePath, e.path)
+        DecodedRowCache.rows(budget, storePath, file, e.bytes, channel,
+            "typed") {
+          val rows = decodeTypedFile(conf, file, channel, budget)
+          (rows, rows.length.toLong * DecodedRowCache.TypedRowWeight)
+        }
+      }
       def mayContain(e: ManifestStore.FileEntry): Boolean =
         ManifestStore.chRangeContains(e.chMin, e.chMax, channel)
 
@@ -260,8 +262,7 @@ object DirectServeTyped {
     */
   private def decodeTypedFile(conf: org.apache.hadoop.conf.Configuration,
                               file: String, channel: String,
-                              groupsLeft: java.util.concurrent.atomic
-                                .AtomicInteger)
+                              budget: DecodedRowCache.Budget)
       : IndexedSeq[TRow] = {
     val want = Seq("channel", "ts", "vtype", "value", "str_value",
       "enum_value", "labels", "arr_num", "arr_str",
@@ -393,8 +394,7 @@ object DirectServeTyped {
       while (pages != null) {
         val n = pages.getRowCount
         if (n > 0) {
-          if (groupsLeft.decrementAndGet() < 0)
-            throw new DirectServe.FallbackException
+          budget.decodedGroup()
           val rr = io.getRecordReader(pages, mat)
           var r = 0L
           while (r < n) { rr.read(); r += 1 }

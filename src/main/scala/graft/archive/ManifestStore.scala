@@ -4,7 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -597,6 +597,34 @@ object ManifestStore {
   private def withBucketDate(samples: DataFrame): DataFrame =
     samples.withColumn("bucket_date", ArchiveStore.bucketDateCol(col("ts")))
 
+  /** Every file under `dir` (which must exist), recursively, by plain
+    * `listStatus`. `listFiles(dir, true)` builds a `LocatedFileStatus`
+    * per entry, which on the local FS loads permissions by forking
+    * `ls -ld`; when the entry vanished after its parent was listed (a
+    * concurrent commit's `_temporary`), that fork fails and the whole
+    * walk throws. Here no permissions load, and a subdirectory that
+    * vanishes mid-walk holds no files.
+    */
+  private def listFilesUnder(f: FileSystem, dir: Path): Seq[FileStatus] = {
+    val out = ArrayBuffer.empty[FileStatus]
+    def visit(st: FileStatus): Unit =
+      if (!st.isDirectory) out += st
+      else {
+        val children =
+          try f.listStatus(st.getPath)
+          catch {
+            case _: java.io.FileNotFoundException => Array.empty[FileStatus]
+            // the local FS reports a directory deleted between its
+            // existence check and its listing as a plain IOException
+            case e: java.io.IOException =>
+              if (f.exists(st.getPath)) throw e else Array.empty[FileStatus]
+          }
+        children.foreach(visit)
+      }
+    f.listStatus(dir).foreach(visit)
+    out.toSeq
+  }
+
   /** Stats + entry list for freshly staged files: ONE distributed scan
     * of only the new files (grouped by the hidden `_metadata.file_path`),
     * collected to the driver — file-count-sized, not row-count-sized.
@@ -607,13 +635,9 @@ object ManifestStore {
     val f = fs(spark, staged)
     // one driver-side listing of the staged dir: existence check +
     // per-file byte sizes (keyed by scheme-less path)
-    val sizes = scala.collection.mutable.Map.empty[String, Long]
-    val it = f.listFiles(new Path(staged), true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet"))
-        sizes += st.getPath.toUri.getPath -> st.getLen
-    }
+    val sizes = listFilesUnder(f, new Path(staged))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(st => st.getPath.toUri.getPath -> st.getLen).toMap
     if (sizes.isEmpty) return Nil
     val df = spark.read.parquet(staged)
     val ch = clusterCol(df).cast("string")
@@ -1182,15 +1206,13 @@ object ManifestStore {
         scala.util.Try(readManifest(spark, path, v)).toOption
           .map(_.files.map(_.path)).getOrElse(Nil)
       }).map(p => norm(resolveEntry(path, p))).toSet
-      val it = f.listFiles(dataDir, /* recursive = */ true)
-      while (it.hasNext) {
-        val st = it.next()
+      listFilesUnder(f, dataDir).foreach { st =>
         val p = st.getPath
         if (!live.contains(norm(p.toString)) &&
-            st.getModificationTime <= cutoff) {
-          f.delete(p, false)
+            st.getModificationTime <= cutoff &&
+            // a file that vanished after the listing was not ours
+            f.delete(p, false))
           deleted += p.toString
-        }
       }
     }
     // a streaming sink commits one version per micro-batch — without

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.archive.{ArchiveReader, ChannelConfig, ChannelDisabledException,
-  ConfigCommands, ConfiguredArchive, DirectServe, ManifestBackend,
-  NoSuchChannelException, NoStoredDataException}
+  ConfigCommands, ConfiguredArchive, DecodedRowCache, DirectServe,
+  ManifestBackend, ManifestStore, NoSuchChannelException,
+  NoStoredDataException}
 
 /** Byte-parity gate for the driver-side direct-read serve path
   * ([[DirectServe]]): every in-envelope request must produce EXACTLY
@@ -15,7 +16,11 @@ import graft.archive.{ArchiveReader, ChannelConfig, ChannelDisabledException,
   * — across boundary modes, decimated level selection, null values,
   * non-finite doubles, duplicate timestamps from separate commits, and
   * the before-first-sample edge; out-of-envelope requests (retention
-  * fallback across levels) must decline so the engine path answers.
+  * fallback across levels, more row groups than the budget) must
+  * decline so the engine path answers. The process-wide decoded-rows
+  * cache must never change an answer: not across commits, compaction,
+  * vacuum or a store recreated at the same path, and not whether a
+  * request falls back.
   */
 class DirectServeSpec extends AnyFunSuite {
 
@@ -206,5 +211,105 @@ class DirectServeSpec extends AnyFunSuite {
       .toVector
     assert(served == slow)
     assert(served.size > 1440)
+  }
+
+  private def frame(rows: Seq[(String, Long, Option[Double], String, Int,
+                               Int, Long)]) = {
+    import spark.implicits._
+    rows.toDF("channel", "ts", "value", "str_value", "severity", "status",
+      "sample_id")
+  }
+
+  test("decoded-rows cache: byte-identical across commit, compact, " +
+      "vacuum and store recreate; an unchanged file set decodes nothing") {
+    val cfgDir = Files.createTempDirectory("dscfgk").toString
+    val store = Files.createTempDirectory("dsstorek").toString
+    ConfigCommands.addChannel(spark, cfgDir, ChannelConfig("pv:k", "id-k",
+      "ca", enabled = true, Map(), Map()))
+    val lo = T0 + 30 * 60L * NS
+    val hi = T0 + 900 * 60L * NS
+    def check(): Vector[String] = {
+      val (fast, slow) = bothIn((cfgDir, store))("pv:k", lo, hi, None)
+      assert(fast.contains(slow))
+      slow
+    }
+    ConfiguredArchive.materialize(spark, cfgDir, store,
+      frame((1 to 600).map(i => row("pv:k", i, Some(i * 0.5)))))
+    val first = check()
+
+    // a new manifest version over the same files: planning and the
+    // serve read only cached rows
+    val m = ManifestStore.latestManifest(spark, store).get
+    ManifestStore.commitEntries(spark, store, Nil, m.schema)
+    assert(ManifestStore.latestVersion(spark, store).get > m.version)
+    val before = DecodedRowCache.decodedGroups.get
+    assert(check() == first)
+    assert(DecodedRowCache.decodedGroups.get == before,
+      "a repeated request over an unchanged file set decoded row groups")
+
+    // new rows in a second file of the same day
+    ConfiguredArchive.ingestRaw(spark, cfgDir, store,
+      frame((601 to 800).map(i => row("pv:k", i, Some(i * 0.5)))))
+    val grown = check()
+    assert(grown.size > first.size)
+
+    // compaction swaps in a new file; vacuum then deletes the cached ones
+    assert(ManifestStore.compactAll(spark, store, 0L).nonEmpty)
+    assert(check() == grown)
+    assert(ManifestStore.vacuum(spark, store, graceMs = 0)
+      .exists(_.endsWith(".parquet")))
+    assert(check() == grown)
+
+    // deleted and recreated at the same path with other values
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
+    ConfiguredArchive.materialize(spark, cfgDir, store,
+      frame((1 to 600).map(i => row("pv:k", i, Some(i * 3.0)))))
+    val recreated = check()
+    assert(recreated.exists(_.contains("\"value\":[90.0]")))
+    assert(!recreated.exists(_.contains("\"value\":[15.0]")))
+  }
+
+  test("a request over the row-group budget falls back on a cold and on " +
+      "a warm cache alike") {
+    val cfgDir = Files.createTempDirectory("dscfgg").toString
+    val store = Files.createTempDirectory("dsstoreg").toString
+    ConfigCommands.addChannel(spark, cfgDir, ChannelConfig("pv:g", "id-g",
+      "ca", enabled = true, Map(), Map()))
+    val Day = 86400L * NS
+    // three one-day files of ~30 tiny row groups each: any one day fits
+    // the 64-group budget, all three do not
+    spark.conf.set("parquet.block.size", "1")
+    try (0 until 3).foreach { d =>
+      ConfiguredArchive.ingestRaw(spark, cfgDir, store, frame(
+        (0 until 3000).map(i => ("pv:g", T0 + d * Day + i * 28L * NS,
+          Some(i * 0.25), "", 0, 0, d * 3000L + i))))
+    } finally spark.conf.unset("parquet.block.size")
+    val files = ManifestStore.latestManifest(spark, store).get.files
+    val groups = files.map { e =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$store/${e.path}"),
+          spark.sparkContext.hadoopConfiguration))
+      try r.getRowGroups.size finally r.close()
+    }
+    assert(groups.size == 3 && groups.forall(g => g > 1 && g <= 32) &&
+      groups.sum > DecodedRowCache.MaxDecodedGroups, s"groups $groups")
+
+    val exact = Some(ArchiveReader.Exact)
+    def serve(from: Long, to: Long) =
+      bothIn((cfgDir, store))("pv:g", from, to, None, exact, exact)
+    val (coldFast, _) = serve(T0, T0 + 3 * Day)
+    assert(coldFast.isEmpty, "a cold request over budget must fall back")
+    (0 until 3).foreach { d =>
+      val (fast, slow) = serve(T0 + d * Day, T0 + (d + 1) * Day - 1)
+      assert(fast.contains(slow) && slow.size == 3000)
+    }
+    val before = DecodedRowCache.decodedGroups.get
+    val (warmFast, slow) = serve(T0, T0 + 3 * Day)
+    assert(DecodedRowCache.decodedGroups.get == before,
+      "every file of the warm request was cached")
+    assert(warmFast.isEmpty, "a warm request over budget must fall back")
+    assert(ConfiguredArchive.serveJson(spark, cfgDir, store, "pv:g",
+      T0, T0 + 3 * Day, None, ManifestBackend, exact, exact).toVector == slow)
   }
 }

@@ -11,7 +11,9 @@ import graft.TestSpark
   * the full 21-tag synthetic frame (markers, enums with states,
   * arrays, aggregated minMaxDouble, numeric metadata blocks) and the
   * EPICS migration fixture must serve EXACTLY the engine's `to_json`
-  * bytes through the driver-side path; decimated-level plans decline.
+  * bytes through the driver-side path; decimated-level plans decline;
+  * the decoded-rows cache it shares with the scalar path never serves
+  * stale rows.
   */
 class DirectServeTypedSpec extends AnyFunSuite {
 
@@ -121,5 +123,51 @@ class DirectServeTypedSpec extends AnyFunSuite {
     val slow = ConfiguredArchive.serveJsonTypedSpark(spark, cfg2, store2,
       n, lo, hi, Some(2L), ManifestBackend).toVector
     assert(served == slow)
+  }
+
+  test("decoded-rows cache: typed serve stays byte-identical across " +
+      "commit, compact, vacuum and store recreate") {
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("tdsk").toString
+    val export = s"$dir/export"; val cfg = s"$dir/config"
+    val store = s"$dir/store"
+    graft.sources.EpicsArchiverJson.writeFixture(export)
+    (0 until 2).foreach(p =>
+      ConfigCommands.addChannel(spark, cfg, ChannelConfig(s"epics:pv$p",
+        s"epics-id$p", "ca", enabled = true, Map(), Map())))
+    val source = graft.sources.EpicsArchiverJson.read(spark, export)
+      .where(col("channel").isin("epics:pv0", "epics:pv1"))
+    ConfiguredArchive.materializeTyped(spark, cfg, store, source)
+    val lo = 1704067200L * NS - 1
+    val hi = lo + 4000L * NS * 60L
+    def check(): Vector[String] = {
+      val fast = DirectServeTyped.tryServe(spark, cfg, store, "epics:pv0",
+        lo, hi, None, ManifestBackend, refuseDisabled = false)
+        .map(_.toVector)
+      val slow = ConfiguredArchive.serveJsonTypedSpark(spark, cfg, store,
+        "epics:pv0", lo, hi, None, ManifestBackend).toVector
+      assert(fast.contains(slow))
+      slow
+    }
+    val first = check()
+    // a second file of the same day: every sample again, 1 ns later
+    val stored = ManifestStore.read(spark, store, 0L)
+      .drop("level", "bucket_date")
+    ManifestStore.commit(stored.where(col("channel") === "epics-id0")
+      .withColumn("ts", col("ts") + 1L), store, 0L)
+    val grown = check()
+    assert(grown.size == 2 * first.size)
+    assert(ManifestStore.compactAll(spark, store, 0L).nonEmpty)
+    assert(check() == grown)
+    assert(ManifestStore.vacuum(spark, store, graceMs = 0)
+      .exists(_.endsWith(".parquet")))
+    assert(check() == grown)
+    // deleted and recreated at the same path with half the samples
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
+    val mid = lo + 30L * NS * 60L
+    ConfiguredArchive.materializeTyped(spark, cfg, store,
+      source.where(col("ts") < mid))
+    val recreated = check()
+    assert(recreated.nonEmpty && recreated.size < first.size)
   }
 }

@@ -213,6 +213,37 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(ManifestStore.read(spark, dir, 0).count() == 2)
   }
 
+  test("vacuum completes when a staging directory vanishes mid-walk and " +
+      "deletes exactly the unreferenced out-of-grace files") {
+    val dir = Files.createTempDirectory("mstore").toString
+    ManifestStore.commit(samples(("c", T0 + 1 * NS, 1.0),
+      ("d", T0 + 2 * NS, 2.0)), dir, 0)
+    def plant(rel: String, mtime: Long): java.io.File = {
+      val f = new java.io.File(s"$dir/data/$rel")
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, Array[Byte](1, 2, 3))
+      assert(f.setLastModified(mtime))
+      f
+    }
+    val hourAgo = System.currentTimeMillis() - 3600L * 1000
+    val orphan = plant("commit-orphan/level=0/part-old.parquet", hourAgo)
+    val young = plant("commit-young/part-young.parquet",
+      System.currentTimeMillis())
+    // an in-flight commit's staging dir: the walk lists it, then it is
+    // gone before the walk descends into it
+    val inflight = plant("commit-inflight/_temporary/0/part-tmp.parquet",
+      hourAgo)
+    spark.sparkContext.hadoopConfiguration.set("fs.vanish.impl",
+      classOf[VanishingTempFileSystem].getName)
+    val gone = ManifestStore.vacuum(spark, s"vanish:$dir",
+      graceMs = 1800L * 1000)
+    assert(!inflight.getParentFile.exists(), "the staging dir never vanished")
+    assert(gone.map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath) ==
+      Seq(orphan.getPath))
+    assert(!orphan.exists() && young.exists())
+    assert(ManifestStore.read(spark, dir, 0).count() == 2)
+  }
+
   test("vacuum dereference-grace: an idle store's OLD latest version stays " +
       "protected for a full grace after a fresh commit supersedes it") {
     val dir = Files.createTempDirectory("mstore").toString
@@ -548,5 +579,33 @@ class ManifestStoreSpec extends AnyFunSuite {
     // vacuum must never delete live data
     ManifestStore.vacuum(spark, dir, graceMs = 0)
     checkAll()
+  }
+}
+
+/** The local file system under the `vanish:` scheme, where every
+  * `_temporary` directory is deleted right after a listing reports it
+  * — a concurrent commit's staging dir disappearing mid-walk. Like the
+  * local FS, a listed status loads its permissions lazily, and that
+  * load fails once the path is gone.
+  */
+class VanishingTempFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+
+  override def getUri: java.net.URI = java.net.URI.create("vanish:///")
+  override def getScheme: String = "vanish"
+  override def listStatus(p: Path): Array[FileStatus] = {
+    val sts = super.listStatus(p).map(st =>
+      new FileStatus(st.getLen, st.isDirectory, 1, st.getBlockSize,
+          st.getModificationTime, st.getPath) {
+        override def getPermission: FsPermission =
+          if (new java.io.File(getPath.toUri.getPath).exists())
+            super.getPermission
+          else throw new RuntimeException(s"ls: cannot access $getPath")
+      })
+    sts.filter(st => st.isDirectory && st.getPath.getName == "_temporary")
+      .foreach(st => org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(st.getPath.toUri.getPath)))
+    sts
   }
 }
