@@ -279,12 +279,13 @@ object ManifestStore {
   }
 
   /** Highest version number this JVM has observed per store path. A
-    * version listing that REGRESSES (new latest < prior max) means the
-    * store was deleted and recreated at the same path — version
-    * numbers restart at 1, so every (path, version)-keyed memo in the
-    * process now addresses the DEAD store's metadata and must be
-    * purged before the new store's identical version numbers can be
-    * served stale manifests, level states, or user credentials.
+    * version listing that REGRESSES (new latest < prior max, confirmed
+    * by a fresh listing) means the store was deleted and recreated at
+    * the same path — version numbers restart at 1, so every
+    * (path, version)-keyed memo in the process now addresses the DEAD
+    * store's metadata and must be purged before the new store's
+    * identical version numbers can be served stale manifests, level
+    * states, or user credentials.
     */
   private val maxSeenVersion =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -299,17 +300,36 @@ object ManifestStore {
   private[archive] def onVersionRegression(purge: String => Unit): Unit =
     regressionPurgers.add(purge)
 
-  private def noteObservedVersion(path: String, v: Long): Unit = {
-    val prev = maxSeenVersion.put(path, v)
-    if (prev != null && v < prev.longValue()) {
-      assembledMemo.keySet.removeIf(_._1 == path)
-      regressionPurgers.forEach(p => p(path))
+  /** Record the latest version a listing of `path` showed. A listing
+    * below the max seen is either STALE (it began before a commit that
+    * a concurrent reader's listing already returned — routine under
+    * concurrent serving and ingest) or a real regression. Only a fresh
+    * listing, begun after the max was recorded, tells them apart: the
+    * purge runs only when it confirms the regression, and the recorded
+    * max never moves down otherwise.
+    */
+  private[graft] def noteObservedVersion(f: FileSystem, path: String,
+                                        v: Long): Unit = {
+    val prev = maxSeenVersion.merge(path, v, (a, b) => math.max(a, b))
+    if (v < prev) {
+      val now = versionsIn(f, path).lastOption.getOrElse(0L)
+      // one purge per regression: a concurrent confirmer loses the CAS
+      if (now < prev && maxSeenVersion.replace(path, prev, now)) {
+        assembledMemo.keySet.removeIf(_._1 == path)
+        regressionPurgers.forEach(p => p(path))
+      }
     }
   }
 
   /** All committed version numbers, ascending. Foreign files in the
     * manifest dir (backups, editor copies) are ignored, not fatal. */
   private def listVersions(f: FileSystem, path: String): Seq[Long] = {
+    val vs = versionsIn(f, path)
+    vs.lastOption.foreach(noteObservedVersion(f, path, _))
+    vs
+  }
+
+  private def versionsIn(f: FileSystem, path: String): Seq[Long] = {
     val dir = new Path(manifestDir(path))
     if (!f.exists(dir)) return Nil
     f.listStatus(dir).map(_.getPath.getName).toSeq
@@ -317,11 +337,7 @@ object ManifestStore {
         if (n.startsWith("v") && n.endsWith(".json"))
           n.stripPrefix("v").stripSuffix(".json").toLongOption
         else None
-      }.sorted match {
-      case vs =>
-        vs.lastOption.foreach(noteObservedVersion(path, _))
-        vs
-    }
+      }.sorted
   }
 
   /** The latest committed manifest, or None for an empty/new store.

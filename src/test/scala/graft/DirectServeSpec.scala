@@ -20,7 +20,8 @@ import graft.archive.{ArchiveReader, ChannelConfig, ChannelDisabledException,
   * decline so the engine path answers. The process-wide decoded-rows
   * cache must never change an answer: not across commits, compaction,
   * vacuum or a store recreated at the same path, and not whether a
-  * request falls back.
+  * request falls back; a stale concurrent version listing must not
+  * purge it.
   */
 class DirectServeSpec extends AnyFunSuite {
 
@@ -246,6 +247,15 @@ class DirectServeSpec extends AnyFunSuite {
     assert(check() == first)
     assert(DecodedRowCache.decodedGroups.get == before,
       "a repeated request over an unchanged file set decoded row groups")
+    // a concurrent reader's listing that began before that commit
+    // reports the older version: stale, not a store recreate, so the
+    // cache survives it
+    ManifestStore.noteObservedVersion(
+      new org.apache.hadoop.fs.Path(store).getFileSystem(
+        spark.sparkContext.hadoopConfiguration), store, m.version)
+    assert(check() == first)
+    assert(DecodedRowCache.decodedGroups.get == before,
+      "a stale version listing purged the decoded-rows cache")
 
     // new rows in a second file of the same day
     ConfiguredArchive.ingestRaw(spark, cfgDir, store,
