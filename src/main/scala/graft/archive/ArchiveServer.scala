@@ -57,8 +57,8 @@ object ArchiveServer {
         // per-request serving load this job is pure repeated work as
         // long as nothing committed — and any commit/compaction/
         // retention bumps the version, so the memo can never serve
-        // stale availability. The version check itself is one
-        // driver-side directory LIST, no Spark job.
+        // stale availability. The version check itself is a
+        // driver-side probe of the manifest log head, no Spark job.
         // the backend is part of the key: two StoreBackend
         // implementations defining metaVersion over the same path must
         // not cross-serve each other's cached level states
@@ -78,8 +78,8 @@ object ArchiveServer {
     (StoreBackend, String, Long, String), Seq[LevelState]]()
 
   // purge on store-recreate (version regression): see
-  // ManifestStore.onVersionRegression
-  ManifestStore.onVersionRegression { path =>
+  // VersionLog.onRegression
+  ManifestStore.log.onRegression { path =>
     levelStatesMemo.keySet.removeIf(_._2 == path)
   }
 

@@ -30,7 +30,7 @@ object AtomicClaim {
     // finally, not post-hoc: a transient claim failure (HDFS rename
     // IOException, local AccessDenied) must not orphan the .tmp file —
     // nothing else ever collects it (vacuum only deletes v*.json) and
-    // leaked tmps grow the directory LIST every read pays
+    // leaked tmps grow the directory LIST every commit pays
     try {
       if (f.getScheme == "file") {
         try {

@@ -100,9 +100,7 @@ object ConfigCommands {
 
   private val mapper = new ObjectMapper()
 
-  private def configDir(path: String) = s"$path/_config"
-  private def versionFile(path: String, v: Long) =
-    new Path(configDir(path), f"v$v%012d.json")
+  private val log = new VersionLog("_config")
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -155,104 +153,72 @@ object ConfigCommands {
     ConfigState(root.get("version").asLong(), configs.toSeq, pending.toSeq)
   }
 
-  private def listVersions(f: FileSystem, path: String): Seq[Long] = {
-    val dir = new Path(configDir(path))
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).map(_.getPath.getName).toSeq
-      .flatMap { n =>
-        if (n.startsWith("v") && n.endsWith(".json"))
-          n.stripPrefix("v").stripSuffix(".json").toLongOption
-        else None
-      }.sorted
-  }
-
   /** Parsed states, keyed by (log path, version): a version file is
     * immutable once published (exclusive-create), so a parsed state
     * can never go stale — the serving edge reads the state two or
     * three times per HTTP request, and re-parsing a 1000-channel JSON
     * log per read was measurable against the request latency floor.
-    * The version LIST stays uncached (it is the freshness check).
+    * Freshness comes from [[VersionLog.head]]'s probe of the log; a
+    * log deleted and recreated at the same path restarts its version
+    * numbers, so the regression rule purges that path's entries.
     */
   private val stateMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, Long), ConfigState]()
+  log.onRegression(path => stateMemo.keySet.removeIf(_._1 == path))
+
+  private def stateAt(f: FileSystem, path: String, v: Long): ConfigState = {
+    val key = (path, v)
+    val hit = stateMemo.get(key)
+    if (hit != null) hit
+    else {
+      val st = fromJson(log.read(f, path, v))
+      if (stateMemo.size > 1024) stateMemo.clear()
+      stateMemo.put(key, st)
+      st
+    }
+  }
+
+  private val Empty = ConfigState(0L, Nil, Nil)
 
   /** The latest committed configuration state (empty for a new store). */
   def state(spark: SparkSession, path: String): ConfigState = {
     val f = fs(spark, path)
-    listVersions(f, path).lastOption match {
-      case None => ConfigState(0L, Nil, Nil)
-      case Some(v) =>
-        val key = (path, v)
-        val hit = stateMemo.get(key)
-        if (hit != null) hit
-        else {
-          val in = f.open(versionFile(path, v))
-          val st =
-            try {
-              val out = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-              fromJson(out.toByteArray)
-            } finally in.close()
-          if (stateMemo.size > 1024) stateMemo.clear()
-          stateMemo.put(key, st)
-          st
-        }
-    }
+    log.readHead(f, path)(stateAt(f, path, _)).getOrElse(Empty)
   }
 
-  private def writeExclusive(spark: SparkSession, path: String,
-                             st: ConfigState): Boolean = {
-    val f = fs(spark, path)
-    f.mkdirs(new Path(configDir(path)))
-    val target = versionFile(path, st.version)
-    if (f.exists(target)) return false
-    val tmp = new Path(configDir(path),
-      s".tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-    val out = f.create(tmp, /* overwrite = */ false)
-    try out.write(toJson(st)) finally out.close()
-    AtomicClaim.publish(f, tmp, target)
-  }
-
-  /** Optimistic CAS commit over the config log — `update` re-runs
-    * against the refreshed state on a lost race, so its validations
-    * (exists / pending) hold against what was actually committed.
-    */
   /** Versions kept behind the latest when a commit prunes the log. A
     * version file carries the COMPLETE state (not a delta), so old
     * versions serve no reconstruction purpose — they only grow the
-    * directory LIST that every `state` read pays (measured: a
-    * 1000-commit log put ~15 ms of LIST on every serving request).
-    * The tail protects readers that listed just before the prune.
+    * directory LIST that every commit pays (measured, when reads
+    * listed too: a 1000-commit log put ~15 ms of LIST on every serving
+    * request). The tail protects readers that resolved the head just
+    * before the prune.
     */
   private val KeepVersions = 16
 
+  /** Optimistic CAS commit over the config log — `update` re-runs
+    * against the refreshed state on a lost race, so its validations
+    * (exists / pending) hold against what was actually committed. One
+    * listing per attempt feeds the base state, the claimed version and
+    * the prune.
+    */
   private def commit(spark: SparkSession, path: String)
                     (update: ConfigState => ConfigState): ConfigState = {
+    val f = fs(spark, path)
     var attempts = 0
     while (attempts < 50) {
-      val cur = state(spark, path)
+      val versions = log.list(f, path)
+      val cur = versions.lastOption.fold(Empty)(stateAt(f, path, _))
       val next = update(cur).copy(version = cur.version + 1)
-      if (writeExclusive(spark, path, next)) {
-        pruneLog(spark, path, next.version)
+      if (log.claim(f, path, next.version)(toJson(next))) {
+        versions.filter(_ < next.version - KeepVersions)
+          .foreach(log.delete(f, path, _))
         return next
       }
       attempts += 1
     }
     throw new java.io.IOException(
       s"config commit to $path lost $attempts races — giving up")
-  }
-
-  private def pruneLog(spark: SparkSession, path: String,
-                       latest: Long): Unit = {
-    val f = fs(spark, path)
-    listVersions(f, path)
-      .filter(_ < latest - KeepVersions)
-      .foreach { v =>
-        // best-effort: a lost race or IO hiccup just leaves the file
-        // for the next commit's prune
-        try { f.delete(versionFile(path, v), false); () }
-        catch { case _: java.io.IOException => () }
-      }
   }
 
   private def requireFree(st: ConfigState, name: String): Unit =

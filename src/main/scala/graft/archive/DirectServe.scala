@@ -112,8 +112,8 @@ object DirectServe {
 
   // a store deleted and recreated at the same path restarts version
   // numbering — (path, version) keys would serve the DEAD store's
-  // manifest; ManifestStore detects the regression and purges us
-  ManifestStore.onVersionRegression(invalidateStore)
+  // manifest; the manifest log confirms the regression and purges us
+  ManifestStore.log.onRegression(invalidateStore)
 
   /** Decoded row: (ts, value, sample_id). sample_id participates only
     * as the duplicate-timestamp tiebreak (first arrival = min

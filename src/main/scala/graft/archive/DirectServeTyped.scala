@@ -202,7 +202,8 @@ object DirectServeTyped {
       sorted.foreach { r =>
         if (!any || r.ts != lastTs) { out += r; lastTs = r.ts; any = true }
       }
-      Some(out.iterator.map(jsonOf))
+      val meta = new MetaJson
+      Some(out.iterator.map(jsonOf(_, meta)))
     } catch {
       case _: DirectServe.FallbackException => None
     }
@@ -442,11 +443,44 @@ object DirectServeTyped {
     d.toLong
   }
 
+  /** One response's numeric `metaData` blocks, serialized once per
+    * distinct metadata: a channel's rows almost always share one, and
+    * writing it field by field on every row was about a tenth of the
+    * serving threads' CPU. Keyed by a `java.util.List` so the doubles
+    * compare by bits (`-0.0` and `0.0` print differently).
+    */
+  private final class MetaJson {
+    private val memo = new java.util.HashMap[java.util.List[AnyRef], String]()
+
+    def apply(r: TRow): String = memo.computeIfAbsent(
+      java.util.Arrays.asList[AnyRef](r.metaPrecision, r.metaUnits,
+        r.dLow, r.dHigh, r.wLow, r.wHigh, r.aLow, r.aHigh),
+      _ => render(r))
+
+    private def render(r: TRow): String = {
+      val sw = new StringWriter(160)
+      val g = jsonFactory.createGenerator(sw)
+      g.writeStartObject()
+      g.writeStringField("type", "numeric")
+      g.writeNumberField("precision",
+        if (r.metaPrecision == null) 0 else r.metaPrecision.intValue)
+      g.writeStringField("units", r.metaUnits)
+      def f(n: String, v: java.lang.Double): Unit =
+        if (v != null) g.writeNumberField(n, v.doubleValue)
+      f("displayLow", r.dLow); f("displayHigh", r.dHigh)
+      f("warnLow", r.wLow); f("warnHigh", r.wHigh)
+      f("alarmLow", r.aLow); f("alarmHigh", r.aHigh)
+      g.writeEndObject()
+      g.close()
+      sw.toString
+    }
+  }
+
   /** One JSON v1 typed sample — [[JsonV1.serializeTyped]]'s `to_json`
     * output byte for byte: same field order, same null-field omission,
     * same Jackson number text (this IS the same Jackson core).
     */
-  private def jsonOf(r: TRow): String = {
+  private def jsonOf(r: TRow, meta: MetaJson): String = {
     val sw = new StringWriter(160)
     val g = jsonFactory.createGenerator(sw)
     val marker = r.vtype == "disabled" || r.vtype == "disconnected"
@@ -469,17 +503,8 @@ object DirectServeTyped {
     g.writeStringField("quality", "Original")
 
     def numericMeta(): Unit = if (r.metaUnits != null) {
-      g.writeObjectFieldStart("metaData")
-      g.writeStringField("type", "numeric")
-      g.writeNumberField("precision",
-        if (r.metaPrecision == null) 0 else r.metaPrecision.intValue)
-      g.writeStringField("units", r.metaUnits)
-      def f(n: String, v: java.lang.Double): Unit =
-        if (v != null) g.writeNumberField(n, v.doubleValue)
-      f("displayLow", r.dLow); f("displayHigh", r.dHigh)
-      f("warnLow", r.wLow); f("warnHigh", r.wHigh)
-      f("alarmLow", r.aLow); f("alarmHigh", r.aHigh)
-      g.writeEndObject()
+      g.writeFieldName("metaData")
+      g.writeRawValue(meta(r))
     }
     def longArray(): Unit =
       if (r.value != null) {

@@ -108,7 +108,8 @@ object ManifestStore {
   case class Manifest(version: Long, schemaDdl: String,
                       files: Seq[FileEntry],
                       txns: Map[String, Long] = Map.empty) {
-    def schema: StructType = StructType.fromDDL(schemaDdl)
+    /** Parsed once per manifest — every serve reads it. */
+    lazy val schema: StructType = StructType.fromDDL(schemaDdl)
   }
 
   private val mapper = new ObjectMapper()
@@ -129,9 +130,9 @@ object ManifestStore {
   /** Log files older than this many versions behind the head are
     * auto-deleted when a checkpoint commits (the Delta-Lake
     * log-retention rule): without it the manifest directory LIST —
-    * paid by every read AND every commit's CAS — grows O(commits)
-    * forever (measured: 26 → 80 ms/commit across 5 k commits from the
-    * LIST alone). Time travel reaches back this many versions; beyond
+    * paid by every commit's CAS — grows O(commits) forever (measured,
+    * when reads listed too: 26 → 80 ms/commit across 5 k commits from
+    * the LIST alone). Time travel reaches back this many versions; beyond
     * that is [[vacuum]]'s domain, same contract as production table
     * formats.
     */
@@ -163,9 +164,11 @@ object ManifestStore {
                                        rewriteOnly: Boolean = false)
       extends LogRecord
 
-  private def manifestDir(path: String) = s"$path/_manifests"
-  private def versionFile(path: String, v: Long) =
-    new Path(manifestDir(path), f"v$v%012d.json")
+  /** The manifest version log, `_manifests/v{N}.json`. Serve-side
+    * memos keyed by (store, version) register their purge with its
+    * regression rule ([[VersionLog.onRegression]]).
+    */
+  private[graft] val log = new VersionLog("_manifests")
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -278,81 +281,31 @@ object ManifestStore {
         readEntries(root.get("files")), readTxns(root)), rw)
   }
 
-  /** Highest version number this JVM has observed per store path. A
-    * version listing that REGRESSES (new latest < prior max, confirmed
-    * by a fresh listing) means the store was deleted and recreated at
-    * the same path — version numbers restart at 1, so every
-    * (path, version)-keyed memo in the process now addresses the DEAD
-    * store's metadata and must be purged before the new store's
-    * identical version numbers can be served stale manifests, level
-    * states, or user credentials.
-    */
-  private val maxSeenVersion =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private val regressionPurgers =
-    new java.util.concurrent.CopyOnWriteArrayList[String => Unit]()
-
-  /** Register a purge callback run with the store path whenever a
-    * version regression (store recreate) is observed — DirectServe /
-    * ArchiveServer register their own (path, version)-keyed memos.
-    */
-  private[archive] def onVersionRegression(purge: String => Unit): Unit =
-    regressionPurgers.add(purge)
-
-  /** Record the latest version a listing of `path` showed. A listing
-    * below the max seen is either STALE (it began before a commit that
-    * a concurrent reader's listing already returned — routine under
-    * concurrent serving and ingest) or a real regression. Only a fresh
-    * listing, begun after the max was recorded, tells them apart: the
-    * purge runs only when it confirms the regression, and the recorded
-    * max never moves down otherwise.
-    */
+  /** Record the head a listing of `path` showed — see
+    * [[VersionLog.observe]]. */
   private[graft] def noteObservedVersion(f: FileSystem, path: String,
-                                        v: Long): Unit = {
-    val prev = maxSeenVersion.merge(path, v, (a, b) => math.max(a, b))
-    if (v < prev) {
-      val now = versionsIn(f, path).lastOption.getOrElse(0L)
-      // one purge per regression: a concurrent confirmer loses the CAS
-      if (now < prev && maxSeenVersion.replace(path, prev, now)) {
-        assembledMemo.keySet.removeIf(_._1 == path)
-        regressionPurgers.forEach(p => p(path))
-      }
-    }
-  }
-
-  /** All committed version numbers, ascending. Foreign files in the
-    * manifest dir (backups, editor copies) are ignored, not fatal. */
-  private def listVersions(f: FileSystem, path: String): Seq[Long] = {
-    val vs = versionsIn(f, path)
-    vs.lastOption.foreach(noteObservedVersion(f, path, _))
-    vs
-  }
-
-  private def versionsIn(f: FileSystem, path: String): Seq[Long] = {
-    val dir = new Path(manifestDir(path))
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).map(_.getPath.getName).toSeq
-      .flatMap { n =>
-        if (n.startsWith("v") && n.endsWith(".json"))
-          n.stripPrefix("v").stripSuffix(".json").toLongOption
-        else None
-      }.sorted
-  }
+                                        v: Long): Unit =
+    log.observe(f, path, v)
 
   /** The latest committed manifest, or None for an empty/new store.
-    * One LIST of the (small) manifest directory + one file read.
-    * A trailing version that fails to parse (external interference —
-    * the publish rename itself is atomic) is skipped with a warning
+    * The head comes from [[VersionLog.head]]'s probe (two existence
+    * checks on a quiet store, no directory listing) and its body from
+    * the assembled-manifest memo or one file read. A head that fails to
+    * read (external interference left an unreadable squatter — the
+    * publish itself is atomic — or the head vanished mid-read) falls
+    * back to one listing, and trailing unreadable versions are skipped
     * rather than bricking every read.
     */
   def latestManifest(spark: SparkSession, path: String): Option[Manifest] = {
     val f = fs(spark, path)
-    latestAmong(spark, path, listVersions(f, path))
+    log.head(f, path).flatMap { v =>
+      scala.util.Try(readManifest(spark, path, v)).toOption
+        .orElse(latestAmong(spark, path, log.list(f, path)))
+    }
   }
 
   /** Newest READABLE manifest among a pre-fetched version listing —
-    * shared by readers ([[latestManifest]]) and the commit loop, which
+    * shared by [[latestManifest]]'s fallback and the commit loop, which
     * must base the next version and the base manifest on ONE listing
     * (two listings are a lost-update race). Skips unreadable squatters
     * from the top; throws only when even the oldest version is
@@ -372,12 +325,13 @@ object ManifestStore {
   }
 
   /** Latest committed version NUMBER without reading any manifest body
-    * — one driver-side directory listing. The cheap, monotonic cache
-    * key for memoizing per-store planning metadata across requests on
-    * an unchanged store (any commit/compaction/retention bumps it).
+    * — [[VersionLog.head]]'s probe, two existence checks on a quiet
+    * store. The cheap, monotonic cache key for memoizing per-store
+    * planning metadata across requests on an unchanged store (any
+    * commit/compaction/retention bumps it).
     */
   def latestVersion(spark: SparkSession, path: String): Option[Long] =
-    listVersions(fs(spark, path), path).lastOption
+    log.head(fs(spark, path), path)
 
   /** Assembled manifests memoized per (path, version) — a version
     * file is immutable once published, so the fold can never go
@@ -386,17 +340,11 @@ object ManifestStore {
     */
   private val assembledMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, Long), Manifest]()
+  log.onRegression(path => assembledMemo.keySet.removeIf(_._1 == path))
 
   private def readRecord(spark: SparkSession, path: String,
-                         version: Long): LogRecord = {
-    val f = fs(spark, path)
-    val in = f.open(versionFile(path, version))
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-      fromJson(out.toByteArray)
-    } finally in.close()
-  }
+                         version: Long): LogRecord =
+    fromJson(log.read(fs(spark, path), path, version))
 
   /** The manifest AT `version`: a checkpoint reads directly; a delta
     * folds its parent chain (bounded by [[CheckpointInterval]] — the
@@ -468,29 +416,6 @@ object ManifestStore {
     out
   }
 
-  /** Publish one manifest version: write the full content to a hidden
-    * temp file, then rename into place — readers NEVER observe a
-    * half-written version (rename is atomic on POSIX and HDFS). Returns
-    * true iff this writer won the version; real write failures
-    * (disk-full, permissions) propagate instead of masquerading as
-    * lost races. Exclusivity: HDFS rename refuses an existing target;
-    * the local FS has a µs-scale check-then-rename window (last writer
-    * wins); S3-class stores need a conditional PUT — the standard
-    * log-structured-table caveat.
-    */
-  private def writeExclusive(spark: SparkSession, path: String,
-                             version: Long, rec: LogRecord): Boolean = {
-    val f = fs(spark, path)
-    f.mkdirs(new Path(manifestDir(path)))
-    val target = versionFile(path, version)
-    if (f.exists(target)) return false
-    val tmp = new Path(manifestDir(path),
-      s".tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-    val out = f.create(tmp, /* overwrite = */ false)
-    try out.write(toJson(rec)) finally out.close()
-    AtomicClaim.publish(f, tmp, target)
-  }
-
   /** Optimistic-retry commit: apply `update` to the latest manifest and
     * try to claim the next version; on collision, re-read and re-apply.
     * `update` must be idempotent against a refreshed base (append
@@ -512,7 +437,7 @@ object ManifestStore {
       // by ManifestStoreSpec's 8-thread concurrent-writers race). With
       // a single listing, anything published after it just makes the
       // exclusive claim fail, and the loop re-reads.
-      val versions = listVersions(f, path)
+      val versions = log.list(f, path)
       val cur = latestAmong(spark, path, versions)
         .getOrElse(Manifest(0L, "", Nil))
       val next = update(cur)
@@ -548,18 +473,18 @@ object ManifestStore {
               next.txns, adds, removes, rewriteOnly)
           }
         }
-      if (writeExclusive(spark, path, next.version, rec)) {
+      // exclusive publish: HDFS rename refuses an existing target and
+      // the local FS claims with link(2) (AtomicClaim); S3-class stores
+      // need a conditional PUT — the standard log-structured caveat
+      if (log.claim(f, path, next.version)(toJson(rec))) {
         // Delta-style log retention, paid only at checkpoints: with
         // the new checkpoint published, versions beyond the retention
         // window can no longer be needed by any chain the head
-        // reaches — prune them so the directory LIST stays bounded
+        // reaches — prune them so the commit's listing stays bounded
         if (rec.isInstanceOf[FullRecord] &&
             next.version > LogRetentionVersions) {
           val cutoff = next.version - LogRetentionVersions
-          versions.filter(_ < cutoff).foreach { v =>
-            try { f.delete(versionFile(path, v), false); () }
-            catch { case _: java.io.IOException => () }
-          }
+          versions.filter(_ < cutoff).foreach(log.delete(f, path, _))
         }
         return next
       }
@@ -1200,13 +1125,8 @@ object ManifestStore {
     // says nothing about when it stopped being the latest. The
     // own-mtime check stays as belt-and-braces against clock skew
     // between the commit and the vacuum host.
-    val mdir = new Path(manifestDir(path))
-    val versionMtimes: Seq[(Long, Long)] =
-      if (!f.exists(mdir)) Nil
-      else f.listStatus(mdir).toSeq.flatMap { st =>
-        st.getPath.getName.stripPrefix("v").stripSuffix(".json")
-          .toLongOption.map(_ -> st.getModificationTime)
-      }.sortBy(_._1)
+    val versionMtimes: Seq[(Long, Long)] = log.statuses(f, path)
+      .map { case (v, st) => v -> st.getModificationTime }
     val successorMtime: Map[Long, Long] =
       versionMtimes.zip(versionMtimes.drop(1))
         .map { case ((v, _), (_, nextM)) => v -> nextM }.toMap
@@ -1232,18 +1152,20 @@ object ManifestStore {
       }
     }
     // a streaming sink commits one version per micro-batch — without
-    // this the manifest dir LIST (paid on every read) grows forever.
+    // this the manifest dir LIST (paid on every commit) grows forever.
     // With the delta log, the LATEST version's parent chain must
     // survive (deleting a mid-chain delta would brick assembly), so
-    // the protected set is the chain, not just the head.
+    // the protected set is the chain, not just the head. Only a PREFIX
+    // of the log goes: a gap above a surviving version (a skipped
+    // squatter inside the chain's range, a skewed mtime) would stop
+    // VersionLog.head's probe short of the head.
     val keep = chainVersions(spark, path, m.version)
-    versionMtimes.foreach { case (v, mt) =>
+    versionMtimes.iterator.takeWhile { case (v, mt) =>
       // same in-grace rule as the data pass: a version a reader may
       // still be draining keeps its manifest file too (time travel to
       // it must outlive its data files, not the other way around)
-      if (v < m.version && !keep.contains(v) && !inGrace(v, mt))
-        f.delete(versionFile(path, v), false)
-    }
+      v < m.version && !keep.contains(v) && !inGrace(v, mt)
+    }.foreach { case (v, _) => log.delete(f, path, v) }
     deleted.toSeq
   }
 }

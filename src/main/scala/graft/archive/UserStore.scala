@@ -24,8 +24,9 @@ import org.apache.spark.sql.SparkSession
   * equivalent — no new dependency). Verification is constant-time on
   * the derived key. A small per-process cache memoizes SUCCESSFUL
   * verifications per (user, password digest, store version) so the
-  * per-request cost is one directory LIST, not a key derivation —
-  * any committed change bumps the version and invalidates it.
+  * per-request cost is a probe of the log head (two existence
+  * checks), not a key derivation — any committed change bumps the
+  * version and invalidates it.
   *
   * Roles match the reference's two-tier model: `archive-admin` may
   * read and mutate; `archive-user` is read-only on the admin surface
@@ -56,9 +57,7 @@ object UserStore {
   val Iterations = 20000
 
   private val mapper = new ObjectMapper()
-  private def userDir(path: String) = s"$path/_users"
-  private def versionFile(path: String, v: Long) =
-    new Path(userDir(path), f"v$v%012d.json")
+  private val log = new VersionLog("_users")
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -119,89 +118,45 @@ object UserStore {
     UserState(root.get("version").asLong(), users.toSeq)
   }
 
-  private def listVersions(f: FileSystem, path: String): Seq[Long] = {
-    val dir = new Path(userDir(path))
-    if (!f.exists(dir)) return Nil
-    val vs = f.listStatus(dir).map(_.getPath.getName).toSeq
-      .flatMap { n =>
-        if (n.startsWith("v") && n.endsWith(".json"))
-          n.stripPrefix("v").stripSuffix(".json").toLongOption
-        else None
-      }.sorted
-    vs.lastOption.foreach(noteObservedVersion(path, _))
-    vs
-  }
+  private val stateMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long), UserState]()
 
-  // a user store deleted and recreated at the same path restarts
-  // version numbering — without a purge, (path, version) memo keys
-  // would keep serving the DEAD store's credentials
-  private val maxSeenVersion =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def noteObservedVersion(path: String, v: Long): Unit = {
-    val prev = maxSeenVersion.put(path, v)
-    if (prev != null && v < prev.longValue()) {
-      stateMemo.keySet.removeIf(_._1 == path)
-      verifiedMemo.keySet.removeIf(_._1 == path)
+  private def stateAt(f: FileSystem, path: String, v: Long): UserState = {
+    val key = (path, v)
+    val hit = stateMemo.get(key)
+    if (hit != null) hit
+    else {
+      val st = fromJson(log.read(f, path, v))
+      if (stateMemo.size > 256) stateMemo.clear()
+      stateMemo.put(key, st)
+      st
     }
   }
 
-  private val stateMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), UserState]()
+  private val Empty = UserState(0L, Nil)
 
   /** Latest committed user set. A log with no versions is EMPTY — the
     * caller decides whether to seed (see [[ensureSeeded]]). */
   def state(spark: SparkSession, path: String): UserState = {
     val f = fs(spark, path)
-    listVersions(f, path).lastOption match {
-      case None => UserState(0L, Nil)
-      case Some(v) =>
-        val key = (path, v)
-        val hit = stateMemo.get(key)
-        if (hit != null) hit
-        else {
-          val in = f.open(versionFile(path, v))
-          val st =
-            try {
-              val out = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-              fromJson(out.toByteArray)
-            } finally in.close()
-          if (stateMemo.size > 256) stateMemo.clear()
-          stateMemo.put(key, st)
-          st
-        }
-    }
-  }
-
-  private def writeExclusive(spark: SparkSession, path: String,
-                             st: UserState): Boolean = {
-    val f = fs(spark, path)
-    f.mkdirs(new Path(userDir(path)))
-    val target = versionFile(path, st.version)
-    if (f.exists(target)) return false
-    val tmp = new Path(userDir(path),
-      s".tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-    val out = f.create(tmp, /* overwrite = */ false)
-    try out.write(toJson(st)) finally out.close()
-    AtomicClaim.publish(f, tmp, target)
+    log.readHead(f, path)(stateAt(f, path, _)).getOrElse(Empty)
   }
 
   private val KeepVersions = 16
 
   private def commit(spark: SparkSession, path: String)
                     (update: UserState => UserState): UserState = {
+    val f = fs(spark, path)
     var attempts = 0
     while (attempts < 50) {
-      val cur = state(spark, path)
+      // one listing feeds the base state, the claimed version and the
+      // prune (ConfigCommands.commit's protocol)
+      val versions = log.list(f, path)
+      val cur = versions.lastOption.fold(Empty)(stateAt(f, path, _))
       val next = update(cur).copy(version = cur.version + 1)
-      if (writeExclusive(spark, path, next)) {
-        val f = fs(spark, path)
-        listVersions(f, path).filter(_ < next.version - KeepVersions)
-          .foreach { v =>
-            try { f.delete(versionFile(path, v), false); () }
-            catch { case _: java.io.IOException => () }
-          }
+      if (log.claim(f, path, next.version)(toJson(next))) {
+        versions.filter(_ < next.version - KeepVersions)
+          .foreach(log.delete(f, path, _))
         return next
       }
       attempts += 1
@@ -274,7 +229,7 @@ object UserStore {
     * alone.
     */
   def ensureSeeded(spark: SparkSession, path: String): Unit = {
-    if (listVersions(fs(spark, path), path).isEmpty) {
+    if (log.head(fs(spark, path), path).isEmpty) {
       try { addUser(spark, path, "admin", "admin", Set(AdminRole)); () }
       catch {
         // lost the seeding race to a concurrent server: fine
@@ -286,7 +241,7 @@ object UserStore {
   // ---- per-request authentication -----------------------------------
 
   /** Successful verifications memoized per (user, password HMAC, store
-    * version): the steady-state per-request cost is the version LIST,
+    * version): the steady-state per-request cost is the head probe,
     * not a KDF run; any commit bumps the version and the stale entry
     * stops being addressable (entries for superseded versions are also
     * actively evicted). Failures are NOT cached (an attacker probing
@@ -298,6 +253,14 @@ object UserStore {
     */
   private val verifiedMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, String, String, Long), User]()
+
+  // a user store deleted and recreated at the same path restarts
+  // version numbering — without a purge, (path, version) memo keys
+  // would keep serving the DEAD store's credentials
+  log.onRegression { path =>
+    stateMemo.keySet.removeIf(_._1 == path)
+    verifiedMemo.keySet.removeIf(_._1 == path)
+  }
 
   private val memoHmacKey: javax.crypto.spec.SecretKeySpec = {
     val k = new Array[Byte](32)
