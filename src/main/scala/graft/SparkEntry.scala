@@ -247,9 +247,10 @@ object SparkEntry {
 
   /** Immutable store fixtures, built ONCE per (tag, dir) and read-only
     * thereafter — no per-invocation copy. For gates whose measured
-    * operator is a READ: the store construction is setup (IngestBench
-    * owns write-path timing), and memoizing it keeps the bench reading
-    * on the pruned read instead of an in-query ingest job (the r10
+    * operator is a READ: the store construction is setup (archbench's
+    * `serve_during_ingest` times the write path), and memoizing it
+    * keeps the bench reading on the pruned read instead of an in-query
+    * ingest job (the r10
     * verdict's banded `arch_manifest_scan`: 11.3 s with the in-query
     * commit vs 2.3 s without — both mostly write I/O, neither the scan).
     */
@@ -432,8 +433,8 @@ object SparkEntry {
 
     // The same range scan served through the manifest-committed store:
     // raw samples committed into a transaction-logged table (ONCE per
-    // dir — the store is immutable after the commit; IngestBench owns
-    // write-path timing), read back the clip — gates the
+    // dir — the store is immutable after the commit; archbench's
+    // serve_during_ingest times the write path), read back the clip — gates the
     // stats/prune/read path against the arch_range_scan oracle
     // (identical output bytes required). The measured operator is the
     // manifest-pruned read.
@@ -1936,16 +1937,16 @@ object SparkEntry {
 
     // incremental catch-up under the oracle: build the 1h level on the
     // first slice of history (ts ≤ CUT), append the remainder raw, run
-    // the watermark-resumed catch-up — the extended level must serve
+    // the frontier-resumed catch-up — the extended level must serve
     // the EXACT bytes of decimating the whole corpus in one pass (the
     // arch_decimate_1h oracle). CascadeSpec pins incremental ≡
     // from-scratch at 1e-9; this gate pins it hash-exact against
-    // DuckDB, so a watermark-resume bug (clipped look-back, re-emitted
+    // DuckDB, so a frontier-resume bug (clipped look-back, re-emitted
     // held window, dropped boundary window) reds a hash
     "arch_incremental_catchup" -> ((s, dir) => {
       // the pre-catch-up state (first-slice build + raw append) is
       // setup — built once, copied per invocation; the measured
-      // operator is the watermark-resumed catch-up + the read
+      // operator is the frontier-resumed catch-up + the read
       val store = mutableStoreFixture("inccat", dir) { p =>
         val m = marked(s, dir)
         graft.archive.Cascade.materialize(s, p,
@@ -1965,7 +1966,7 @@ object SparkEntry {
 
     // BACKFILL repair — catch-up's missing half: a two-day slice of
     // history lands BEHIND every channel's frontier (the EPICS
-    // migration shape), so watermark-resumed catch-up would never see
+    // migration shape), so frontier-resumed catch-up would never see
     // it; repairRange recomputes exactly the affected 1h windows and
     // swaps them atomically. The repaired store must serve the SAME
     // bytes as a from-scratch decimation of the complete history —
@@ -3191,7 +3192,7 @@ object SparkEntry {
       ("stream_decimate_typed" -> base("arch_decimate_typed21_onepass")) +
       // the streaming exact cascade hop serves the batch reagg bytes
       ("stream_reagg_6h" -> base("arch_reagg_6h")) +
-      // watermark-resumed incremental catch-up serves the bytes of
+      // frontier-resumed incremental catch-up serves the bytes of
       // one-pass decimation over the whole corpus
       ("arch_incremental_catchup" -> base("arch_decimate_1h")) +
       // live keyed-state gap detection serves the batch lag bytes

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Samples
+import ManifestStore.Frontier
 
 /** A8 — the cascaded decimation DAG, batch form: materialize a chain
   * of decimation levels into the store, each level reading from the
@@ -49,96 +50,92 @@ object Cascade {
       Decimation.reAggregateFlushed(asDecimated(source),
         sourceSec * Samples.NS, targetSec * Samples.NS)
 
-  /** Per-(channel, level) resume state — the reference's persisted
+  /** Per-channel [[ManifestStore.Frontier]] of `source` rows for a
+    * `targetSec` level — the reference's persisted
     * `lastSampleTimeStamp`
-    * (ArchivedChannelDecimatedSamplesDecimationLevel.java:406-435):
+    * (ArchivedChannelDecimatedSamplesDecimationLevel.java:406-435),
+    * collected to the driver (one row per channel):
     *
-    *  - `last_src_ts`: newest consumed source ts (raw) / fine window
+    *  - `lastSrcTs`: newest consumed source ts (raw) / fine window
     *    start (coarse) — the flush frontier: windows ending at-or-
     *    before it were written and are immutable;
-    *  - `resume_ts`: where an incremental run must START reading so
+    *  - `resumeTs`: where an incremental run must START reading so
     *    the first unflushed window sees both its already-arrived
     *    in-window samples and its held boundary sample. Raw: the last
     *    sample before the frontier window's start (hold-last-value can
     *    reach arbitrarily far back across gaps — this is why the
-    *    resume point must be persisted rather than derived). Coarse:
+    *    resume point must be stored rather than derived). Coarse:
     *    frontier − targetPeriod (fine rows are points; no hold).
+    *
+    * The frontier commits in the same manifest version as the level's
+    * windows ([[ManifestStore.commitLevel]]), so no state exists where
+    * one is visible without the other.
     */
-  private def watermarkPath(storePath: String, levelSec: Long) =
-    s"$storePath/_watermarks/level_$levelSec"
-
-  /** The watermark frame for `source` rows: per-channel frontier and
-    * resume point (see [[watermarkPath]] docs above).
-    */
-  private def computeWatermarks(source: DataFrame, targetSec: Long,
-                                sourceSec: Long,
-                                heldSource: Boolean): DataFrame = {
+  private def computeFrontier(source: DataFrame, targetSec: Long,
+                              sourceSec: Long, heldSource: Boolean)
+      : Map[String, Frontier] = {
     val targetP = targetSec * Samples.NS
     val last = source.groupBy("channel")
       .agg(max(col("ts")).as("last_src_ts"))
-    if (sourceSec == 0L || heldSource) {
-      val w0 = Samples.windowStart(col("last_src_ts"), targetP)
-      val held = source
-        .join(broadcast(last.select(col("channel").as("_c"),
-          col("last_src_ts"))), col("channel") === col("_c"))
-        .where(col("ts") < Samples.windowStart(col("last_src_ts"), targetP))
-        .groupBy("channel").agg(max(col("ts")).as("_held_ts"))
-      last.join(held, Seq("channel"), "left")
-        .select(col("channel"), col("last_src_ts"),
-          coalesce(col("_held_ts"), w0).as("resume_ts"))
-    } else
-      last.select(col("channel"), col("last_src_ts"),
-        (col("last_src_ts") - targetP).as("resume_ts"))
+    val frame =
+      if (sourceSec == 0L || heldSource) {
+        val w0 = Samples.windowStart(col("last_src_ts"), targetP)
+        val held = source
+          .join(broadcast(last.select(col("channel").as("_c"),
+            col("last_src_ts"))), col("channel") === col("_c"))
+          .where(col("ts") < Samples.windowStart(col("last_src_ts"), targetP))
+          .groupBy("channel").agg(max(col("ts")).as("_held_ts"))
+        last.join(held, Seq("channel"), "left")
+          .select(col("channel"), col("last_src_ts"),
+            coalesce(col("_held_ts"), w0).as("resume_ts"))
+      } else
+        last.select(col("channel"), col("last_src_ts"),
+          (col("last_src_ts") - targetP).as("resume_ts"))
+    frame.collect()
+      .map(r => r.getString(0) -> Frontier(r.getLong(1), r.getLong(2)))
+      .toMap
   }
 
-  /** Crash-safe watermark persist: write to a temp dir, then a
-    * two-rename swap (live→trash, tmp→live, drop trash) — a torn
-    * parquet overwrite would otherwise leave the level with no (or
-    * partial) watermarks, after which every channel reads as "new" and
-    * the next catch-up re-appends full history. [[readWatermarks]]
-    * recovers the trash copy if a crash hit between the renames.
+  /** The manifest store a level commits into; the plain parquet store
+    * has no log to hold a frontier, so catch-up refuses it. */
+  private def levelStore(backend: StoreBackend, storePath: String): String = {
+    val store = backend.levelStore(storePath)
+    require(store.isDefined, "catch-up and materializeLevel need a " +
+      "manifest-backed store: a level's frontier commits with its files")
+    store.get
+  }
+
+  /** The level's frontier at the latest manifest of `store`. A level
+    * with data files but no frontier was written before frontiers
+    * committed with the level; it is refused, because resuming it
+    * without one would re-append its full history.
     */
-  private def persistWatermarks(wm: DataFrame, storePath: String,
-                                targetSec: Long): Unit = {
-    val live = watermarkPath(storePath, targetSec)
-    val tmp = live + "._tmp"
-    val trash = live + "._trash"
-    wm.coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(live).getFileSystem(
-      wm.sparkSession.sparkContext.hadoopConfiguration)
-    def P(p: String) = new org.apache.hadoop.fs.Path(p)
-    fs.delete(P(trash), true)
-    if (fs.exists(P(live)) && !fs.rename(P(live), P(trash)))
-      throw new java.io.IOException(s"cannot move $live aside")
-    if (!fs.rename(P(tmp), P(live))) {
-      fs.rename(P(trash), P(live))
-      throw new java.io.IOException(s"cannot promote $tmp")
+  private def storedFrontier(spark: SparkSession, store: String,
+                             levelSec: Long): Option[Map[String, Frontier]] = {
+    val m = ManifestStore.latestManifest(spark, store)
+    val fr = m.flatMap(_.frontiers.get(levelSec))
+    if (fr.isEmpty && m.exists(_.files.exists(_.levelSec == levelSec)))
+      throw new IllegalStateException(s"level $levelSec has data files " +
+        "but no frontier in the manifest (written before frontiers " +
+        "committed with the level); rebuild it into a fresh store")
+    fr
+  }
+
+  /** One full-history level write: on a manifest-backed store the
+    * windows and the frontier of `src` commit as one version (applied
+    * only while the level has no frontier); the plain store just
+    * writes the windows.
+    */
+  private def buildLevel(backend: StoreBackend, storePath: String,
+                         targetSec: Long, rows: DataFrame, src: DataFrame,
+                         sourceSec: Long, heldSource: Boolean): Unit =
+    backend.levelStore(storePath) match {
+      case Some(store) =>
+        ManifestStore.commitLevel(rows, store, targetSec, from = None,
+          computeFrontier(src, targetSec, sourceSec, heldSource))
+        ()
+      case None => backend.write(rows, storePath, targetSec)
     }
-    fs.delete(P(trash), true)
-  }
-
-  private def readWatermarks(spark: SparkSession,
-                             storePath: String, targetSec: Long): DataFrame = {
-    val live = watermarkPath(storePath, targetSec)
-    val trash = live + "._trash"
-    val fs = new org.apache.hadoop.fs.Path(live).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def P(p: String) = new org.apache.hadoop.fs.Path(p)
-    // crash between the two renames: the old state is intact in trash
-    if (!fs.exists(P(live)) && fs.exists(P(trash)))
-      fs.rename(P(trash), P(live))
-    spark.read.parquet(live)
-  }
-
-  private def writeWatermarks(spark: SparkSession, storePath: String,
-                              targetSec: Long, source: DataFrame,
-                              sourceSec: Long,
-                              heldSource: Boolean = false): Unit =
-    persistWatermarks(
-      computeWatermarks(source, targetSec, sourceSec, heldSource),
-      storePath, targetSec)
 
   /** Write-triggered retention, the reference's rule: after every
     * successful write to a level, delete its buckets that fell past
@@ -159,9 +156,11 @@ object Cascade {
     }
 
   /** Write raw samples and materialize every level in `levelsSec`
-    * (ascending), cascading from the best available source; persists
-    * the per-channel resume watermark per level for [[catchUp]].
-    * Each successful level write triggers that level's retention.
+    * (ascending), cascading from the best available source. On a
+    * manifest-backed store each level commits with its frontier, so
+    * [[catchUp]] can extend it; on the plain store this is a one-shot
+    * build. Each successful level write triggers that level's
+    * retention.
     */
   def materialize(spark: SparkSession, storePath: String,
                   raw: DataFrame, levelsSec: Seq[Long],
@@ -173,26 +172,24 @@ object Cascade {
     for (target <- levelsSec.sorted) {
       val source = Decimation.selectSourcePeriod(target, done)
       val src = backend.read(spark, storePath, source)
-      backend.write(asStoreRows(hop(src, source, target)),
-        storePath, target)
-      writeWatermarks(spark, storePath, target, src, source)
+      buildLevel(backend, storePath, target,
+        asStoreRows(hop(src, source, target)), src, source,
+        heldSource = false)
       retainAfterWrite(spark, storePath, target, retentionSec, backend)
       done ::= target
     }
   }
 
-  /** Whether a level has its resume watermarks (i.e. has been built at
-    * least once) — [[ConfiguredArchive.catchUp]] uses this to route a
-    * config-added level to its first full build instead of an
-    * incremental run that would have nothing to resume from.
+  /** Whether a level has been built at least once: its frontier is in
+    * the latest manifest (memoized per version) —
+    * [[ConfiguredArchive.catchUp]] uses this to route a config-added
+    * level to its first full build instead of an incremental run that
+    * would have nothing to resume from.
     */
-  def hasWatermarks(spark: SparkSession, storePath: String,
-                    levelSec: Long): Boolean = {
-    val live = new org.apache.hadoop.fs.Path(watermarkPath(storePath, levelSec))
-    val f = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.exists(live) || f.exists(new org.apache.hadoop.fs.Path(
-      watermarkPath(storePath, levelSec) + "._trash"))
-  }
+  def hasFrontier(spark: SparkSession, storePath: String,
+                  levelSec: Long): Boolean =
+    ManifestStore.latestManifest(spark, storePath)
+      .exists(_.frontiers.contains(levelSec))
 
   /** Backfill repair — incremental catch-up's missing half: catch-up
     * extends each channel's FRONTIER, but source data landed BEHIND it
@@ -205,8 +202,8 @@ object Cascade {
     * extended to whole day buckets so the swap is a lossless
     * WHOLE-DAY file replacement ([[ManifestStore.replaceRange]], one
     * atomic commit — windows in the edge days outside the repair range
-    * recompute to identical values). Watermarks are untouched (the
-    * frontier did not move); data past the frontier stays [[catchUp]]'s
+    * recompute to identical values). Frontiers are untouched (they did
+    * not move); data past the frontier stays [[catchUp]]'s
     * job. Repair levels fine-to-coarse so each coarser hop reads the
     * repaired finer level — [[ConfiguredArchive.repairBackfill]] drives
     * that order. Scalar stores; requires a manifest-backed store (the
@@ -292,21 +289,24 @@ object Cascade {
   /** Build ONE level from the best available source over FULL history
     * — the [[materialize]] loop body as a standalone call, for levels
     * a configuration change adds to an already-materialized store.
+    * Needs a manifest-backed store; a level that already has a
+    * frontier is left alone (its build committed, possibly by a racing
+    * run — [[catchUp]] extends it).
     */
   def materializeLevel(spark: SparkSession, storePath: String,
                        targetSec: Long,
-                       backend: StoreBackend = ArchiveBackend,
+                       backend: StoreBackend = ManifestBackend,
                        retentionSec: Map[Long, Long] = Map.empty): Unit =
     materializeLevelImpl(spark, storePath, targetSec, hop, asStoreRows,
       heldSource = false, backend, retentionSec)
 
   /** [[materializeLevel]] for typed-union stores: one config-added
     * level built from the best available source over full history,
-    * typed dispatch in the hop, held-boundary watermarks.
+    * typed dispatch in the hop, held-boundary frontiers.
     */
   def materializeTypedLevel(spark: SparkSession, storePath: String,
                             targetSec: Long,
-                            backend: StoreBackend = ArchiveBackend,
+                            backend: StoreBackend = ManifestBackend,
                             retentionSec: Map[Long, Long] = Map.empty): Unit =
     materializeLevelImpl(spark, storePath, targetSec, typedHop,
       asTypedStoreRows, heldSource = true, backend, retentionSec)
@@ -318,6 +318,8 @@ object Cascade {
                                    heldSource: Boolean,
                                    backend: StoreBackend,
                                    retentionSec: Map[Long, Long]): Unit = {
+    if (storedFrontier(spark, levelStore(backend, storePath), targetSec)
+        .isDefined) return
     val done = backend.levels(spark, storePath).filter(_ != targetSec)
     val source = Decimation.selectSourcePeriod(targetSec, done)
     val src0 = backend.read(spark, storePath, source)
@@ -326,46 +328,9 @@ object Cascade {
     // the F6-deduplicated view — same rule as catchUpImpl's suffix
     val src =
       if (source == 0L) Samples.monotonicDedup(src0) else src0
-    val wmDf = computeWatermarks(src, targetSec, source, heldSource)
-    val wmRows = wmDf.collect()
-    // crash-safety, mirroring catchUp: the token hashes the post-build
-    // watermark state, so a re-run after a crash between this write
-    // and the watermark persist recomputes the identical full-history
-    // state and token and the duplicate append is skipped on a
-    // transactional backend (plain store keeps its documented
-    // at-least-once behavior)
-    backend.writeTxn(toStore(hopFn(src, source, targetSec)),
-      storePath, targetSec, writerId = s"build:$targetSec",
-      token = stateToken(wmRows.toSeq))
-    import scala.jdk.CollectionConverters._
-    persistWatermarks(
-      spark.createDataFrame(wmRows.toSeq.asJava, wmDf.schema),
-      storePath, targetSec)
+    buildLevel(backend, storePath, targetSec,
+      toStore(hopFn(src, source, targetSec)), src, source, heldSource)
     retainAfterWrite(spark, storePath, targetSec, retentionSec, backend)
-  }
-
-  /** Collision-resistant 64-bit token of a watermark state: SHA-256
-    * over a length-prefixed injective serialization of the
-    * (channel, last_src_ts, resume_ts) rows — see the encoding notes
-    * at the catch-up call site.
-    */
-  private def stateToken(rows: Seq[org.apache.spark.sql.Row]): Long = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    rows.sortBy(_.getAs[String]("channel")).foreach { r =>
-      def field(i: Int): String =
-        if (r.isNullAt(i)) "null" else r.getLong(i).toString
-      // Length-prefixed fields: any in-band separator (even NUL) can
-      // in principle be forged by a channel NAME containing it, making
-      // two distinct states serialize identically; the prefix makes
-      // the encoding injective with no reserved characters.
-      val name = r.getAs[String]("channel").getBytes("UTF-8")
-      md.update((name.length.toString + ":").getBytes("UTF-8"))
-      md.update(name)
-      Seq(field(1), field(2)).foreach { f =>
-        md.update((f.length.toString + ":" + f).getBytes("UTF-8"))
-      }
-    }
-    java.nio.ByteBuffer.wrap(md.digest()).getLong
   }
 
   /** Typed cascade materialization: raw typed samples and every
@@ -387,12 +352,11 @@ object Cascade {
     for (target <- levelsSec.sorted) {
       val source = Decimation.selectSourcePeriod(target, done)
       val src = backend.read(spark, storePath, source)
-      backend.write(asTypedStoreRows(typedHop(src, source, target)),
-        storePath, target)
       // typed samples hold-last-value at EVERY level (the fine
       // aggregated sample is held until the next fine sample), so the
-      // resume watermark always needs the held-boundary logic
-      writeWatermarks(spark, storePath, target, src, source,
+      // frontier always needs the held-boundary logic
+      buildLevel(backend, storePath, target,
+        asTypedStoreRows(typedHop(src, source, target)), src, source,
         heldSource = true)
       retainAfterWrite(spark, storePath, target, retentionSec, backend)
       done ::= target
@@ -408,17 +372,25 @@ object Cascade {
 
   /** §3.3 incremental catch-up: extend one materialized level over
     * source data that arrived since the last run. Reads only source
-    * rows at-or-after each channel's `resume_ts` (the global minimum
+    * rows at-or-after each channel's `resumeTs` (the global minimum
     * prunes day partitions; the per-channel bound rides a broadcast
     * join), re-decimates that suffix — identical window stats to a
     * from-scratch build because the resume point preserves the held
     * boundary — and appends only windows past the old flush frontier.
-    * Channels with no watermark (new channels) get a full pass, like
+    * Channels with no frontier (new channels) get a full pass, like
     * the reference's no-decimated-sample-yet path
     * (ArchivedChannelDecimatedSamplesDecimationLevel.java:396-401).
+    *
+    * Exactly-once: the new windows and the frontier of the channels
+    * that moved commit as ONE manifest version, applied only while the
+    * level's frontier still equals the one this run started from
+    * ([[ManifestStore.commitLevel]]) — a re-run or a racing run either
+    * starts from the committed frontier or publishes nothing. A run
+    * that moves no frontier commits no version. Needs a manifest-backed
+    * store and a built level ([[materializeLevel]]).
     */
   def catchUp(spark: SparkSession, storePath: String, targetSec: Long,
-              backend: StoreBackend = ArchiveBackend,
+              backend: StoreBackend = ManifestBackend,
               retentionSec: Map[Long, Long] = Map.empty,
               knownChannels: Option[Seq[String]] = None): Unit =
     catchUpImpl(spark, storePath, targetSec, hop, asStoreRows,
@@ -426,11 +398,11 @@ object Cascade {
       knownChannels = knownChannels)
 
   /** [[catchUp]] for typed-union stores built by [[materializeTyped]]:
-    * identical watermark machinery (the resume math is ts-based and
+    * identical frontier machinery (the resume math is ts-based and
     * type-agnostic), typed dispatch in the hop.
     */
   def catchUpTyped(spark: SparkSession, storePath: String, targetSec: Long,
-                   backend: StoreBackend = ArchiveBackend,
+                   backend: StoreBackend = ManifestBackend,
                    retentionSec: Map[Long, Long] = Map.empty,
                    knownChannels: Option[Seq[String]] = None): Unit =
     catchUpImpl(spark, storePath, targetSec, typedHop, asTypedStoreRows,
@@ -451,43 +423,46 @@ object Cascade {
                           hopFn: (DataFrame, Long, Long) => DataFrame,
                           toStore: DataFrame => DataFrame,
                           heldSource: Boolean = false,
-                          backend: StoreBackend = ArchiveBackend,
-                          retentionSec: Map[Long, Long] = Map.empty,
-                          knownChannels: Option[Seq[String]] = None): Unit = {
+                          backend: StoreBackend,
+                          retentionSec: Map[Long, Long],
+                          knownChannels: Option[Seq[String]]): Unit = {
+    val store = levelStore(backend, storePath)
+    val old = storedFrontier(spark, store, targetSec).getOrElse(
+      throw new IllegalStateException(s"level $targetSec has no frontier " +
+        "yet: build it with materializeLevel first"))
     val levels = backend.levels(spark, storePath).filter(_ != targetSec)
     val source = Decimation.selectSourcePeriod(targetSec, levels)
     val targetP = targetSec * Samples.NS
 
-    val wm = readWatermarks(spark, storePath, targetSec)
-    val wmRows = wm.collect()
     val globalMin =
-      if (wmRows.isEmpty) None
-      else Some(wmRows.map(_.getAs[Long]("resume_ts")).min)
-    val bounds = wm.select(col("channel").as("_c"),
-      col("last_src_ts"), col("resume_ts"))
+      if (old.isEmpty) None else Some(old.valuesIterator.map(_.resumeTs).min)
+    val bounds = {
+      import spark.implicits._
+      old.toSeq.map { case (c, f) => (c, f.lastSrcTs, f.resumeTs) }
+        .toDF("_c", "last_src_ts", "resume_ts")
+    }
 
     val clipped = backend.read(spark, storePath, source, globalMin)
       .join(broadcast(bounds), col("channel") === col("_c"), "left")
       .where(col("resume_ts").isNull || col("ts") >= col("resume_ts"))
-    // Channels with no watermark yet (first seen after the last run)
+    // Channels with no frontier yet (first seen after the last run)
     // need their FULL history. Detect them against the source level's
     // channel set — NOT against `clipped`: a new channel whose entire
     // history predates the global clip is absent from the clipped read,
     // and deriving "new" from it would silently skip that history and
-    // then watermark it as processed. `knownChannels` is the registry
+    // then mark it as processed. `knownChannels` is the registry
     // route ([[ConfiguredArchive.catchUp]] passes the configured
     // channel set): a metadata lookup instead of the fallback
     // source-level distinct — which, though column-pruned and
     // dictionary-backed, is still a full-level footer+column pass per
     // cascade hop at 100 TB.
-    val seen = wmRows.map(_.getAs[String]("channel")).toSet
     val newChannels =
       if (globalMin.isEmpty) Array.empty[String]
       else knownChannels match {
-        case Some(cs) => cs.filterNot(seen).toArray
+        case Some(cs) => cs.filterNot(old.contains).toArray
         case None => backend.read(spark, storePath, source)
           .select("channel").distinct()
-          .collect().map(_.getString(0)).filterNot(seen)
+          .collect().map(_.getString(0)).filterNot(old.contains)
       }
     val src =
       if (newChannels.isEmpty || globalMin.isEmpty) clipped
@@ -498,21 +473,18 @@ object Cascade {
 
     // a raw suffix may contain undeduplicated streaming appends (the
     // continuous sink writes arrival order): both the hop AND the
-    // held-boundary watermark must see the F6-deduplicated view, or an
+    // held-boundary frontier must see the F6-deduplicated view, or an
     // out-of-order late arrival pulls resume_ts past the true held
     // sample and the frontier window loses its hold coverage
     val suffixRaw = src.drop("_c", "last_src_ts", "resume_ts")
     // materialize the suffix ONCE (r13, guide §5): it feeds the
-    // watermark stats — which reference it twice (frontier aggregate +
+    // frontier stats — which reference it twice (frontier aggregate +
     // held-boundary pass) — and the decimation write; without
     // truncation the clipped read + bounds join + F6 dedup window
-    // re-ran per consumer (3× per catch-up run). localCheckpoint is
-    // eager, so the one materialization job replaces all three
-    // recomputes, and the token/write exactly-once argument is
-    // unchanged (the token still hashes the same post-run state,
-    // now computed from frozen blocks). The suffix is bounded by data
-    // since the last run — the incremental contract — so the
-    // checkpoint is batch-sized, not corpus-sized.
+    // re-ran per consumer. localCheckpoint is eager, so the one
+    // materialization job replaces the recomputes. The suffix is
+    // bounded by data since the last run — the incremental contract —
+    // so the checkpoint is batch-sized, not corpus-sized.
     val suffix = {
       val s0 =
         if (source == 0L) Samples.monotonicDedup(suffixRaw) else suffixRaw
@@ -524,58 +496,15 @@ object Cascade {
         col("win_start") + targetP > col("last_src_ts"))
       .drop("_c", "last_src_ts", "resume_ts")
 
-    // New watermarks WITHOUT rescanning the full source level: the
+    // The new frontier WITHOUT rescanning the full source level: the
     // suffix starts at each present channel's old resume point, so its
     // per-channel stats (frontier, held boundary) are complete for
-    // every channel it contains; channels with no new data keep their
-    // old row verbatim. Collected BEFORE the write: the commit token
-    // hashes this POST-run state, so an idle run records exactly the
-    // token it would compute again (skipping is correct — nothing to
-    // write), while any run that saw new data produces a different
-    // state and a different token. Hashing the PRE-run state instead
-    // would let an idle run poison the token: the next run WITH data
-    // recomputes the idle run's token, skips its append, yet advances
-    // the watermark — permanent silent loss.
-    val spark2 = suffix.sparkSession
-    import scala.jdk.CollectionConverters._
-    val oldWm = spark2.createDataFrame(wmRows.toSeq.asJava, wm.schema)
-      .select(col("channel").as("_oc"), col("last_src_ts").as("_ol"),
-        col("resume_ts").as("_or"))
-    val suffixWm = computeWatermarks(suffix, targetSec, source, heldSource)
-    val mergedRows = suffixWm
-      .join(oldWm, col("channel") === col("_oc"), "full_outer")
-      .select(
-        coalesce(col("channel"), col("_oc")).as("channel"),
-        coalesce(col("last_src_ts"), col("_ol")).as("last_src_ts"),
-        coalesce(col("resume_ts"), col("_or")).as("resume_ts"))
-      .collect()
-    // collision-resistant token ([[stateToken]]): SHA-256 over a
-    // canonical length-prefixed serialization, truncated to 64 bits.
-    // A 31-multiplier fold had enough structure that two distinct
-    // post-run states could collide, and a collision makes
-    // commitIfChanged silently skip a GENUINE append — permanent
-    // loss in the decimated level. Null watermark fields (never
-    // expected — the merge coalesces two non-null frames) are encoded
-    // explicitly rather than NPE-ing in an unboxing getAs[Long].
-    // MIGRATION CAVEAT: this length-prefixed encoding replaced the
-    // round-3 format, so a token persisted by the OLD format never
-    // matches a new-format recomputation — a crash-replay straddling
-    // that upgrade re-applies its batch once (at-least-once at
-    // migration, exactly-once before and after). Inherent to any
-    // token-encoding change; if the encoding changes again, bump the
-    // writerId (e.g. "catchup2:") so the stale token is simply
-    // superseded rather than compared.
-    val token = stateToken(mergedRows.toSeq)
-    // exactly-once on a transactional backend: a crash-replay between
-    // this write and the watermark persist recomputes the identical
-    // post-run state and token, and the duplicate append is skipped
-    // (the plain-parquet backend has no txn metadata and keeps its
-    // documented at-least-once behavior)
-    backend.writeTxn(toStore(dec), storePath, targetSec,
-      writerId = s"catchup:$targetSec", token = token)
-    persistWatermarks(
-      spark2.createDataFrame(mergedRows.toSeq.asJava, wm.schema),
-      storePath, targetSec)
+    // every channel it contains; channels absent from it keep theirs.
+    val moved = computeFrontier(suffix, targetSec, source, heldSource)
+      .filter { case (c, f) => !old.get(c).contains(f) }
+    if (moved.nonEmpty)
+      ManifestStore.commitLevel(toStore(dec), store, targetSec,
+        from = Some(old), moved)
     retainAfterWrite(spark, storePath, targetSec, retentionSec, backend)
   }
 }

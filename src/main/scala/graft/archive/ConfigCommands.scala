@@ -4,7 +4,6 @@ import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Raised when a command names a channel that already exists. */
@@ -100,11 +99,6 @@ object ConfigCommands {
 
   private val mapper = new ObjectMapper()
 
-  private val log = new VersionLog("_config")
-
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def toJson(st: ConfigState): Array[Byte] = {
     val root: ObjectNode = mapper.createObjectNode()
     root.put("version", st.version)
@@ -153,73 +147,19 @@ object ConfigCommands {
     ConfigState(root.get("version").asLong(), configs.toSeq, pending.toSeq)
   }
 
-  /** Parsed states, keyed by (log path, version): a version file is
-    * immutable once published (exclusive-create), so a parsed state
-    * can never go stale — the serving edge reads the state two or
-    * three times per HTTP request, and re-parsing a 1000-channel JSON
-    * log per read was measurable against the request latency floor.
-    * Freshness comes from [[VersionLog.head]]'s probe of the log; a
-    * log deleted and recreated at the same path restarts its version
-    * numbers, so the regression rule purges that path's entries.
+  /** The config log, `_config/v{N}.json`: every version the complete
+    * state ([[StateLog]]). Its memo matters here — the serving edge
+    * reads the state two or three times per HTTP request, and
+    * re-parsing a 1000-channel JSON log per read was measurable against
+    * the request latency floor.
     */
-  private val stateMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), ConfigState]()
-  log.onRegression(path => stateMemo.keySet.removeIf(_._1 == path))
-
-  private def stateAt(f: FileSystem, path: String, v: Long): ConfigState = {
-    val key = (path, v)
-    val hit = stateMemo.get(key)
-    if (hit != null) hit
-    else {
-      val st = fromJson(log.read(f, path, v))
-      if (stateMemo.size > 1024) stateMemo.clear()
-      stateMemo.put(key, st)
-      st
-    }
-  }
-
-  private val Empty = ConfigState(0L, Nil, Nil)
+  private val log = new StateLog[ConfigState]("_config",
+    ConfigState(0L, Nil, Nil), memoMax = 1024, toJson, fromJson,
+    (st, v) => st.copy(version = v))
 
   /** The latest committed configuration state (empty for a new store). */
-  def state(spark: SparkSession, path: String): ConfigState = {
-    val f = fs(spark, path)
-    log.readHead(f, path)(stateAt(f, path, _)).getOrElse(Empty)
-  }
-
-  /** Versions kept behind the latest when a commit prunes the log. A
-    * version file carries the COMPLETE state (not a delta), so old
-    * versions serve no reconstruction purpose — they only grow the
-    * directory LIST that every commit pays (measured, when reads
-    * listed too: a 1000-commit log put ~15 ms of LIST on every serving
-    * request). The tail protects readers that resolved the head just
-    * before the prune.
-    */
-  private val KeepVersions = 16
-
-  /** Optimistic CAS commit over the config log — `update` re-runs
-    * against the refreshed state on a lost race, so its validations
-    * (exists / pending) hold against what was actually committed. One
-    * listing per attempt feeds the base state, the claimed version and
-    * the prune.
-    */
-  private def commit(spark: SparkSession, path: String)
-                    (update: ConfigState => ConfigState): ConfigState = {
-    val f = fs(spark, path)
-    var attempts = 0
-    while (attempts < 50) {
-      val versions = log.list(f, path)
-      val cur = versions.lastOption.fold(Empty)(stateAt(f, path, _))
-      val next = update(cur).copy(version = cur.version + 1)
-      if (log.claim(f, path, next.version)(toJson(next))) {
-        versions.filter(_ < next.version - KeepVersions)
-          .foreach(log.delete(f, path, _))
-        return next
-      }
-      attempts += 1
-    }
-    throw new java.io.IOException(
-      s"config commit to $path lost $attempts races — giving up")
-  }
+  def state(spark: SparkSession, path: String): ConfigState =
+    log.state(spark, path)
 
   private def requireFree(st: ConfigState, name: String): Unit =
     st.pending.find(_.channel == name).foreach(p =>
@@ -232,7 +172,7 @@ object ConfigCommands {
     */
   def addChannel(spark: SparkSession, path: String,
                  cfg: ChannelConfig): ConfigState =
-    commit(spark, path) { st =>
+    log.commit(spark, path) { st =>
       requireFree(st, cfg.name)
       if (st.config(cfg.name).isDefined)
         throw new ChannelAlreadyExistsException(cfg.name)
@@ -245,7 +185,7 @@ object ConfigCommands {
     */
   def updateChannel(spark: SparkSession, path: String,
                     cfg: ChannelConfig): ConfigState =
-    commit(spark, path) { st =>
+    log.commit(spark, path) { st =>
       requireFree(st, cfg.name)
       val old = st.config(cfg.name)
         .getOrElse(throw new NoSuchChannelException(cfg.name))
@@ -260,7 +200,7 @@ object ConfigCommands {
   /** AddOrUpdateChannelCommand: add when absent, update when present. */
   def addOrUpdateChannel(spark: SparkSession, path: String,
                          cfg: ChannelConfig): ConfigState =
-    commit(spark, path) { st =>
+    log.commit(spark, path) { st =>
       requireFree(st, cfg.name)
       st.config(cfg.name) match {
         case None => st.copy(configs = st.configs :+ normalize(cfg))
@@ -280,7 +220,7 @@ object ConfigCommands {
     */
   def renameChannel(spark: SparkSession, path: String,
                     oldName: String, newName: String): ConfigState =
-    commit(spark, path) { st =>
+    log.commit(spark, path) { st =>
       requireFree(st, oldName); requireFree(st, newName)
       val old = st.config(oldName)
         .getOrElse(throw new NoSuchChannelException(oldName))
@@ -309,7 +249,7 @@ object ConfigCommands {
     */
   def beginRemove(spark: SparkSession, path: String,
                   name: String): ConfigState =
-    commit(spark, path) { st =>
+    log.commit(spark, path) { st =>
       requireFree(st, name)
       if (st.config(name).isEmpty) throw new NoSuchChannelException(name)
       st.copy(pending = st.pending :+
@@ -321,7 +261,7 @@ object ConfigCommands {
                              storePath: Option[String]): ConfigState = {
     storePath.foreach(sp =>
       ManifestStore.removeChannelData(spark, sp, dataId))
-    commit(spark, path) { st =>
+    log.commit(spark, path) { st =>
       st.copy(configs = st.configs.filterNot(_.name == name),
         pending = st.pending.filterNot(p =>
           p.channel == name && p.kind == "remove"))
@@ -345,7 +285,7 @@ object ConfigCommands {
         case other =>
           // unknown kinds only clear their marker (nothing to roll
           // forward — metadata commands are single-commit)
-          commit(spark, path)(s =>
+          log.commit(spark, path)(s =>
             s.copy(pending = s.pending.filterNot(_ == p)))
       }
       p.channel

@@ -205,7 +205,7 @@ object ConfiguredArchive {
     val st = ConfigCommands.state(spark, configPath)
     val known = st.enabledConfigs.map(_.channelDataId)
     for (level <- st.levelsSec) {
-      if (!Cascade.hasWatermarks(spark, storePath, level))
+      if (!Cascade.hasFrontier(spark, storePath, level))
         Cascade.materializeTypedLevel(spark, storePath, level, backend,
           st.retentionSec)
       else
@@ -253,12 +253,14 @@ object ConfiguredArchive {
   }
 
   /** Extend every config-declared level over data that arrived since
-    * the last run. Levels the configuration added since the store was
-    * built get their first full build; existing levels run the
-    * incremental catch-up with the configured channel set as the
-    * new-channel registry (no source-level distinct — the fix for the
-    * full-level metadata pass flagged in round 4) and config-derived
-    * retention after each successful write.
+    * the last run. A level with no frontier in the manifest (one the
+    * configuration added since the store was built) gets its first
+    * full build, committed with its frontier in one version; existing
+    * levels run the incremental catch-up with the configured channel
+    * set as the new-channel registry (no source-level distinct — the
+    * fix for the full-level metadata pass flagged in round 4) and
+    * config-derived retention after each successful write. Two runs
+    * racing over one level commit it once ([[Cascade.catchUp]]).
     */
   def catchUp(spark: SparkSession, configPath: String, storePath: String,
               backend: StoreBackend = ManifestBackend): Unit = {
@@ -268,7 +270,7 @@ object ConfiguredArchive {
     catchUpCalc(spark, st, storePath, backend)
     val known = st.enabledConfigs.map(_.channelDataId)
     for (level <- st.levelsSec) {
-      if (!Cascade.hasWatermarks(spark, storePath, level))
+      if (!Cascade.hasFrontier(spark, storePath, level))
         Cascade.materializeLevel(spark, storePath, level, backend,
           st.retentionSec)
       else

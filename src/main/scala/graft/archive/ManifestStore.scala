@@ -100,14 +100,28 @@ object ManifestStore {
                       ch: String): Boolean =
     chMin.forall(utf8Leq(_, ch)) && chMax.forall(utf8Leq(ch, _))
 
+  /** One channel's resume point in one decimated level — the
+    * reference's persisted `lastSampleTimeStamp`
+    * (ArchivedChannelDecimatedSamplesDecimationLevel.java:406-435):
+    * `lastSrcTs` is the newest source ts (raw) or fine window start
+    * (coarse) the level has consumed, and `resumeTs` is where the next
+    * catch-up starts reading ([[Cascade]] derives both).
+    */
+  case class Frontier(lastSrcTs: Long, resumeTs: Long)
+
   /** `txns` records one long per idempotent writer: the highest applied
     * batch id for in-order streaming sinks ([[commitIdempotent]]), or
     * the last applied input-state token for re-runnable jobs
-    * ([[commitIfChanged]]) — either way a replay is a no-op.
+    * ([[commitIfChanged]]: the calc catch-up and the store migration)
+    * — either way a replay is a no-op. `frontiers` holds each decimated
+    * level's per-channel [[Frontier]] (level seconds → channel →
+    * frontier), published with the level's files by [[commitLevel]];
+    * a level key with an empty map is a level built over no channels.
     */
   case class Manifest(version: Long, schemaDdl: String,
                       files: Seq[FileEntry],
-                      txns: Map[String, Long] = Map.empty) {
+                      txns: Map[String, Long] = Map.empty,
+                      frontiers: Map[Long, Map[String, Frontier]] = Map.empty) {
     /** Parsed once per manifest — every serve reads it. */
     lazy val schema: StructType = StructType.fromDDL(schemaDdl)
   }
@@ -140,8 +154,9 @@ object ManifestStore {
 
   /** One log record: a full manifest (chain end) or a delta against
     * `base` (0 = the empty manifest). Deltas carry the full (small)
-    * schema/txns maps; only the file list — the part that grows with
-    * the store — is differential.
+    * schema/txns maps; the file list and the frontiers — the parts
+    * that grow with the store — are differential: a delta's
+    * `frontiers` holds only the channels its commit moved.
     *
     * `rewriteOnly` marks a version whose file changes carry NO new
     * logical rows (compaction: the same data in fewer files) — the
@@ -159,6 +174,7 @@ object ManifestStore {
   private final case class DeltaRecord(version: Long, base: Long,
                                        schemaDdl: String,
                                        txns: Map[String, Long],
+                                       frontiers: Map[Long, Map[String, Frontier]],
                                        adds: Seq[FileEntry],
                                        removes: Seq[String],
                                        rewriteOnly: Boolean = false)
@@ -236,6 +252,51 @@ object ManifestStore {
     txns.toMap
   }
 
+  /** `{"<level>": {"<channel>": [last_src_ts, resume_ts], …}, …}` */
+  private def writeFrontiers(root: ObjectNode,
+                             fr: Map[Long, Map[String, Frontier]]): Unit =
+    if (fr.nonEmpty) {
+      val n = root.putObject("frontiers")
+      fr.foreach { case (level, chans) =>
+        val l = n.putObject(level.toString)
+        chans.foreach { case (ch, f) =>
+          l.putArray(ch).add(f.lastSrcTs).add(f.resumeTs)
+        }
+      }
+    }
+
+  private def readFrontiers(root: JsonNode): Map[Long, Map[String, Frontier]] = {
+    val fn = root.get("frontiers")
+    if (fn == null) return Map.empty
+    import scala.jdk.CollectionConverters._
+    fn.fields().asScala.map { l =>
+      l.getKey.toLong -> l.getValue.fields().asScala.map { c =>
+        c.getKey -> Frontier(c.getValue.get(0).asLong(), c.getValue.get(1).asLong())
+      }.toMap
+    }.toMap
+  }
+
+  /** A delta's frontiers folded over its base's: per level, the moved
+    * channels replace theirs. */
+  private def mergeFrontiers(base: Map[Long, Map[String, Frontier]],
+                             moved: Map[Long, Map[String, Frontier]])
+      : Map[Long, Map[String, Frontier]] =
+    moved.foldLeft(base) { case (acc, (l, m)) =>
+      acc + (l -> (acc.getOrElse(l, Map.empty[String, Frontier]) ++ m))
+    }
+
+  /** The channels whose frontier `next` moved against `cur` — what a
+    * delta records. A level new in `next` is kept even when empty, so
+    * the fold learns the level was built. */
+  private def movedFrontiers(cur: Manifest, next: Manifest)
+      : Map[Long, Map[String, Frontier]] =
+    if (next.frontiers eq cur.frontiers) Map.empty
+    else next.frontiers.flatMap { case (l, m) =>
+      val was = cur.frontiers.get(l)
+      val moved = m.filter { case (c, f) => !was.exists(_.get(c).contains(f)) }
+      if (moved.nonEmpty || was.isEmpty) Some(l -> moved) else None
+    }
+
   private def toJson(rec: LogRecord): Array[Byte] = {
     val root: ObjectNode = mapper.createObjectNode()
     rec match {
@@ -245,6 +306,7 @@ object ManifestStore {
         root.put("version", m.version)
         root.put("schema_ddl", m.schemaDdl)
         writeTxns(root, m.txns)
+        writeFrontiers(root, m.frontiers)
         writeEntries(root.putArray("files"), m.files)
       case d: DeltaRecord =>
         root.put("version", d.version)
@@ -252,6 +314,7 @@ object ManifestStore {
         root.put("base", d.base)
         root.put("schema_ddl", d.schemaDdl)
         writeTxns(root, d.txns)
+        writeFrontiers(root, d.frontiers)
         writeEntries(root.putArray("files_add"), d.adds)
         val rm = root.putArray("files_remove")
         d.removes.foreach(rm.add)
@@ -273,12 +336,13 @@ object ManifestStore {
       val removes = ArrayBuffer.empty[String]
       root.get("files_remove").forEach(n => removes += n.asText())
       DeltaRecord(root.get("version").asLong(), root.get("base").asLong(),
-        root.get("schema_ddl").asText(), readTxns(root),
+        root.get("schema_ddl").asText(), readTxns(root), readFrontiers(root),
         readEntries(root.get("files_add")), removes.toSeq, rw)
     } else
       FullRecord(Manifest(root.get("version").asLong(),
         root.get("schema_ddl").asText(),
-        readEntries(root.get("files")), readTxns(root)), rw)
+        readEntries(root.get("files")), readTxns(root),
+        readFrontiers(root)), rw)
   }
 
   /** Record the head a listing of `path` showed — see
@@ -294,35 +358,10 @@ object ManifestStore {
     * read (external interference left an unreadable squatter — the
     * publish itself is atomic — or the head vanished mid-read) falls
     * back to one listing, and trailing unreadable versions are skipped
-    * rather than bricking every read.
+    * rather than bricking every read ([[VersionLog.readHead]]).
     */
-  def latestManifest(spark: SparkSession, path: String): Option[Manifest] = {
-    val f = fs(spark, path)
-    log.head(f, path).flatMap { v =>
-      scala.util.Try(readManifest(spark, path, v)).toOption
-        .orElse(latestAmong(spark, path, log.list(f, path)))
-    }
-  }
-
-  /** Newest READABLE manifest among a pre-fetched version listing —
-    * shared by [[latestManifest]]'s fallback and the commit loop, which
-    * must base the next version and the base manifest on ONE listing
-    * (two listings are a lost-update race). Skips unreadable squatters
-    * from the top; throws only when even the oldest version is
-    * unreadable (a corrupt log must fail loudly, not silently reset).
-    */
-  private def latestAmong(spark: SparkSession, path: String,
-                          versions: Seq[Long]): Option[Manifest] = {
-    if (versions.isEmpty) return None
-    versions.reverseIterator
-      .map(v => v -> scala.util.Try(readManifest(spark, path, v)))
-      .collectFirst {
-        case (_, scala.util.Success(m)) => m
-        case (v, scala.util.Failure(e)) if v == versions.min =>
-          throw new java.io.IOException(
-            s"no readable manifest under $path (last error on v$v)", e)
-      }
-  }
+  def latestManifest(spark: SparkSession, path: String): Option[Manifest] =
+    log.readHead(fs(spark, path), path)(readManifest(spark, path, _))
 
   /** Latest committed version NUMBER without reading any manifest body
     * — [[VersionLog.head]]'s probe, two existence checks on a quiet
@@ -365,7 +404,7 @@ object ManifestStore {
         val removed = d.removes.toSet
         Manifest(d.version, d.schemaDdl,
           base.files.filterNot(f => removed.contains(f.path)) ++ d.adds,
-          d.txns)
+          d.txns, mergeFrontiers(base.frontiers, d.frontiers))
     }
     if (assembledMemo.size > 128) assembledMemo.clear()
     assembledMemo.put(key, m)
@@ -438,7 +477,7 @@ object ManifestStore {
       // a single listing, anything published after it just makes the
       // exclusive claim fail, and the loop re-reads.
       val versions = log.list(f, path)
-      val cur = latestAmong(spark, path, versions)
+      val cur = log.newestReadable(path, versions)(readManifest(spark, path, _))
         .getOrElse(Manifest(0L, "", Nil))
       val next = update(cur)
         .copy(version = versions.lastOption.getOrElse(0L) + 1)
@@ -458,8 +497,8 @@ object ManifestStore {
               .forall { case (a, b) => a eq b }
           if (isAppend)
             DeltaRecord(next.version, cur.version, next.schemaDdl,
-              next.txns, next.files.drop(cur.files.length), Nil,
-              rewriteOnly)
+              next.txns, movedFrontiers(cur, next),
+              next.files.drop(cur.files.length), Nil, rewriteOnly)
           else {
             val curByPath = cur.files.map(f => f.path -> f).toMap
             val nextByPath = next.files.map(f => f.path -> f).toMap
@@ -470,7 +509,8 @@ object ManifestStore {
             val removes = cur.files.map(_.path).filter(p =>
               !nextByPath.get(p).contains(curByPath(p)))
             DeltaRecord(next.version, cur.version, next.schemaDdl,
-              next.txns, adds, removes, rewriteOnly)
+              next.txns, movedFrontiers(cur, next), adds, removes,
+              rewriteOnly)
           }
         }
       // exclusive publish: HDFS rename refuses an existing target and
@@ -631,7 +671,7 @@ object ManifestStore {
     * day-pure so retention never strands a straddling file.
     */
   def commit(samples: DataFrame, path: String, levelSec: Long): Long =
-    commitTxn(samples, path, levelSec, None)
+    commitTxn(samples, path, levelSec)(_ => false, identity)
 
   /** Idempotent commit for replayable writers (streaming micro-batches):
     * the manifest remembers the highest `batchId` applied per
@@ -641,35 +681,55 @@ object ManifestStore {
     * per writer (which structured streaming guarantees).
     */
   def commitIdempotent(samples: DataFrame, path: String, levelSec: Long,
-                       writerId: String, batchId: Long): Long = {
-    val spark = samples.sparkSession
-    latestManifest(spark, path) match {
-      case Some(m) if m.txns.get(writerId).exists(_ >= batchId) =>
-        return m.version // replay of an applied batch: no-op, no staging
-      case _ =>
-    }
-    commitTxn(samples, path, levelSec, Some(writerId -> batchId))
-  }
+                       writerId: String, batchId: Long): Long =
+    commitMarked(samples, path, levelSec, writerId, batchId)(
+      _.exists(_ >= batchId))
 
-  /** Token-deduplicated commit for serial re-runnable jobs (the cascade
-    * catch-up): the manifest stores the last applied `token` per
-    * `writerId`, and a commit whose token EQUALS the stored one is a
-    * no-op. Unlike [[commitIdempotent]]'s ascending batch ids, tokens
-    * are arbitrary (a hash of the job's input state): a re-run after a
-    * crash recomputes the same token and skips; any genuinely new input
-    * state yields a different token and commits.
+  /** Token-deduplicated commit for serial re-runnable jobs (the calc
+    * channels' catch-up and [[Maintenance.migrateStore]]): the manifest
+    * stores the last applied `token` per `writerId`, and a commit whose
+    * token EQUALS the stored one is a no-op. Unlike
+    * [[commitIdempotent]]'s ascending batch ids, tokens are arbitrary
+    * (the job's new frontier or input state): a re-run after a crash
+    * recomputes the same token and skips; any genuinely new state
+    * yields a different token and commits.
     */
   def commitIfChanged(samples: DataFrame, path: String, levelSec: Long,
-                      writerId: String, token: Long): Long = {
-    val spark = samples.sparkSession
-    latestManifest(spark, path) match {
-      case Some(m) if m.txns.get(writerId).contains(token) =>
-        return m.version // same input state already applied
-      case _ =>
+                      writerId: String, token: Long): Long =
+    commitMarked(samples, path, levelSec, writerId, token)(_.contains(token))
+
+  /** [[commitTxn]] recording `writerId -> value` in `txns`; `applied`
+    * reads the writer's stored mark. An applied replay is caught before
+    * staging when the latest manifest already shows it, and again in
+    * the commit loop when a concurrent replay won.
+    */
+  private def commitMarked(samples: DataFrame, path: String, levelSec: Long,
+                           writerId: String, value: Long)
+                          (applied: Option[Long] => Boolean): Long = {
+    val done = (m: Manifest) => applied(m.txns.get(writerId))
+    latestManifest(samples.sparkSession, path).filter(done) match {
+      case Some(m) => m.version // replay of an applied state: no staging
+      case None =>
+        commitTxn(samples, path, levelSec)(done,
+          m => m.copy(txns = m.txns + (writerId -> value)))
     }
-    commitTxn(samples, path, levelSec, Some(writerId -> token),
-      skipIfEqual = true)
   }
+
+  /** One decimated level's new windows and the frontier of the
+    * channels they moved, published in ONE version — the cascade's
+    * commit ([[Cascade]]), so a level's files and its resume points
+    * can never be seen apart. Applies only while the level's frontier
+    * still equals `from` (None: the level has no frontier yet); a run
+    * that raced another from the same base finds it moved, publishes
+    * nothing and returns the current version (its staged files are
+    * orphans for [[vacuum]]).
+    */
+  def commitLevel(samples: DataFrame, path: String, levelSec: Long,
+                  from: Option[Map[String, Frontier]],
+                  moved: Map[String, Frontier]): Long =
+    commitTxn(samples, path, levelSec)(_.frontiers.get(levelSec) != from,
+      m => m.copy(frontiers = mergeFrontiers(m.frontiers,
+        Map(levelSec -> moved))))
 
   /** In-file clustering key: channel name, or the permanent data id for
     * rename-stable id-keyed frames ([[commitById]]). */
@@ -677,9 +737,15 @@ object ManifestStore {
     if (df.columns.contains("channel")) col("channel")
     else col("channel_data_id")
 
-  private def commitTxn(samples: DataFrame, path: String, levelSec: Long,
-                        txn: Option[(String, Long)],
-                        skipIfEqual: Boolean = false): Long = {
+  /** Stage `samples` as one level's files and append them in one
+    * version, with `mark` applied to the new manifest — unless
+    * `applied` holds for the refreshed base, in which case nothing is
+    * published and the base's version is returned (the staged files
+    * become vacuum-able orphans).
+    */
+  private def commitTxn(samples: DataFrame, path: String, levelSec: Long)
+                       (applied: Manifest => Boolean,
+                        mark: Manifest => Manifest): Long = {
     val spark = samples.sparkSession
     val staged = s"$path/data/commit-${java.util.UUID.randomUUID().toString.take(12)}"
     withBucketDate(samples)
@@ -707,18 +773,9 @@ object ManifestStore {
       .filterNot(f => f.name == "level" || f.name == "bucket_date"))
     val entries = statsFor(spark, path, staged, levelSec)
     commitLoop(spark, path) { cur =>
-      txn.foreach { case (id, b) =>
-        val applied =
-          if (skipIfEqual) cur.txns.get(id).contains(b)
-          else cur.txns.get(id).exists(_ >= b)
-        if (applied)
-          // raced with a concurrent replay that won: surface the applied
-          // state (staged files become vacuum-able orphans)
-          return cur.version
-      }
-      cur.copy(schemaDdl = mergeSchema(cur.schemaDdl, dataSchema).toDDL,
-        files = cur.files ++ entries,
-        txns = txn.fold(cur.txns) { case (id, b) => cur.txns + (id -> b) })
+      if (applied(cur)) return cur.version
+      mark(cur.copy(schemaDdl = mergeSchema(cur.schemaDdl, dataSchema).toDDL,
+        files = cur.files ++ entries))
     }.version
   }
 

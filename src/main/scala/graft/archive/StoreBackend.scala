@@ -23,16 +23,23 @@ trait StoreBackend {
            channel: Option[String] = None): DataFrame
   /** Distinct decimation levels present (period seconds; 0 = raw). */
   def levels(spark: SparkSession, path: String): Seq[Long]
-  /** Token-deduplicated write for re-runnable jobs: a backend with
+  /** Token-deduplicated write for re-runnable jobs (the calc
+    * channels' catch-up, [[Maintenance.migrateStore]]): a backend with
     * transactional metadata skips the write when `token` equals the
-    * last applied one for `writerId` (crash-safe re-runs); the plain
-    * store has nowhere to record tokens and just writes — its catch-up
-    * re-run after a mid-job crash can duplicate windows, which is
-    * exactly the gap the manifest backend closes.
+    * last applied one for `writerId`, so a re-run after a crash writes
+    * nothing twice; the plain store has nowhere to record tokens and
+    * just writes (at-least-once).
     */
   def writeTxn(samples: DataFrame, path: String, levelSec: Long,
                writerId: String, token: Long): Unit =
     write(samples, path, levelSec)
+  /** The manifest store where this backend commits decimated levels
+    * together with their frontiers ([[ManifestStore.commitLevel]]) —
+    * what the cascade's catch-up resumes from. None for the plain
+    * store: it has no log to commit a frontier into, so it supports
+    * only the one-shot [[Cascade.materialize]].
+    */
+  def levelStore(path: String): Option[String] = None
   /** ST9 — drop expired day buckets of one level (end-of-bucket older
     * than latest − retention; 0 = keep forever). Returns dropped paths.
     */
@@ -84,8 +91,9 @@ object ArchiveBackend extends StoreBackend {
   * (each side keeps its own pruning: bound hints are tightened to the
   * cutover before they reach the underlying backend, so neither store
   * scans the other's half); a read entirely on one side never touches
-  * the other store at all. Writes (plain and token-deduplicated) go
-  * to the LIVE store only — the old store is read-only by contract.
+  * the other store at all. Writes (plain, token-deduplicated, and
+  * level commits with their frontiers) go to the LIVE store only — the
+  * old store is read-only by contract.
   *
   * The `path` argument of every call is the LIVE store; the old store
   * is bound at construction. `metaVersion` combines both counters
@@ -107,6 +115,10 @@ final class FederatedBackend(val oldBackend: StoreBackend,
   override def writeTxn(samples: DataFrame, path: String, levelSec: Long,
                         writerId: String, token: Long): Unit =
     liveBackend.writeTxn(samples, path, levelSec, writerId, token)
+
+  /** Decimated levels and their frontiers live in the live store. */
+  override def levelStore(path: String): Option[String] =
+    liveBackend.levelStore(path)
 
   /** Per-side level listings memoized on each side's metaVersion —
     * every read needs both sets for routing, and re-listing manifests
@@ -232,6 +244,7 @@ object ManifestBackend extends StoreBackend {
     ManifestStore.commitIfChanged(samples, path, levelSec, writerId, token)
     ()
   }
+  override def levelStore(path: String): Option[String] = Some(path)
   def applyRetention(spark: SparkSession, path: String, levelSec: Long,
                      retentionNs: Long): Seq[String] =
     ManifestStore.applyRetention(spark, path, levelSec, retentionNs)

@@ -6,7 +6,6 @@ import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Persisted admin users with roles — the re-expression of the
@@ -57,9 +56,6 @@ object UserStore {
   val Iterations = 20000
 
   private val mapper = new ObjectMapper()
-  private val log = new VersionLog("_users")
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // ---- hashing -------------------------------------------------------
 
@@ -118,52 +114,15 @@ object UserStore {
     UserState(root.get("version").asLong(), users.toSeq)
   }
 
-  private val stateMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), UserState]()
-
-  private def stateAt(f: FileSystem, path: String, v: Long): UserState = {
-    val key = (path, v)
-    val hit = stateMemo.get(key)
-    if (hit != null) hit
-    else {
-      val st = fromJson(log.read(f, path, v))
-      if (stateMemo.size > 256) stateMemo.clear()
-      stateMemo.put(key, st)
-      st
-    }
-  }
-
-  private val Empty = UserState(0L, Nil)
+  /** The user log, `_users/v{N}.json`: every version the complete
+    * user set ([[StateLog]]). */
+  private val log = new StateLog[UserState]("_users", UserState(0L, Nil),
+    memoMax = 256, toJson, fromJson, (st, v) => st.copy(version = v))
 
   /** Latest committed user set. A log with no versions is EMPTY — the
     * caller decides whether to seed (see [[ensureSeeded]]). */
-  def state(spark: SparkSession, path: String): UserState = {
-    val f = fs(spark, path)
-    log.readHead(f, path)(stateAt(f, path, _)).getOrElse(Empty)
-  }
-
-  private val KeepVersions = 16
-
-  private def commit(spark: SparkSession, path: String)
-                    (update: UserState => UserState): UserState = {
-    val f = fs(spark, path)
-    var attempts = 0
-    while (attempts < 50) {
-      // one listing feeds the base state, the claimed version and the
-      // prune (ConfigCommands.commit's protocol)
-      val versions = log.list(f, path)
-      val cur = versions.lastOption.fold(Empty)(stateAt(f, path, _))
-      val next = update(cur).copy(version = cur.version + 1)
-      if (log.claim(f, path, next.version)(toJson(next))) {
-        versions.filter(_ < next.version - KeepVersions)
-          .foreach(log.delete(f, path, _))
-        return next
-      }
-      attempts += 1
-    }
-    throw new java.io.IOException(
-      s"user-store commit to $path lost $attempts races — giving up")
-  }
+  def state(spark: SparkSession, path: String): UserState =
+    log.state(spark, path)
 
   // ---- mutations -----------------------------------------------------
 
@@ -173,7 +132,7 @@ object UserStore {
     require(roles.nonEmpty && roles.subsetOf(Set(AdminRole, UserRole)),
       s"roles must be a non-empty subset of {$AdminRole, $UserRole}")
     val (h, s, i) = newHash(password)
-    commit(spark, path) { cur =>
+    log.commit(spark, path) { cur =>
       require(!cur.users.exists(_.name == name),
         s"user '$name' already exists")
       cur.copy(users = cur.users :+ User(name, h, s, i, roles))
@@ -186,7 +145,7 @@ object UserStore {
     */
   def removeUser(spark: SparkSession, path: String,
                  name: String): UserState =
-    commit(spark, path) { cur =>
+    log.commit(spark, path) { cur =>
       val victim = cur.user(name).getOrElse(
         throw new NoSuchElementException(s"user '$name' does not exist"))
       require(!victim.isAdmin ||
@@ -198,7 +157,7 @@ object UserStore {
   def setPassword(spark: SparkSession, path: String, name: String,
                   password: String): UserState = {
     val (h, s, i) = newHash(password)
-    commit(spark, path) { cur =>
+    log.commit(spark, path) { cur =>
       require(cur.users.exists(_.name == name),
         s"user '$name' does not exist")
       cur.copy(users = cur.users.map(u =>
@@ -210,7 +169,7 @@ object UserStore {
                roles: Set[String]): UserState = {
     require(roles.nonEmpty && roles.subsetOf(Set(AdminRole, UserRole)),
       s"roles must be a non-empty subset of {$AdminRole, $UserRole}")
-    commit(spark, path) { cur =>
+    log.commit(spark, path) { cur =>
       require(cur.users.exists(_.name == name),
         s"user '$name' does not exist")
       require(roles.contains(AdminRole) ||
@@ -229,7 +188,7 @@ object UserStore {
     * alone.
     */
   def ensureSeeded(spark: SparkSession, path: String): Unit = {
-    if (log.head(fs(spark, path), path).isEmpty) {
+    if (log.isEmpty(spark, path)) {
       try { addUser(spark, path, "admin", "admin", Set(AdminRole)); () }
       catch {
         // lost the seeding race to a concurrent server: fine
@@ -257,10 +216,7 @@ object UserStore {
   // a user store deleted and recreated at the same path restarts
   // version numbering — without a purge, (path, version) memo keys
   // would keep serving the DEAD store's credentials
-  log.onRegression { path =>
-    stateMemo.keySet.removeIf(_._1 == path)
-    verifiedMemo.keySet.removeIf(_._1 == path)
-  }
+  log.onRegression(path => verifiedMemo.keySet.removeIf(_._1 == path))
 
   private val memoHmacKey: javax.crypto.spec.SecretKeySpec = {
     val k = new Array[Byte](32)

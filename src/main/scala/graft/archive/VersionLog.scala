@@ -90,17 +90,35 @@ private[graft] final class VersionLog(subdir: String) {
     }
   }
 
-  /** [[head]]'s version passed to `read`. A head file that vanishes
-    * between the probe and the read (root deleted, or a lagging probe
-    * overtaken by pruning) is re-resolved by one listing. */
+  /** [[head]]'s version passed to `read`. A head that fails to read —
+    * it vanished between the probe and the read (root deleted, or a
+    * lagging probe overtaken by pruning), or it is an unreadable
+    * squatter (a truncated or hand-edited file; the publish itself is
+    * atomic) — is re-resolved by one listing, newest readable first. */
   def readHead[A](f: FileSystem, root: String)(read: Long => A): Option[A] =
     head(f, root).flatMap { v =>
-      try Some(read(v))
-      catch {
-        case _: java.io.FileNotFoundException =>
-          list(f, root).lastOption.map(read)
-      }
+      scala.util.Try(read(v)).toOption
+        .orElse(newestReadable(root, list(f, root))(read))
     }
+
+  /** The newest of `versions` (ascending, from ONE listing) that `read`
+    * accepts. Commit loops base the next version and the base state on
+    * one listing (two listings are a lost-update race) and claim above
+    * the listing's top, so an unreadable squatter is skipped here and
+    * overtaken by the next commit instead of wedging the log. Throws
+    * only when even the oldest version is unreadable: a corrupt log
+    * must fail loudly, not silently reset.
+    */
+  def newestReadable[A](root: String, versions: Seq[Long])
+                       (read: Long => A): Option[A] =
+    versions.reverseIterator
+      .map(v => v -> scala.util.Try(read(v)))
+      .collectFirst {
+        case (_, scala.util.Success(a)) => a
+        case (v, scala.util.Failure(e)) if v == versions.head =>
+          throw new java.io.IOException(
+            s"no readable version under ${dir(root)} (last error on v$v)", e)
+      }
 
   /** Record that `v` was the head some reader saw. A value below the
     * recorded max triggers one fresh listing; the purges run only when
@@ -148,4 +166,88 @@ private[graft] final class VersionLog(subdir: String) {
   def delete(f: FileSystem, root: String, v: Long): Unit =
     try { f.delete(file(root, v), false); () }
     catch { case _: java.io.IOException => () }
+}
+
+/** A version log whose every version carries the COMPLETE state — the
+  * channel-config log ([[ConfigCommands]]) and the user log
+  * ([[UserStore]]). Old versions serve no reconstruction purpose, so
+  * each commit prunes all but the last [[KeepVersions]] (they only
+  * grow the directory listing every commit pays); the tail protects
+  * readers that resolved the head just before the prune.
+  *
+  * Parsed states are memoized per (root, version): a version file is
+  * immutable once published, so a parsed state never goes stale, and
+  * the serving edge reads a state several times per request. The
+  * regression rule purges a recreated root's entries.
+  *
+  * An unreadable version (a truncated or hand-edited head) is skipped
+  * by readers and overtaken by the next commit, as in the manifest log
+  * ([[VersionLog.newestReadable]]).
+  */
+private[graft] final class StateLog[S](subdir: String, empty: S,
+                                       memoMax: Int,
+                                       encode: S => Array[Byte],
+                                       decode: Array[Byte] => S,
+                                       withVersion: (S, Long) => S) {
+
+  private val log = new VersionLog(subdir)
+
+  private val KeepVersions = 16
+
+  /** Also purge `purge`'s per-root state when a root is recreated. */
+  def onRegression(purge: String => Unit): Unit = log.onRegression(purge)
+
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), S]()
+  log.onRegression(root => memo.keySet.removeIf(_._1 == root))
+
+  private def fs(spark: org.apache.spark.sql.SparkSession,
+                 root: String): FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def at(f: FileSystem, root: String, v: Long): S = {
+    val hit = memo.get((root, v))
+    if (hit != null) hit
+    else {
+      val st = decode(log.read(f, root, v))
+      if (memo.size > memoMax) memo.clear()
+      memo.put((root, v), st)
+      st
+    }
+  }
+
+  /** Whether the log has no version at all (readable or not). */
+  def isEmpty(spark: org.apache.spark.sql.SparkSession, root: String): Boolean =
+    log.head(fs(spark, root), root).isEmpty
+
+  /** The latest readable state (`empty` for a new log). */
+  def state(spark: org.apache.spark.sql.SparkSession, root: String): S = {
+    val f = fs(spark, root)
+    log.readHead(f, root)(at(f, root, _)).getOrElse(empty)
+  }
+
+  /** Optimistic CAS commit: `update` re-runs against the refreshed
+    * state on a lost race, so its validations hold against what was
+    * actually committed. One listing per attempt feeds the base state,
+    * the claimed version and the prune.
+    */
+  def commit(spark: org.apache.spark.sql.SparkSession, root: String)
+            (update: S => S): S = {
+    val f = fs(spark, root)
+    var attempts = 0
+    while (attempts < 50) {
+      val versions = log.list(f, root)
+      val cur = log.newestReadable(root, versions)(at(f, root, _))
+        .getOrElse(empty)
+      val v = versions.lastOption.getOrElse(0L) + 1
+      val next = withVersion(update(cur), v)
+      if (log.claim(f, root, v)(encode(next))) {
+        versions.filter(_ < v - KeepVersions).foreach(log.delete(f, root, _))
+        return next
+      }
+      attempts += 1
+    }
+    throw new java.io.IOException(
+      s"commit to $root/$subdir lost $attempts races — giving up")
+  }
 }

@@ -660,17 +660,31 @@ object Similarity {
     // freshness metadata: the corpus size this quantizer was trained
     // over — the drift trigger compares live postings against it.
     // One JSON line written driver-side (metadata, not data): a
-    // 1-row Spark write was a whole scheduled job for a ~40-byte file
-    val fs = new org.apache.hadoop.fs.Path(path + "/meta")
-    val hfs = fs.getFileSystem(
+    // 1-row Spark write was a whole scheduled job for a ~40-byte file.
+    // Written to a temp file and renamed over meta.json, so a
+    // concurrent ivfRefreshIfDrifted always finds one meta (the temp
+    // name does not end in .json, which the reader globs)
+    val dir = new org.apache.hadoop.fs.Path(path + "/meta")
+    val hfs = dir.getFileSystem(
       corpus.sparkSession.sparkContext.hadoopConfiguration)
-    hfs.delete(fs, true) // same clean-slate semantics as mode(overwrite)
-    hfs.mkdirs(fs)
-    val out = hfs.create(
-      new org.apache.hadoop.fs.Path(path + "/meta/meta.json"), true)
-    out.write(s"""{"base_count":${corpus.count()},"k":$k}"""
+    val meta = new org.apache.hadoop.fs.Path(dir, "meta.json")
+    val tmp = new org.apache.hadoop.fs.Path(dir,
+      s".meta-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
+    val out = hfs.create(tmp, false)
+    try out.write(s"""{"base_count":${corpus.count()},"k":$k}"""
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    finally out.close()
+    // rename replaces meta.json on POSIX; HDFS refuses an existing
+    // target, so drop it there first
+    if (!hfs.rename(tmp, meta) &&
+        !(hfs.delete(meta, false) && hfs.rename(tmp, meta))) {
+      hfs.delete(tmp, false)
+      throw new java.io.IOException(s"cannot publish $meta")
+    }
+    // a pre-r12 index's 1-row Spark write left part-*.json beside it
+    hfs.listStatus(dir).map(_.getPath)
+      .filter(p => p.getName.endsWith(".json") && p.getName != "meta.json")
+      .foreach(hfs.delete(_, false))
   }
 
   /** The index FRESHNESS policy ([[ivfIndexAppend]]'s other half):

@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.archive.{ArchiveStore, Cascade, Decimation}
+import graft.archive.{ArchiveStore, Cascade, Decimation, ManifestBackend,
+  ManifestStore, StoreBackend}
 import graft.core.Samples
 
 /** A8 — the multi-hop cascade must agree with direct decimation on
@@ -96,7 +100,7 @@ class CascadeSpec extends AnyFunSuite {
   }
 
   test("typed cascade and typed JSON serving agree across both backends") {
-    import graft.archive.{ArchiveServer, ManifestBackend, ManifestStore}
+    import graft.archive.ArchiveServer
     val typed = graft.core.TypedSamples.fromEvents(spark, "/root/testdata/sf0.001")
     val a = Files.createTempDirectory("tcas_a").toString
     val m = Files.createTempDirectory("tcas_m").toString
@@ -137,20 +141,21 @@ class CascadeSpec extends AnyFunSuite {
     val rest = Samples.monotonicDedup(typed).where($"ts" > cut)
 
     val inc = Files.createTempDirectory("tcasinc").toString
-    Cascade.materializeTyped(spark, inc, first, Seq(3600L))
-    ArchiveStore.write(rest, inc, 0)
-    Cascade.catchUpTyped(spark, inc, 3600L)
+    Cascade.materializeTyped(spark, inc, first, Seq(3600L), ManifestBackend)
+    ManifestStore.commit(rest, inc, 0)
+    Cascade.catchUpTyped(spark, inc, 3600L, ManifestBackend)
 
     val full = Files.createTempDirectory("tcasfull").toString
     Cascade.materializeTyped(spark, full, typed, Seq(3600L))
 
-    def dump(p: String) = ArchiveStore.read(spark, p, 3600L)
+    def dump(df: DataFrame) = df
       .select("channel", "ts", "vtype", "mean", "n_samples").collect()
       .map(r => (r.getString(0), r.getLong(1)) ->
         (r.getString(2),
           if (r.isNullAt(3)) Long.MinValue else math.round(r.getDouble(3) * 1e9),
           r.getLong(4))).toMap
-    val (a, b) = (dump(inc), dump(full))
+    val (a, b) = (dump(ManifestStore.read(spark, inc, 3600L)),
+      dump(ArchiveStore.read(spark, full, 3600L)))
     assert(a.keySet == b.keySet, s"window sets differ: " +
       s"only-inc=${(a.keySet -- b.keySet).take(3)} " +
       s"only-full=${(b.keySet -- a.keySet).take(3)}")
@@ -185,23 +190,24 @@ class CascadeSpec extends AnyFunSuite {
 
     // incremental: build on the first 60%, append the rest, catch up
     val inc = Files.createTempDirectory("casinc").toString
-    Cascade.materialize(spark, inc, first, Seq(30L, 300L))
-    ArchiveStore.write(rest, inc, 0)
-    Cascade.catchUp(spark, inc, 30L)
-    Cascade.catchUp(spark, inc, 300L)
+    Cascade.materialize(spark, inc, first, Seq(30L, 300L), ManifestBackend)
+    ManifestStore.commit(rest, inc, 0)
+    Cascade.catchUp(spark, inc, 30L, ManifestBackend)
+    Cascade.catchUp(spark, inc, 300L, ManifestBackend)
 
     // from scratch on everything
     val full = Files.createTempDirectory("casfull").toString
     Cascade.materialize(spark, full, raw, Seq(30L, 300L))
 
     for (l <- Seq(30L, 300L)) {
-      def dump(p: String) = ArchiveStore.read(spark, p, l)
+      def dump(df: DataFrame) = df
         .select("channel", "ts", "mean", "covered_fraction", "n_samples")
         .collect()
         .map(r => (r.getString(0), r.getLong(1)) ->
           (math.round(r.getDouble(2) * 1e9),
             math.round(r.getDouble(3) * 1e9), r.getLong(4))).toMap
-      val (a, b) = (dump(inc), dump(full))
+      val (a, b) = (dump(ManifestStore.read(spark, inc, l)),
+        dump(ArchiveStore.read(spark, full, l)))
       assert(a.keySet == b.keySet, s"level $l window sets differ: " +
         s"only-inc=${(a.keySet -- b.keySet).take(3)} " +
         s"only-full=${(b.keySet -- a.keySet).take(3)}")
@@ -210,65 +216,53 @@ class CascadeSpec extends AnyFunSuite {
     }
   }
 
-  test("manifest catch-up is exactly-once across a crash before the watermark persist") {
+  test("two catch-ups racing from one frontier commit the level exactly once") {
     import spark.implicits._
-    import graft.archive.{ManifestBackend, ManifestStore}
     val events = Samples.fromEvents(spark, "/root/testdata/sf0.001")
     val cut = events.agg(org.apache.spark.sql.functions.expr(
       "percentile(ts, 0.6)")).head.getDouble(0).toLong
-    val store = Files.createTempDirectory("casm_crash").toString
+    val store = Files.createTempDirectory("casm_race").toString
     Cascade.materialize(spark, store, events.where($"ts" <= cut),
       Seq(30L), ManifestBackend)
     ManifestStore.commit(
       Samples.monotonicDedup(events).where($"ts" > cut), store, 0)
+    val v0 = ManifestStore.latestVersion(spark, store).get
 
-    // snapshot the watermark state, run catch-up, then restore the
-    // snapshot — the exact on-disk state of a crash that hit AFTER the
-    // decimated-data commit but BEFORE the watermark persist
-    val wmDir = s"$store/_watermarks"
-    val saved = Files.createTempDirectory("wm_saved").toString + "/wm"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val conf = spark.sparkContext.hadoopConfiguration
-    org.apache.hadoop.fs.FileUtil.copy(fs,
-      new org.apache.hadoop.fs.Path(wmDir), fs,
-      new org.apache.hadoop.fs.Path(saved), false, conf)
-    Cascade.catchUp(spark, store, 30L, ManifestBackend)
-    val n1 = ManifestStore.read(spark, store, 30L).count()
+    // the gated run reads the level's frontier, then waits in its first
+    // source read until the other run has committed windows and
+    // frontier; its own commit, based on the old frontier, is refused
+    GatedBackend.race(gateLevel = 0L)(
+      g => Cascade.catchUp(spark, store, 30L, g))(
+      Cascade.catchUp(spark, store, 30L, ManifestBackend))
+    assert(ManifestStore.latestVersion(spark, store).contains(v0 + 1),
+      "windows and frontier must land in one version, and only once")
 
-    fs.delete(new org.apache.hadoop.fs.Path(wmDir), true)
-    org.apache.hadoop.fs.FileUtil.copy(fs,
-      new org.apache.hadoop.fs.Path(saved), fs,
-      new org.apache.hadoop.fs.Path(wmDir), false, conf)
-    // the "re-run after crash": same pre-run watermark state → same
-    // token → the duplicate append is skipped
-    Cascade.catchUp(spark, store, 30L, ManifestBackend)
-    assert(ManifestStore.read(spark, store, 30L).count() == n1)
-    // and content still equals a from-scratch build
-    val full = Files.createTempDirectory("casm_full2").toString
+    val keys = ManifestStore.read(spark, store, 30L)
+      .select("channel", "ts", "n_samples").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(keys.length == keys.map(k => (k._1, k._2)).distinct.length,
+      "duplicate (channel, ts) windows")
+    val full = Files.createTempDirectory("casm_race_full").toString
     Cascade.materialize(spark, full, events, Seq(30L))
-    val a = ManifestStore.read(spark, store, 30L)
+    assert(keys.toSet == ArchiveStore.read(spark, full, 30L)
       .select("channel", "ts", "n_samples").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val b = ArchiveStore.read(spark, full, 30L)
-      .select("channel", "ts", "n_samples").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(a == b)
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet)
   }
 
-  test("an idle catch-up run does not poison the dedup token (data after idle lands)") {
+  test("an idle catch-up commits no version, and data after it still lands") {
     import spark.implicits._
-    import graft.archive.{ManifestBackend, ManifestStore}
     val events = Samples.fromEvents(spark, "/root/testdata/sf0.001")
     val cut = events.agg(org.apache.spark.sql.functions.expr(
       "percentile(ts, 0.6)")).head.getDouble(0).toLong
     val store = Files.createTempDirectory("casm_idle").toString
     Cascade.materialize(spark, store, events.where($"ts" <= cut),
       Seq(30L), ManifestBackend)
-    // IDLE catch-up: no new source data
+    // IDLE catch-up: no new source data, no frontier moves
+    val vBuilt = ManifestStore.latestVersion(spark, store)
     Cascade.catchUp(spark, store, 30L, ManifestBackend)
+    assert(ManifestStore.latestVersion(spark, store) == vBuilt)
     val nIdle = ManifestStore.read(spark, store, 30L).count()
-    // now real data arrives and must not be skipped by a stale token
+    // now real data arrives and must be appended
     ManifestStore.commit(
       Samples.monotonicDedup(events).where($"ts" > cut), store, 0)
     Cascade.catchUp(spark, store, 30L, ManifestBackend)
@@ -280,9 +274,30 @@ class CascadeSpec extends AnyFunSuite {
     assert(after == ArchiveStore.read(spark, full, 30L).count())
   }
 
+  test("a level with data files but no frontier is refused, never re-appended") {
+    val events = Samples.fromEvents(spark, "/root/testdata/sf0.001")
+    // the level's windows committed as plain files: the layout of a
+    // store written before frontiers committed with the level
+    val store = Files.createTempDirectory("casm_nofront").toString
+    ManifestStore.commit(Samples.monotonicDedup(events), store, 0)
+    ManifestStore.commit(Decimation.decimate(Samples.monotonicDedup(events),
+        300L * Samples.NS).withColumnRenamed("win_start", "ts"), store, 300L)
+    val v = ManifestStore.latestVersion(spark, store)
+    for (run <- Seq[() => Unit](
+        () => Cascade.catchUp(spark, store, 300L, ManifestBackend),
+        () => Cascade.materializeLevel(spark, store, 300L, ManifestBackend))) {
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains("level 300"), e.getMessage)
+    }
+    assert(ManifestStore.latestVersion(spark, store) == v)
+    // and the plain parquet store cannot catch up at all
+    val plain = Files.createTempDirectory("cas_plain").toString
+    intercept[IllegalArgumentException](Cascade.catchUp(spark, plain, 300L,
+      graft.archive.ArchiveBackend))
+  }
+
   test("cascade over the manifest backend equals the archive backend, incl. catch-up") {
     import spark.implicits._
-    import graft.archive.{ManifestBackend, ManifestStore}
     val events = Samples.fromEvents(spark, "/root/testdata/sf0.001")
     val cut = events.agg(org.apache.spark.sql.functions.expr(
       "percentile(ts, 0.6)")).head.getDouble(0).toLong
@@ -322,7 +337,7 @@ class CascadeSpec extends AnyFunSuite {
 
   test("cascade over a mid-migration federation equals a single store") {
     import spark.implicits._
-    import graft.archive.{FederatedBackend, ManifestBackend, ManifestStore}
+    import graft.archive.FederatedBackend
     val events = Samples.fromEvents(spark, "/root/testdata/sf0.001")
     val cut = events.agg(org.apache.spark.sql.functions.expr(
       "percentile(ts, 0.5)")).head.getDouble(0).toLong
@@ -377,7 +392,7 @@ class CascadeSpec extends AnyFunSuite {
         lit(0).as("severity"), lit(0).as("status"),
         col("id").as("sample_id"))
     def days(store: String, level: Long) =
-      ArchiveStore.read(spark, store, level)
+      ManifestStore.read(spark, store, level)
         .select("bucket_date").distinct().collect()
         .map(_.getDate(0).toString).toSet
 
@@ -387,14 +402,15 @@ class CascadeSpec extends AnyFunSuite {
     val store = Files.createTempDirectory("casret").toString
     val keep = Map(0L -> 86400L, 3600L -> 86400L)
     Cascade.materialize(spark, store, hourly(0, 72), Seq(3600L),
-      retentionSec = keep)
+      ManifestBackend, retentionSec = keep)
     assert(days(store, 0L) == Set("2024-01-02", "2024-01-03"))
     assert(days(store, 3600L) == Set("2024-01-02", "2024-01-03"))
 
     // day 4 arrives; catch-up must advance the horizon and expire
     // day 2 from the decimated level as part of its own write
-    graft.archive.ArchiveBackend.write(hourly(72, 96), store, 0L)
-    Cascade.catchUp(spark, store, 3600L, retentionSec = keep)
+    ManifestBackend.write(hourly(72, 96), store, 0L)
+    Cascade.catchUp(spark, store, 3600L, ManifestBackend,
+      retentionSec = keep)
     assert(days(store, 3600L) == Set("2024-01-03", "2024-01-04"))
   }
 
@@ -405,5 +421,58 @@ class CascadeSpec extends AnyFunSuite {
     // the synthetic config keeps raw forever and bounds the two
     // decimated levels; max-across-channels must preserve that shape
     assert(lr == Map(0L -> 0L, 3600L -> 7L * 86400L, 21600L -> 30L * 86400L))
+  }
+}
+
+/** [[ManifestBackend]] with a gate on its first read of `gateLevel`:
+  * it holds a cascade run after the run has read its base manifest
+  * and before it commits, so another run can commit first — a
+  * deterministic race between two runs from one manifest version.
+  */
+class GatedBackend(gateLevel: Long) extends StoreBackend {
+  val reading = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+  private val armed = new AtomicBoolean(true)
+  def write(samples: DataFrame, path: String, levelSec: Long): Unit =
+    ManifestBackend.write(samples, path, levelSec)
+  def read(spark: SparkSession, path: String, levelSec: Long,
+           loNs: Option[Long], hiNs: Option[Long],
+           channel: Option[String]): DataFrame = {
+    if (levelSec == gateLevel && armed.getAndSet(false)) {
+      reading.countDown()
+      assert(release.await(300, TimeUnit.SECONDS), "gate never released")
+    }
+    ManifestBackend.read(spark, path, levelSec, loNs, hiNs, channel)
+  }
+  def levels(spark: SparkSession, path: String): Seq[Long] =
+    ManifestBackend.levels(spark, path)
+  def applyRetention(spark: SparkSession, path: String, levelSec: Long,
+                     retentionNs: Long): Seq[String] =
+    ManifestBackend.applyRetention(spark, path, levelSec, retentionNs)
+  override def levelStore(path: String): Option[String] = Some(path)
+}
+
+object GatedBackend {
+  /** Start `gated` on a [[GatedBackend]], run `winner` to completion
+    * once the gated run is parked in its read, then let the gated run
+    * finish; rethrows either run's failure.
+    */
+  def race(gateLevel: Long)(gated: StoreBackend => Unit)
+          (winner: => Unit): Unit = {
+    val g = new GatedBackend(gateLevel)
+    @volatile var failure: Option[Throwable] = None
+    val t = new Thread(() =>
+      try gated(g) catch { case e: Throwable => failure = Some(e) })
+    t.start()
+    try {
+      assert(g.reading.await(300, TimeUnit.SECONDS) || failure.nonEmpty,
+        "the gated run never reached its read")
+      failure.foreach(throw _)
+      winner
+    } finally {
+      g.release.countDown()
+      t.join()
+    }
+    failure.foreach(throw _)
   }
 }

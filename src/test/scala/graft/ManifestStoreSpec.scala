@@ -302,6 +302,68 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(ManifestStore.read(spark, dir, 0).count() == 2)
   }
 
+  test("level frontiers survive a 40-commit chain, compaction, retention, " +
+      "replaceRange and vacuum; deltas carry only moved channels") {
+    import ManifestStore.Frontier
+    val dir = Files.createTempDirectory("mfront").toString
+    def latest = ManifestStore.latestManifest(spark, dir).get
+    var expect = Map.empty[Long, Map[String, Frontier]]
+    def move(level: Long, rows: DataFrame, moved: Map[String, Frontier]): Long = {
+      val v = ManifestStore.commitLevel(rows, dir, level,
+        latest.frontiers.get(level), moved)
+      expect += level -> (expect.getOrElse(level, Map.empty) ++ moved)
+      v
+    }
+    def pad(to: Long): Unit =
+      while (latest.version < to)
+        ManifestStore.commitEntries(spark, dir, Nil, latest.schema)
+    def check(what: String): Unit = {
+      assert(latest.frontiers == expect, what)
+      ManifestStore.clearAssembledMemo()
+      assert(latest.frontiers == expect, s"$what, cold fold")
+    }
+    def frontiersAt(v: Long) = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Paths.get(dir, "_manifests",
+        f"v$v%012d.json").toFile).get("frontiers")
+
+    ManifestStore.commit(samples(("a", T0 + NS, 1.0)), dir, 0)
+    move(60L, samples(("a", T0 + NS, 1.0), ("b", T0 + 2 * NS, 2.0)),
+      Map("a" -> Frontier(1L, 0L), "b" -> Frontier(2L, 1L)))
+    // a level built over no channels is still a built level
+    move(900L, samples(), Map.empty)
+    pad(30L)
+    move(60L, samples(("a", T0 + DAY + NS, 3.0)),
+      Map("a" -> Frontier(10L, 9L)))
+    pad(ManifestStore.CheckpointInterval) // the checkpoint
+    val vb = move(60L, samples(("b", T0 + 2 * DAY + NS, 4.0)),
+      Map("b" -> Frontier(20L, 19L)))
+    pad(41L)
+    check("40-commit chain")
+    val cp = frontiersAt(ManifestStore.CheckpointInterval)
+    assert(cp.get("60").size == 2 && cp.has("900"))
+    val delta = frontiersAt(vb)
+    assert(delta.size == 1 && delta.get("60").size == 1 &&
+      delta.get("60").has("b"), delta.toString)
+    assert(frontiersAt(vb + 1) == null, "a padding commit moved frontiers")
+
+    ManifestStore.compact(spark, dir, 60L, "2024-01-01")
+    check("compaction")
+    assert(ManifestStore.applyRetention(spark, dir, 60L, DAY).nonEmpty)
+    check("retention")
+    ManifestStore.replaceRange(spark, dir, 60L, Set("2024-01-02"),
+      samples(("a", T0 + DAY + 5 * NS, 7.0)))
+    check("replaceRange")
+    ManifestStore.vacuum(spark, dir, graceMs = 0)
+    check("vacuum")
+    // a commit from a stale frontier publishes nothing
+    val v = latest.version
+    assert(ManifestStore.commitLevel(samples(("a", T0 + 3 * DAY, 9.0)),
+      dir, 60L, Some(Map("a" -> Frontier(1L, 0L))),
+      Map("a" -> Frontier(99L, 98L))) == v)
+    assert(latest.version == v)
+    check("stale commit")
+  }
+
   test("Maintenance.run converges a fragmented multi-level store in one idempotent call") {
     import graft.archive.Maintenance
     val dir = Files.createTempDirectory("maint").toString

@@ -658,6 +658,23 @@ class PipelineSpec extends AnyFunSuite {
       .where($"vec_id" >= 45).count() > 0)
   }
 
+  test("an IVF rebuild over an existing index publishes exactly one meta.json") {
+    implicit val s: SparkSession = spark
+    val e = (0L until 30L).map(i =>
+        (i, Array.tabulate(8)(d => math.sin(i * 1.9 + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val idx = java.nio.file.Files.createTempDirectory("ivfmeta").toString
+    Similarity.ivfBuildIndex(e.where($"vec_id" < 10), idx, k = 4)
+    Similarity.ivfBuildIndex(e, idx, k = 4)
+    // checksum siblings aside, the meta directory holds only meta.json
+    val names = new java.io.File(idx + "/meta").listFiles().map(_.getName)
+      .filterNot(_.endsWith(".crc")).toSeq
+    assert(names == Seq("meta.json"), names)
+    val txt = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(idx, "meta", "meta.json")), "UTF-8")
+    assert(txt.contains("\"base_count\":30"), txt)
+  }
+
   test("int8 quantization bounds error by scale/2 and finds the exact nearest neighbor") {
     implicit val s: SparkSession = spark
     val e = Seq(

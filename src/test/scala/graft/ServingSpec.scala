@@ -545,25 +545,26 @@ class ServingSpec extends AnyFunSuite {
       .where(col("channel") === "id-new").count() > 0)
 
     // a config update that ADDS a level: the next catch-up builds it
-    // from scratch (first full build, then incremental thereafter)
+    // from scratch (first full build, then incremental thereafter).
+    // Two catch-ups race to build it from one manifest version: the
+    // gated one reads its base, then waits in its read of the source
+    // level until the other has committed the level with its frontier;
+    // its own first-build commit is refused, so the level lands once
     val gov2 = ConfigCommands.state(spark, cfgDir).config("pv:gov2").get
     ConfigCommands.updateChannel(spark, cfgDir,
       gov2.copy(levels = gov2.levels + (21600L -> 0L)))
-    ConfiguredArchive.catchUp(spark, cfgDir, store)
+    val v0 = ManifestStore.latestVersion(spark, store).get
+    GatedBackend.race(gateLevel = 3600L)(
+      g => ConfiguredArchive.catchUp(spark, cfgDir, store, g))(
+      ConfiguredArchive.catchUp(spark, cfgDir, store))
+    assert(ManifestStore.latestVersion(spark, store).contains(v0 + 1))
     assert(ManifestBackend.levels(spark, store).toSet ==
       Set(0L, 3600L, 21600L))
-    val built = ManifestStore.read(spark, store, 21600L).count()
-    assert(built > 0)
-
-    // crash between the first build's write and its watermark persist:
-    // the re-run recomputes the same full-history state token and the
-    // duplicate append is skipped (manifest backend exactly-once)
-    val wmDir = new org.apache.hadoop.fs.Path(
-      s"$store/_watermarks/level_21600")
-    wmDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(wmDir, true)
+    val built = ManifestStore.read(spark, store, 21600L)
+      .select("channel", "ts").collect()
+    assert(built.nonEmpty && built.distinct.length == built.length)
     ConfiguredArchive.catchUp(spark, cfgDir, store)
-    assert(ManifestStore.read(spark, store, 21600L).count() == built)
+    assert(ManifestStore.read(spark, store, 21600L).count() == built.length)
 
     // the full stack serves the JSON v1 wire under the current name
     val json = ConfiguredArchive.serveJson(spark, cfgDir, store,

@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.archive.{ChannelConfig, ConfigCommands, ConfiguredArchive,
-  HttpArchiveServer, VersionLog}
+  HttpArchiveServer, UserStore, VersionLog}
 
 /** The `v%012d.json` version log shared by the manifest, config and
   * user logs: the reader's head probe against the authoritative
@@ -128,6 +128,29 @@ class VersionLogSpec extends AnyFunSuite {
       ChannelConfig("pv:new", "id-new", "ca", enabled = true, Map(), Map()))
     assert(ConfigCommands.state(spark, cfg).configs.map(_.name) ==
       Seq("pv:new"))
+  }
+
+  test("an unreadable head version of the config and user logs is " +
+      "skipped by readers and overtaken by the next commit") {
+    val root = Files.createTempDirectory("vlogwedge").toString
+    def cfg(n: String) =
+      ChannelConfig(n, s"id-$n", "ca", enabled = true, Map(), Map())
+    ConfigCommands.addChannel(spark, root, cfg("pv:a"))
+    UserStore.addUser(spark, root, "ann", "pw-ann", Set(UserStore.UserRole))
+    // a truncated or hand-edited head on both logs
+    for (log <- Seq("_config", "_users"))
+      Files.write(java.nio.file.Paths.get(root, log, "v000000000002.json"),
+        "{not json".getBytes(StandardCharsets.UTF_8))
+    assert(ConfigCommands.state(spark, root).configs.map(_.name) ==
+      Seq("pv:a"))
+    assert(UserStore.state(spark, root).users.map(_.name) == Seq("ann"))
+    assert(ConfigCommands.addChannel(spark, root, cfg("pv:b")).version == 3L)
+    assert(ConfigCommands.state(spark, root).configs.map(_.name).sorted ==
+      Seq("pv:a", "pv:b"))
+    assert(UserStore.addUser(spark, root, "bob", "pw-bob",
+      Set(UserStore.UserRole)).version == 3L)
+    assert(UserStore.state(spark, root).users.map(_.name).sorted ==
+      Seq("ann", "bob"))
   }
 
   test("a repeated /1/samples request on an unchanged store lists " +
