@@ -17,10 +17,16 @@ import scala.collection.mutable
   * plus the manifest entry's byte size (a path reused for different
   * bytes cannot hit), the channel, and the projection.
   *
-  * Bounded by [[MaxWeight]] row units, least recently used evicted
-  * first. A store's entries are purged when its version numbering
-  * regresses (deleted and recreated at the same path) and on the
-  * serve paths' missing-file retry.
+  * An entry holds the decoded rows and, once a serve path has asked
+  * for it ([[Entry.json]]), the JSON v1 wire element of every row: a
+  * row's wire text cannot change while its file is immutable, so each
+  * row is encoded once per cache lifetime, not once per request.
+  *
+  * Bounded by [[MaxBytes]] over every entry's decoded arrays plus its
+  * encoded elements, least recently used evicted first. A store's
+  * entries are purged when its version numbering regresses (deleted
+  * and recreated at the same path) and on the serve paths' missing-file
+  * retry.
   */
 private[graft] object DecodedRowCache {
 
@@ -30,23 +36,74 @@ private[graft] object DecodedRowCache {
     */
   val MaxDecodedGroups = 64
 
-  /** Cache bound in row units: a scalar row is one unit, a typed row
-    * (a ~20-field object) [[TypedRowWeight]]. ~2M scalar rows is
-    * ~50 MB of primitive arrays.
+  /** Cache bound in bytes: the decoders' heap estimates of their rows
+    * plus the exact size of the encoded element strings (40 bytes of
+    * `String` and array headers per element, one byte per char — two
+    * when an element holds a char beyond Latin-1). A scalar raw row
+    * with its element is about 200 bytes, so the bound holds ~1.3M of
+    * them. Worst case the cache holds this bound by its own count
+    * (decoded rows are estimates, encodings exact); an entry evicted
+    * while a request reads it lives until that request ends, and an
+    * entry larger than the whole bound is never cached.
     */
-  val MaxWeight: Long = 1L << 21
-  val TypedRowWeight = 8
+  val MaxBytes: Long = 256L << 20
 
   /** Row groups decoded from parquet (cache misses only), process-wide
     * — tests pin that a repeated request decodes nothing. */
   private[graft] val decodedGroups = new AtomicLong
 
+  /** Rows encoded to wire elements, process-wide — tests pin that a
+    * repeated request encodes nothing. */
+  private[graft] val encodedElements = new AtomicLong
+
   private final case class Key(file: String, bytes: Long, channel: String,
                                projection: String)
-  private final class Entry(val store: String, val rows: AnyRef,
-                            val weight: Long, val groups: Int)
 
-  /** One request's budget and the rows it already holds: a file read
+  /** One cached channel-file: its rows (never mutated) and, after the
+    * first [[json]] call, the wire element of each row.
+    */
+  final class Entry[A <: AnyRef] private[DecodedRowCache] (
+      private[DecodedRowCache] val key: Key,
+      private[DecodedRowCache] val store: String, val rows: A,
+      rowBytes: Long, private[DecodedRowCache] val groups: Int) {
+    @volatile private var wire: Array[String] = _
+    // counted in `weight` only while the entry is cached; guarded by lru
+    private var wireBytes = 0L
+
+    private[DecodedRowCache] def weight: Long = rowBytes + wireBytes
+
+    /** The JSON v1 element of each row, in row order: `encode` runs on
+      * the first call, and its strings then count against
+      * [[MaxBytes]] for as long as the entry stays cached. */
+    def json(encode: A => Array[String]): Array[String] = {
+      val cached = wire
+      if (cached != null) return cached
+      val fresh = encode(rows)
+      encodedElements.addAndGet(fresh.length)
+      var bytes = 16L + 4L * fresh.length
+      fresh.foreach(s => if (s != null) bytes += stringBytes(s))
+      lru.synchronized {
+        if (wire == null) {
+          wire = fresh
+          if (lru.get(key) eq this) {
+            wireBytes = bytes
+            total += bytes
+            evict()
+          }
+        }
+        wire
+      }
+    }
+  }
+
+  private def stringBytes(s: String): Long = {
+    var wide = false
+    var i = 0
+    while (!wide && i < s.length) { wide = s.charAt(i) > 0xFF; i += 1 }
+    40L + (if (wide) 2L * s.length else s.length)
+  }
+
+  /** One request's budget and the entries it already holds: a file read
     * twice in one request (inner scan and a boundary lookup) is charged
     * once. A cache hit charges the entry's decoded group count exactly
     * as a fresh decode would, so whether a request stays under
@@ -54,7 +111,8 @@ private[graft] object DecodedRowCache {
     */
   final class Budget {
     private[DecodedRowCache] var used = 0
-    private[DecodedRowCache] val held = mutable.HashMap.empty[Key, AnyRef]
+    private[DecodedRowCache] val held =
+      mutable.HashMap.empty[Key, Entry[_ <: AnyRef]]
 
     /** Charge one freshly decoded row group — decoders call this per
       * non-empty group, before decoding it. */
@@ -69,51 +127,60 @@ private[graft] object DecodedRowCache {
     }
   }
 
-  private val lru =
-    new java.util.LinkedHashMap[Key, Entry](256, 0.75f, /* accessOrder */ true)
-  private var weight = 0L
+  private val lru = new java.util.LinkedHashMap[Key, Entry[_ <: AnyRef]](
+    256, 0.75f, /* accessOrder */ true)
+  private var total = 0L
 
-  /** The rows of `channel` in `file` under `projection`: from this
+  /** The entry of `channel` in `file` under `projection`: from this
     * request, from the cache, or from `decode`, which returns the rows
-    * and their weight and charges `budget.decodedGroup()` per group.
-    * A decode that throws (out of budget, missing file) caches nothing.
+    * and their heap estimate in bytes and charges
+    * `budget.decodedGroup()` per group. A decode that throws (out of
+    * budget, missing file) caches nothing.
     */
-  def rows[A <: AnyRef](budget: Budget, store: String, file: String,
-                        bytes: Long, channel: String, projection: String)
-                       (decode: => (A, Long)): A = {
+  def entry[A <: AnyRef](budget: Budget, store: String, file: String,
+                         bytes: Long, channel: String, projection: String)
+                        (decode: => (A, Long)): Entry[A] = {
     val key = Key(file, bytes, channel, projection)
     budget.held.getOrElseUpdate(key, {
       val hit = lru.synchronized(lru.get(key))
       if (hit != null) {
         budget.charge(hit.groups)
-        hit.rows
+        hit
       } else {
         val before = budget.used
         val (decoded, w) = decode
-        put(key, new Entry(store, decoded, w max 1L, budget.used - before))
-        decoded
+        val e = new Entry(key, store, decoded, w max 1L,
+          budget.used - before)
+        put(e)
+        e
       }
-    }).asInstanceOf[A]
+    }).asInstanceOf[Entry[A]]
   }
 
-  private def put(key: Key, e: Entry): Unit =
-    if (e.weight <= MaxWeight) lru.synchronized {
-      val prev = lru.put(key, e)
-      if (prev != null) weight -= prev.weight
-      weight += e.weight
-      val it = lru.values.iterator
-      while (weight > MaxWeight && it.hasNext) {
-        weight -= it.next().weight
-        it.remove()
-      }
+  private def put(e: Entry[_ <: AnyRef]): Unit =
+    if (e.weight <= MaxBytes) lru.synchronized {
+      val prev = lru.put(e.key, e)
+      if (prev != null) total -= prev.weight
+      total += e.weight
+      evict()
     }
+
+  /** Least recently used first, until the total is within the bound;
+    * call holding the lru lock. */
+  private def evict(): Unit = {
+    val it = lru.values.iterator
+    while (total > MaxBytes && it.hasNext) {
+      total -= it.next().weight
+      it.remove()
+    }
+  }
 
   /** Drop every entry decoded from one store's files. */
   def purge(store: String): Unit = lru.synchronized {
     val it = lru.values.iterator
     while (it.hasNext) {
       val e = it.next()
-      if (e.store == store) { weight -= e.weight; it.remove() }
+      if (e.store == store) { total -= e.weight; it.remove() }
     }
   }
 }

@@ -115,26 +115,42 @@ object DirectServe {
   // manifest; the manifest log confirms the regression and purges us
   ManifestStore.log.onRegression(invalidateStore)
 
-  /** Decoded row: (ts, value, sample_id). sample_id participates only
-    * as the duplicate-timestamp tiebreak (first arrival = min
-    * sample_id wins — the querySamples survivor rule); 0 when the
-    * projection doesn't decode it (planning) or the file lacks it.
-    */
-  private[archive] type DRow = (Long, java.lang.Double, Long)
-
   /** One channel's rows in one file as the decoded-rows cache holds
     * them: ts-ascending in file order, column-wise. `values` is null
     * for the ts-only planning projection, `nulls` marks null values,
-    * `sid` is null when sample_id was not decoded. Never mutated after
+    * `sids` is null when sample_id was not decoded. Never mutated after
     * construction.
     */
   private[archive] final class ScalarRows(val ts: Array[Long],
-      values: Array[Double], nulls: java.util.BitSet, sid: Array[Long]) {
+      values: Array[Double], nulls: java.util.BitSet, sids: Array[Long]) {
     def length: Int = ts.length
-    def row(i: Int): DRow = (ts(i),
+    def value(i: Int): java.lang.Double =
       if (values == null || nulls.get(i)) null
-      else java.lang.Double.valueOf(values(i)),
-      if (sid == null) 0L else sid(i))
+      else java.lang.Double.valueOf(values(i))
+    /** sample_id, the duplicate-timestamp tiebreak (first arrival = min
+      * sample_id wins — the querySamples survivor rule); 0 when the
+      * projection doesn't decode it (planning) or the file lacks it. */
+    def sid(i: Int): Long = if (sids == null) 0L else sids(i)
+    /** Heap estimate: the primitive columns and the null bitmap. */
+    def bytes: Long = 64L + 8L * length *
+      (1 + (if (values == null) 0 else 1) + (if (sids == null) 0 else 1)) +
+      nulls.size / 8
+    /** Every row's wire element ([[jsonOf]]), in row order. */
+    def json: Array[String] =
+      Array.tabulate(length)(i => jsonOf(ts(i), value(i)))
+  }
+
+  /** A selected row: index `i` of one cached channel-file. */
+  private final class Hit(val e: DecodedRowCache.Entry[ScalarRows],
+                          val i: Int) {
+    def ts: Long = e.rows.ts(i)
+    def sid: Long = e.rows.sid(i)
+  }
+
+  /** (ts, sample_id): the survivor order of duplicate timestamps. */
+  private val hitOrder: Ordering[Hit] = (a, b) => {
+    val c = java.lang.Long.compare(a.ts, b.ts)
+    if (c != 0) c else java.lang.Long.compare(a.sid, b.sid)
   }
 
   /** One request's decode state: the channel and the decoded-group
@@ -245,7 +261,7 @@ object DirectServe {
       val st = usable.find(_.periodSec == period)
       val entries = manifest.files.filter(_.levelSec == period)
 
-      val rows = mutable.ArrayBuffer.empty[DRow]
+      val rows = mutable.ArrayBuffer.empty[Hit]
       if (effLo == Exact && effHi == Exact)
         rows ++= rangeRows(ctx, entries, valueCol, from, to)
       else {
@@ -263,14 +279,16 @@ object DirectServe {
       }
       // multi-commit duplicate timestamps collapse to the FIRST ARRIVAL
       // (min sample_id) — the engine path's survivor rule
-      val sorted = rows.sortBy(r => (r._1, r._3))
-      val out = mutable.ArrayBuffer.empty[DRow]
+      val sorted = rows.sorted(hitOrder)
+      val out = mutable.ArrayBuffer.empty[Hit]
       var lastTs = Long.MinValue
       var any = false
       sorted.foreach { r =>
-        if (!any || r._1 != lastTs) { out += r; lastTs = r._1; any = true }
+        if (!any || r.ts != lastTs) { out += r; lastTs = r.ts; any = true }
       }
-      Some(out.iterator.map(r => jsonOf(r._1, r._2)))
+      // each selected row's element comes from its file's encoding,
+      // made once per cached entry
+      Some(out.iterator.map(h => h.e.json(_.json)(h.i)))
     } catch {
       case _: FallbackException => None
     }
@@ -311,7 +329,7 @@ object DirectServe {
         lo.getOrElse(Long.MinValue), hi)
       // duplicates kept (panel multiplicity); (ts, arrival) order makes
       // equal-ts neighborhoods deterministic
-      Some(rows.sortBy(r => (r._1, r._3)).map(r => (r._1, r._2))
+      Some(rows.sorted(hitOrder).map(h => (h.ts, h.e.rows.value(h.i)))
         .toIndexedSeq)
     } catch {
       case _: FallbackException => None
@@ -334,7 +352,7 @@ object DirectServe {
         var earliest = Long.MaxValue
         for (e <- cands.sortBy(_.minTs)) {
           if (e.minTs < earliest) {
-            val rows = channelRows(ctx, e, None)
+            val rows = channelRows(ctx, e, None).rows
             if (rows.length > 0 && rows.ts(0) < earliest)
               earliest = rows.ts(0)
           }
@@ -342,7 +360,7 @@ object DirectServe {
         var latest = Long.MinValue
         for (e <- cands.sortBy(f => -f.maxTs)) {
           if (e.maxTs > latest) {
-            val rows = channelRows(ctx, e, None)
+            val rows = channelRows(ctx, e, None).rows
             if (rows.length > 0 && rows.ts(rows.length - 1) > latest)
               latest = rows.ts(rows.length - 1)
           }
@@ -360,15 +378,16 @@ object DirectServe {
     * search over its ts-ascending rows. */
   private def rangeRows(ctx: Ctx, entries: Seq[ManifestStore.FileEntry],
                         valueCol: String, lo: Long, hi: Long)
-      : Seq[DRow] = {
-    val out = mutable.ArrayBuffer.empty[DRow]
+      : Seq[Hit] = {
+    val out = mutable.ArrayBuffer.empty[Hit]
     entries.filter(e => mayContain(e, ctx.channel) &&
         e.maxTs >= lo && e.minTs <= hi)
       .foreach { e =>
-        val rows = channelRows(ctx, e, Some(valueCol))
+        val entry = channelRows(ctx, e, Some(valueCol))
+        val rows = entry.rows
         var i = firstIndexAtOrAfter(rows, lo)
         while (i < rows.length && rows.ts(i) <= hi) {
-          out += rows.row(i)
+          out += new Hit(entry, i)
           i += 1
         }
       }
@@ -377,11 +396,11 @@ object DirectServe {
 
   /** `h` beats `best` as the at-or-before boundary: later ts wins;
     * equal ts → earlier arrival (min sample_id), the survivor rule. */
-  private def beatsBack(h: DRow, best: Option[DRow]): Boolean =
-    best.forall(b => h._1 > b._1 || (h._1 == b._1 && h._3 < b._3))
+  private def beatsBack(h: Hit, best: Option[Hit]): Boolean =
+    best.forall(b => h.ts > b.ts || (h.ts == b.ts && h.sid < b.sid))
 
-  private def beatsFwd(h: DRow, best: Option[DRow]): Boolean =
-    best.forall(b => h._1 < b._1 || (h._1 == b._1 && h._3 < b._3))
+  private def beatsFwd(h: Hit, best: Option[Hit]): Boolean =
+    best.forall(b => h.ts < b.ts || (h.ts == b.ts && h.sid < b.sid))
 
   /** The boundary lookup, manifest-pruned: files that can hold a
     * sample at-or-before `t`, newest ts-stat first, stopping as soon
@@ -392,23 +411,24 @@ object DirectServe {
     */
   private def lastAtOrBefore(ctx: Ctx, entries: Seq[ManifestStore.FileEntry],
                              valueCol: String, t: Long)
-      : Option[DRow] = {
-    var best: Option[DRow] = None
+      : Option[Hit] = {
+    var best: Option[Hit] = None
     val it = entries.filter(e => mayContain(e, ctx.channel) && e.minTs <= t)
       .sortBy(f => -f.maxTs).iterator
     var done = false
     while (it.hasNext && !done) {
       val e = it.next()
-      if (best.exists(_._1 > e.maxTs)) done = true
+      if (best.exists(_.ts > e.maxTs)) done = true
       else {
-        val rows = channelRows(ctx, e, Some(valueCol))
+        val entry = channelRows(ctx, e, Some(valueCol))
+        val rows = entry.rows
         // all rows at the candidate boundary ts (a compacted file can
         // hold same-ts rows from several source commits)
         var j = lastIndexAtOrBefore(rows, t)
         if (j >= 0) {
           val bt = rows.ts(j)
           while (j >= 0 && rows.ts(j) == bt) {
-            val h = rows.row(j)
+            val h = new Hit(entry, j)
             if (beatsBack(h, best)) best = Some(h)
             j -= 1
           }
@@ -442,23 +462,24 @@ object DirectServe {
 
   private def firstAtOrAfter(ctx: Ctx, entries: Seq[ManifestStore.FileEntry],
                              valueCol: String, t: Long)
-      : Option[DRow] = {
-    var best: Option[DRow] = None
+      : Option[Hit] = {
+    var best: Option[Hit] = None
     val it = entries.filter(e => mayContain(e, ctx.channel) && e.maxTs >= t)
       .sortBy(_.minTs).iterator
     var done = false
     while (it.hasNext && !done) {
       val e = it.next()
-      if (best.exists(_._1 < e.minTs)) done = true
+      if (best.exists(_.ts < e.minTs)) done = true
       else {
-        val rows = channelRows(ctx, e, Some(valueCol))
+        val entry = channelRows(ctx, e, Some(valueCol))
+        val rows = entry.rows
         // first index with ts >= t; then all rows at that ts (see
         // lastAtOrBefore)
         var i = firstIndexAtOrAfter(rows, t)
         if (i < rows.length) {
           val bt = rows.ts(i)
           while (i < rows.length && rows.ts(i) == bt) {
-            val h = rows.row(i)
+            val h = new Hit(entry, i)
             if (beatsFwd(h, best)) best = Some(h)
             i += 1
           }
@@ -476,12 +497,13 @@ object DirectServe {
     * the channel never decode.
     */
   private def channelRows(ctx: Ctx, e: ManifestStore.FileEntry,
-                          valueCol: Option[String]): ScalarRows = {
+                          valueCol: Option[String])
+      : DecodedRowCache.Entry[ScalarRows] = {
     val file = resolveDataPath(ctx.root, e.path)
-    DecodedRowCache.rows(ctx.budget, ctx.root, file, e.bytes, ctx.channel,
+    DecodedRowCache.entry(ctx.budget, ctx.root, file, e.bytes, ctx.channel,
         valueCol.getOrElse("")) {
       val rows = decodeFile(ctx, file, valueCol)
-      (rows, rows.length.toLong)
+      (rows, rows.bytes)
     }
   }
 

@@ -4,8 +4,9 @@ import java.io.StringWriter
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-import com.fasterxml.jackson.core.JsonFactory
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.filter2.compat.FilterCompat
@@ -58,7 +59,30 @@ object DirectServeTyped {
       // arrival id — only the duplicate-timestamp survivor tiebreak
       // (first arrival = min sample_id, the engine rule); 0 when the
       // file predates the column
-      sid: Long = 0L)
+      sid: Long = 0L) {
+    /** Heap estimate: the object with its boxed fields, its strings
+      * (two bytes a char, the worst case) and its list elements. */
+    def bytes: Long = {
+      def str(x: String): Long = if (x == null) 0L else 40L + 2L * x.length
+      def strs(x: IndexedSeq[String]): Long =
+        if (x == null) 0L else 32L + x.iterator.map(8L + str(_)).sum
+      320L + str(vtype) + str(strValue) + str(metaUnits) + strs(labels) +
+        strs(arrStr) + (if (arrNum == null) 0L else 32L + 24L * arrNum.length)
+    }
+  }
+
+  /** A selected row: index `i` of one cached channel-file. */
+  private final class Hit(val e: DecodedRowCache.Entry[IndexedSeq[TRow]],
+                          val i: Int) {
+    def row: TRow = e.rows(i)
+    def ts: Long = row.ts
+  }
+
+  /** (ts, sample_id): the survivor order of duplicate timestamps. */
+  private val hitOrder: Ordering[Hit] = (a, b) => {
+    val c = java.lang.Long.compare(a.ts, b.ts)
+    if (c != 0) c else java.lang.Long.compare(a.row.sid, b.row.sid)
+  }
 
   /** The full config-governed typed serve
     * ([[ConfiguredArchive.serveJsonTyped]]'s contract), or None when
@@ -114,12 +138,13 @@ object DirectServeTyped {
       // scalar path: a request whose window is a real scan belongs to
       // the engine, not the serving driver
       val budget = new DecodedRowCache.Budget
-      def fileRows(e: ManifestStore.FileEntry): IndexedSeq[TRow] = {
+      def fileRows(e: ManifestStore.FileEntry)
+          : DecodedRowCache.Entry[IndexedSeq[TRow]] = {
         val file = DirectServe.resolveDataPath(storePath, e.path)
-        DecodedRowCache.rows(budget, storePath, file, e.bytes, channel,
+        DecodedRowCache.entry(budget, storePath, file, e.bytes, channel,
             "typed") {
           val rows = decodeTypedFile(conf, file, channel, budget)
-          (rows, rows.length.toLong * DecodedRowCache.TypedRowWeight)
+          (rows, rows.iterator.map(_.bytes).sum)
         }
       }
       def mayContain(e: ManifestStore.FileEntry): Boolean =
@@ -129,18 +154,23 @@ object DirectServeTyped {
       // the engine probe's geometric reach (spans 1,2,…,2048 days —
       // 4096 > the 3650-day clamp), then ts-dedup and sort — exactly
       // ArchiveServer.serveJsonTyped's assembly
-      val rows = mutable.ArrayBuffer.empty[TRow]
+      val rows = mutable.ArrayBuffer.empty[Hit]
       entries.filter(e => mayContain(e) &&
           e.maxTs > startNs && e.minTs < endNs)
-        .foreach(e => rows ++= fileRows(e)
-          .filter(r => r.ts > startNs && r.ts < endNs))
+        .foreach { e =>
+          val entry = fileRows(e)
+          entry.rows.indices.foreach { i =>
+            val ts = entry.rows(i).ts
+            if (ts > startNs && ts < endNs) rows += new Hit(entry, i)
+          }
+        }
       val reach = LimitReach
       // boundary tiebreak at equal ts: first arrival (min sample_id) —
       // the engine survivor rule; stop conditions strict so a file that
       // merely TIES the best ts still gets scanned for an earlier
       // arrival
-      def lastAtOrBefore(t: Long): Option[TRow] = {
-        var best: Option[TRow] = None
+      def lastAtOrBefore(t: Long): Option[Hit] = {
+        var best: Option[Hit] = None
         val it = entries.filter(e => mayContain(e) && e.minTs <= t &&
             e.maxTs >= t - reach)
           .sortBy(e => -e.maxTs).iterator
@@ -150,24 +180,25 @@ object DirectServeTyped {
           if (best.exists(_.ts > e.maxTs)) done = true
           else {
             // walk back to the boundary ts, then sweep ITS cluster only
-            val rit = fileRows(e).reverseIterator
-              .dropWhile(r => r.ts > t)
-            if (rit.hasNext) {
-              val first = rit.next()
-              if (first.ts >= t - reach) {
-                val bt = first.ts
-                (Iterator(first) ++ rit.takeWhile(_.ts == bt)).foreach { h =>
-                  if (best.forall(b => h.ts > b.ts ||
-                      (h.ts == b.ts && h.sid < b.sid))) best = Some(h)
-                }
+            val entry = fileRows(e)
+            val rs = entry.rows
+            var j = rs.length - 1
+            while (j >= 0 && rs(j).ts > t) j -= 1
+            if (j >= 0 && rs(j).ts >= t - reach) {
+              val bt = rs(j).ts
+              while (j >= 0 && rs(j).ts == bt) {
+                if (best.forall(b => bt > b.ts ||
+                    (bt == b.ts && rs(j).sid < b.row.sid)))
+                  best = Some(new Hit(entry, j))
+                j -= 1
               }
             }
           }
         }
         best
       }
-      def firstAtOrAfter(t: Long): Option[TRow] = {
-        var best: Option[TRow] = None
+      def firstAtOrAfter(t: Long): Option[Hit] = {
+        var best: Option[Hit] = None
         val it = entries.filter(e => mayContain(e) && e.maxTs >= t &&
             e.minTs <= t + reach)
           .sortBy(_.minTs).iterator
@@ -176,15 +207,17 @@ object DirectServeTyped {
           val e = it.next()
           if (best.exists(_.ts < e.minTs)) done = true
           else {
-            val fit = fileRows(e).iterator.dropWhile(r => r.ts < t)
-            if (fit.hasNext) {
-              val first = fit.next()
-              if (first.ts <= t + reach) {
-                val bt = first.ts
-                (Iterator(first) ++ fit.takeWhile(_.ts == bt)).foreach { h =>
-                  if (best.forall(b => h.ts < b.ts ||
-                      (h.ts == b.ts && h.sid < b.sid))) best = Some(h)
-                }
+            val entry = fileRows(e)
+            val rs = entry.rows
+            var i = 0
+            while (i < rs.length && rs(i).ts < t) i += 1
+            if (i < rs.length && rs(i).ts <= t + reach) {
+              val bt = rs(i).ts
+              while (i < rs.length && rs(i).ts == bt) {
+                if (best.forall(b => bt < b.ts ||
+                    (bt == b.ts && rs(i).sid < b.row.sid)))
+                  best = Some(new Hit(entry, i))
+                i += 1
               }
             }
           }
@@ -195,15 +228,14 @@ object DirectServeTyped {
       rows ++= firstAtOrAfter(endNs)
       // duplicate timestamps collapse to the first arrival (min
       // sample_id) — the engine path's survivor rule
-      val sorted = rows.sortBy(r => (r.ts, r.sid))
-      val out = mutable.ArrayBuffer.empty[TRow]
+      val sorted = rows.sorted(hitOrder)
+      val out = mutable.ArrayBuffer.empty[Hit]
       var lastTs = Long.MinValue
       var any = false
-      sorted.foreach { r =>
-        if (!any || r.ts != lastTs) { out += r; lastTs = r.ts; any = true }
+      sorted.foreach { h =>
+        if (!any || h.ts != lastTs) { out += h; lastTs = h.ts; any = true }
       }
-      val meta = new MetaJson
-      Some(out.iterator.map(jsonOf(_, meta)))
+      Some(out.iterator.map(element))
     } catch {
       case _: DirectServe.FallbackException => None
     }
@@ -443,11 +475,10 @@ object DirectServeTyped {
     d.toLong
   }
 
-  /** One response's numeric `metaData` blocks, serialized once per
-    * distinct metadata: a channel's rows almost always share one, and
-    * writing it field by field on every row was about a tenth of the
-    * serving threads' CPU. Keyed by a `java.util.List` so the doubles
-    * compare by bits (`-0.0` and `0.0` print differently).
+  /** One encoding's numeric `metaData` blocks, serialized once per
+    * distinct metadata: a channel's rows almost always share one.
+    * Keyed by a `java.util.List` so the doubles compare by bits (`-0.0`
+    * and `0.0` print differently).
     */
   private final class MetaJson {
     private val memo = new java.util.HashMap[java.util.List[AnyRef], String]()
@@ -476,13 +507,58 @@ object DirectServeTyped {
     }
   }
 
+  /** Every row's JSON v1 element, in row order, written through one
+    * generator (no separator between root values). A row the wire
+    * format refuses (an unknown tag, a non-finite value of a long tag)
+    * gets null; [[element]] re-raises its error only if a request
+    * selects it, as the per-row serve always did.
+    */
+  private def encode(rows: IndexedSeq[TRow]): Array[String] = {
+    val meta = new MetaJson
+    val sw = new StringWriter(256)
+    def generator(): JsonGenerator = {
+      val g = jsonFactory.createGenerator(sw)
+      g.setRootValueSeparator(null)
+      g
+    }
+    var g = generator()
+    val out = new Array[String](rows.length)
+    var i = 0
+    while (i < rows.length) {
+      try {
+        write(g, rows(i), meta)
+        g.flush()
+        out(i) = sw.toString
+      } catch {
+        // the generator is mid-object: drop it with its partial output
+        case NonFatal(_) => g = generator()
+      }
+      sw.getBuffer.setLength(0)
+      i += 1
+    }
+    out
+  }
+
+  /** A selected row's element, from its file's encoding. */
+  private def element(h: Hit): String = {
+    val s = h.e.json(encode)(h.i)
+    if (s != null) s else jsonOf(h.row)
+  }
+
+  /** One row on its own generator — throws what [[encode]] caught. */
+  private def jsonOf(r: TRow): String = {
+    val sw = new StringWriter(160)
+    val g = jsonFactory.createGenerator(sw)
+    write(g, r, new MetaJson)
+    g.close()
+    sw.toString
+  }
+
   /** One JSON v1 typed sample — [[JsonV1.serializeTyped]]'s `to_json`
     * output byte for byte: same field order, same null-field omission,
     * same Jackson number text (this IS the same Jackson core).
     */
-  private def jsonOf(r: TRow, meta: MetaJson): String = {
-    val sw = new StringWriter(160)
-    val g = jsonFactory.createGenerator(sw)
+  private def write(g: JsonGenerator, r: TRow, meta: MetaJson): Unit = {
     val marker = r.vtype == "disabled" || r.vtype == "disconnected"
     g.writeStartObject()
     g.writeNumberField("time", r.ts)
@@ -593,7 +669,5 @@ object DirectServeTyped {
       throw new DirectServe.FallbackException
     }
     g.writeEndObject()
-    g.close()
-    sw.toString
   }
 }

@@ -71,14 +71,15 @@ import org.apache.spark.sql.functions.{col, lit}
   *     `Pattern.matches` semantics; a bad pattern is 400 with the
   *     parse message (:189-211).
   *
-  * Responses are `application/json; charset=UTF-8` and the sample
-  * array is STREAMED — each element comes off the
-  * [[ConfiguredArchive.serveJson]] `toLocalIterator`, so the server
-  * never materializes a result, matching the reference's
-  * generator-per-sample loop (:520-533). `prettyPrint` puts each
-  * element on its own line (the reference delegates to Jackson's
-  * default pretty printer; our elements are pre-serialized JsonV1
-  * objects, so prettiness applies to the array framing).
+  * Responses are `application/json; charset=UTF-8`. A sample array of
+  * at most `RespCacheMaxElems` elements is framed whole and sent as one
+  * write with its `Content-Length`; a longer one is STREAMED chunked as
+  * the elements come off [[ConfiguredArchive.serveJson]]'s iterator,
+  * so the server never materializes an unbounded result (the
+  * reference's generator-per-sample loop, :520-533). `prettyPrint`
+  * puts each element on its own line (the reference delegates to
+  * Jackson's default pretty printer; our elements are pre-serialized
+  * JsonV1 objects, so prettiness applies to the array framing).
   *
   * A typed-union store (the 21-type `vtype` layout) is auto-detected
   * and served through [[ConfiguredArchive.serveJsonTyped]] — the FULL
@@ -300,24 +301,61 @@ object HttpArchiveServer {
     }
   }
 
-  /** Response cache for the chart-UI polling pattern (a panel
-    * re-requesting the same channel/range at 1 Hz): the serialized
-    * elements of a completed response, keyed by the FULL request plus
-    * both the store's metaVersion and the config log's version — any
-    * commit, retention pass, or config change bumps a version and the
-    * stale entry simply stops being addressable. Only version-capable
-    * backends cache (no version = no safe invalidation), and only
-    * responses small enough to hold (the unbounded-raw firehose keeps
-    * streaming uncached).
+  /** Bodies under one byte bound, least recently used evicted first.
+    * Each entry weighs its body plus [[BodyLru.EntryOverhead]] for its
+    * key and map node, so many tiny bodies cannot outgrow the bound.
     */
-  private val respMemo = new java.util.concurrent.ConcurrentHashMap[
-    (StoreBackend, String, String, Long, Long, String, Long, Long,
-      Option[Long], Boolean, Boolean, Option[(String, Int)]),
-    Vector[String]]()
+  private[graft] final class BodyLru[K](maxBytes: Long) {
+    private val map =
+      new java.util.LinkedHashMap[K, Array[Byte]](64, 0.75f, true)
+    private var total = 0L
+
+    def get(k: K): Option[Array[Byte]] = synchronized(Option(map.get(k)))
+
+    def put(k: K, body: Array[Byte]): Unit =
+      if (BodyLru.weight(body) <= maxBytes) synchronized {
+        val prev = map.put(k, body)
+        if (prev != null) total -= BodyLru.weight(prev)
+        total += BodyLru.weight(body)
+        val it = map.values.iterator
+        while (total > maxBytes) {
+          total -= BodyLru.weight(it.next())
+          it.remove()
+        }
+      }
+
+    /** The counted total, never above the bound. */
+    def bytes: Long = synchronized(total)
+  }
+
+  private[graft] object BodyLru {
+    val EntryOverhead = 256L
+    def weight(body: Array[Byte]): Long = body.length + EntryOverhead
+  }
+
+  /** Elements of a body sent whole; a longer array streams chunked. */
   private val RespCacheMaxElems = 20000
+  /** Byte bound of the response cache, and the most chars of a body
+    * sent whole. */
+  private val RespCacheMaxBytes = 64L << 20
   /** Upper bound on /1/derived grid cardinality per request. */
   private val MaxDerivedGridPoints = 1000000L
+  /** Entries of each panel memo (stats, spectrum, staleness, cusum). */
   private val RespCacheMaxEntries = 1024
+
+  /** Response cache for the chart-UI polling pattern (a panel
+    * re-requesting the same channel/range at 1 Hz): the framed body of
+    * a completed response, keyed by the FULL request (`prettyPrint`
+    * included) plus both the store's metaVersion and the config log's
+    * version — any commit, retention pass, or config change bumps a
+    * version and the stale entry simply stops being addressable. Only
+    * version-capable backends cache (no version = no safe
+    * invalidation), and only bodies sent whole (the unbounded-raw
+    * firehose keeps streaming uncached).
+    */
+  private val respMemo = new BodyLru[(StoreBackend, String, String, Long,
+    Long, String, Long, Long, Option[Long], Boolean, Boolean,
+    Option[(String, Int)], Boolean)](RespCacheMaxBytes)
 
   private def samples(spark: SparkSession, configPath: String,
                       storePath: String, backend: StoreBackend,
@@ -379,12 +417,12 @@ object HttpArchiveServer {
       (backend, configPath, storePath,
         ConfigCommands.state(spark, configPath).version, mv, channel,
         start.get, end.get, count.flatten, isTyped, refuseDisabled,
-        downsample)
+        downsample, pretty)
     }
-    val hit = cacheKey.flatMap(k => Option(respMemo.get(k)))
+    val hit = cacheKey.flatMap(respMemo.get)
     if (hit.isDefined) {
       stats.responseCacheHits.incrementAndGet()
-      streamJsonArray(ex, hit.get.iterator, pretty); return
+      sendJsonBytes(ex, hit.get); return
     }
     // driver-side downsample fast path: the manifest-pruned rows fold
     // on the driver (DirectPanels — exact replicas of the engine
@@ -446,21 +484,9 @@ object HttpArchiveServer {
         // being silently masked as empty data.
         case _: NoStoredDataException => Iterator.empty[String]
       }
-    cacheKey match {
-      case Some(k) =>
-        // drain up to the cap: a bounded response is cached whole;
-        // anything larger streams through uncached
-        val buf = Vector.newBuilder[String]
-        var n = 0
-        while (it.hasNext && n <= RespCacheMaxElems) { buf += it.next(); n += 1 }
-        val head = buf.result()
-        if (!it.hasNext) {
-          if (respMemo.size > RespCacheMaxEntries) respMemo.clear()
-          respMemo.put(k, head)
-          streamJsonArray(ex, head.iterator, pretty)
-        } else streamJsonArray(ex, head.iterator ++ it, pretty)
-      case None => streamJsonArray(ex, it, pretty)
-    }
+    // a body sent whole is cached; anything larger streamed uncached
+    for (body <- sendJsonArray(ex, it, pretty); k <- cacheKey)
+      respMemo.put(k, body)
   }
 
   /** `GET <ctx>/1/derived/<chanA>?other=<chanB>&op=add|sub|mul|div&
@@ -548,7 +574,7 @@ object HttpArchiveServer {
           sendError(ex, 403, e.getMessage); return
         case _: NoStoredDataException => Iterator.empty[String]
       }
-    streamJsonArray(ex, it, params.contains("prettyPrint"))
+    sendJsonArray(ex, it, params.contains("prettyPrint"))
   }
 
   private def listChannels(spark: SparkSession, configPath: String,
@@ -558,7 +584,7 @@ object HttpArchiveServer {
     // and sorted like the reference's SortedMap-backed cache walk
     val names = ConfigCommands.state(spark, configPath).configs
       .map(_.name).filter(n => pattern.matcher(n).matches()).sorted
-    streamJsonArray(ex, names.iterator.map(jsonString),
+    sendJsonArray(ex, names.iterator.map(jsonString),
       pretty = params.contains("prettyPrint"))
   }
 
@@ -927,12 +953,15 @@ object HttpArchiveServer {
     sendJson(ex, body)
   }
 
-  private def sendJson(ex: HttpExchange, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
+  private def sendJson(ex: HttpExchange, body: String): Unit =
+    sendJsonBytes(ex, body.getBytes(StandardCharsets.UTF_8))
+
+  /** One fixed-length write: `Content-Length` is the body's size. */
+  private def sendJsonBytes(ex: HttpExchange, body: Array[Byte]): Unit = {
     ex.getResponseHeaders.set("Content-Type",
       "application/json; charset=UTF-8")
-    ex.sendResponseHeaders(200, bytes.length.toLong)
-    ex.getResponseBody.write(bytes)
+    ex.sendResponseHeaders(200, body.length.toLong)
+    ex.getResponseBody.write(body)
     ex.getResponseBody.close()
   }
 
@@ -944,21 +973,40 @@ object HttpArchiveServer {
     ex.getResponseBody.close()
   }
 
-  /** Chunked-streamed JSON array: one element written per iterator
-    * step, nothing materialized — length 0 in sendResponseHeaders is
-    * the JDK server's chunked-transfer mode. The stream is BUFFERED:
-    * per-element writes each became a tiny TCP chunk, and the
-    * small-segment chatter put a ~40 ms delayed-ACK floor under every
-    * response (measured — even the driver-side channel listing paid
-    * it); 64 KB buffering restores full-segment writes.
+  /** A JSON array response. The elements drain first: when they all
+    * fit in `RespCacheMaxElems` elements and `RespCacheMaxBytes` chars,
+    * the framed body goes out as one fixed-length write and is returned
+    * for the caller to cache; otherwise what was drained and the rest
+    * stream chunked and None is returned. An element that throws while
+    * draining fails the request before any header is sent.
     */
-  private def streamJsonArray(ex: HttpExchange, elems: Iterator[String],
-                              pretty: Boolean): Unit = {
-    ex.getResponseHeaders.set("Content-Type",
-      "application/json; charset=UTF-8")
-    ex.sendResponseHeaders(200, 0L)
-    val out = new java.io.BufferedOutputStream(ex.getResponseBody, 65536)
-    def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.UTF_8))
+  private def sendJsonArray(ex: HttpExchange, elems: Iterator[String],
+                            pretty: Boolean): Option[Array[Byte]] = {
+    val head = new scala.collection.mutable.ArrayBuffer[String]
+    var chars = 0L
+    while (elems.hasNext && head.length < RespCacheMaxElems &&
+        chars < RespCacheMaxBytes) {
+      val e = elems.next()
+      head += e
+      chars += e.length
+    }
+    if (elems.hasNext) {
+      streamJsonArray(ex, head.iterator ++ elems, pretty)
+      None
+    } else {
+      val sb = new java.lang.StringBuilder(
+        (chars + 4L * head.length + 4L).min(Int.MaxValue - 16L).toInt)
+      frameJsonArray(head.iterator, pretty, s => sb.append(s))
+      val body = sb.toString.getBytes(StandardCharsets.UTF_8)
+      sendJsonBytes(ex, body)
+      Some(body)
+    }
+  }
+
+  /** `[e1,e2,…]`, or one element a line under `pretty`, written piece
+    * by piece to `w`. */
+  private def frameJsonArray(elems: Iterator[String], pretty: Boolean,
+                             w: String => Unit): Unit = {
     w("[")
     var first = true
     elems.foreach { e =>
@@ -969,6 +1017,24 @@ object HttpArchiveServer {
     }
     if (pretty && !first) w("\n")
     w("]")
+  }
+
+  /** Chunked-streamed JSON array for a body over the whole-send caps:
+    * one element written per iterator step, nothing more materialized —
+    * length 0 in sendResponseHeaders is the JDK server's
+    * chunked-transfer mode. The stream is BUFFERED: per-element writes
+    * each became a tiny TCP chunk, and the small-segment chatter put a
+    * ~40 ms delayed-ACK floor under every response (measured); 64 KB
+    * buffering restores full-segment writes.
+    */
+  private def streamJsonArray(ex: HttpExchange, elems: Iterator[String],
+                              pretty: Boolean): Unit = {
+    ex.getResponseHeaders.set("Content-Type",
+      "application/json; charset=UTF-8")
+    ex.sendResponseHeaders(200, 0L)
+    val out = new java.io.BufferedOutputStream(ex.getResponseBody, 65536)
+    frameJsonArray(elems, pretty,
+      s => out.write(s.getBytes(StandardCharsets.UTF_8)))
     out.close()
   }
 }

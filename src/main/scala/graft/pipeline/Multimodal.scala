@@ -577,14 +577,17 @@ object Multimodal {
         val hot = blkAll.groupBy("blk", "bv")
           .agg(count(lit(1)).as("df"))
           .where(col("df") > cap).select("blk", "bv")
-        // cached: the capped frame feeds BOTH self-join sides below,
-        // and an unmaterialized cap chain re-runs the hot-block
+        // checkpointed: the capped frame feeds BOTH self-join sides
+        // below, and an unmaterialized cap chain re-runs the hot-block
         // aggregation (a full exchange over the block rows) once per
-        // side — with one cached copy the two block exchanges are
-        // identical and ReuseExchange collapses them (r12; the
-        // incrementalCandidates band-frame pattern). Narrow rows:
-        // (doc_id, blk, bv) — 4 per image.
-        blkAll.join(broadcast(hot), Seq("blk", "bv"), "left_anti").cache()
+        // side — with one materialized copy the two block exchanges
+        // are identical and ReuseExchange collapses them. A lazy local
+        // checkpoint (the dHash frame's pattern above) rather than
+        // cache(): nothing is left registered in the CacheManager, so
+        // repeated calls in a long-lived session pin no storage
+        // memory. Narrow rows: (doc_id, blk, bv) — 4 per image.
+        blkAll.join(broadcast(hot), Seq("blk", "bv"), "left_anti")
+          .localCheckpoint(false)
     }
     val cand = blk.as("a").join(blk.as("b"),
         col("a.blk") === col("b.blk") && col("a.bv") === col("b.bv") &&

@@ -1051,6 +1051,12 @@ object Similarity {
     * vector is ever materialized whole on any single node beyond its
     * own row. Vectors absent from the pair graph are their own
     * (singleton) centroid.
+    *
+    * @param pairs near-dup edges `(vec_a, vec_b)`. Every endpoint must
+    *   be a `vec_id` of `corpus`, and `vec_id` must be unique there:
+    *   `n_members` counts the pair graph's nodes, so an endpoint
+    *   missing from the corpus (pairs from a superset or a stale frame)
+    *   is counted as a member that contributes no vector.
     */
   def clusterCentroids(corpus: DataFrame, pairs: DataFrame): DataFrame = {
     val comp = Dedup.connectedComponents(

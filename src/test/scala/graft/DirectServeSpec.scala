@@ -279,6 +279,50 @@ class DirectServeSpec extends AnyFunSuite {
     assert(!recreated.exists(_.contains("\"value\":[15.0]")))
   }
 
+  test("wire elements are encoded once per cached file: a repeated " +
+      "request encodes nothing, and commit, compact, vacuum and recreate " +
+      "encode only the files they add") {
+    val cfgDir = Files.createTempDirectory("dscfge").toString
+    val store = Files.createTempDirectory("dsstoree").toString
+    ConfigCommands.addChannel(spark, cfgDir, ChannelConfig("pv:e", "id-e",
+      "ca", enabled = true, Map(), Map()))
+    // the window covers every sample, so a step's new files are read
+    // whole: each must encode exactly its own rows of the channel
+    val lo = T0
+    val hi = T0 + 2000 * 60L * NS
+    def encodes(expected: Int): Vector[String] = {
+      val before = DecodedRowCache.encodedElements.get
+      val (fast, slow) = bothIn((cfgDir, store))("pv:e", lo, hi, None)
+      assert(fast.contains(slow))
+      assert(DecodedRowCache.encodedElements.get - before == expected)
+      slow
+    }
+    ConfiguredArchive.materialize(spark, cfgDir, store,
+      frame((1 to 600).map(i => row("pv:e", i, Some(i * 0.5)))))
+    val first = encodes(600)
+    assert(first.size == 600)
+    assert(encodes(0) == first)
+    // a manifest-only commit: the same files under a new version
+    val m = ManifestStore.latestManifest(spark, store).get
+    ManifestStore.commitEntries(spark, store, Nil, m.schema)
+    assert(encodes(0) == first)
+    ConfiguredArchive.ingestRaw(spark, cfgDir, store,
+      frame((601 to 800).map(i => row("pv:e", i, Some(i * 0.5)))))
+    val grown = encodes(200)
+    assert(grown.size == 800)
+    assert(ManifestStore.compactAll(spark, store, 0L).nonEmpty)
+    assert(encodes(800) == grown)
+    assert(ManifestStore.vacuum(spark, store, graceMs = 0)
+      .exists(_.endsWith(".parquet")))
+    assert(encodes(0) == grown)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
+    ConfiguredArchive.materialize(spark, cfgDir, store,
+      frame((1 to 300).map(i => row("pv:e", i, Some(i * 3.0)))))
+    val recreated = encodes(300)
+    assert(recreated.exists(_.contains("\"value\":[90.0]")))
+    assert(encodes(0) == recreated)
+  }
+
   test("a request over the row-group budget falls back on a cold and on " +
       "a warm cache alike") {
     val cfgDir = Files.createTempDirectory("dscfgg").toString

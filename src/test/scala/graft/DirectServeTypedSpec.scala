@@ -170,4 +170,62 @@ class DirectServeTypedSpec extends AnyFunSuite {
     val recreated = check()
     assert(recreated.nonEmpty && recreated.size < first.size)
   }
+
+  test("typed wire elements are encoded once per cached file: a repeated " +
+      "request encodes nothing, and commit, compact, vacuum and recreate " +
+      "encode only the files they add") {
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("tdse").toString
+    val export = s"$dir/export"; val cfg = s"$dir/config"
+    val store = s"$dir/store"
+    graft.sources.EpicsArchiverJson.writeFixture(export)
+    ConfigCommands.addChannel(spark, cfg, ChannelConfig("epics:pv0",
+      "epics-id0", "ca", enabled = true, Map(), Map()))
+    val source = graft.sources.EpicsArchiverJson.read(spark, export)
+      .where(col("channel") === "epics:pv0")
+    ConfiguredArchive.materializeTyped(spark, cfg, store, source)
+    val stored = ManifestStore.read(spark, store, 0L)
+      .drop("level", "bucket_date").where(col("channel") === "epics-id0")
+    val n0 = stored.count().toInt
+    val span = stored.agg(org.apache.spark.sql.functions.min("ts"),
+      org.apache.spark.sql.functions.max("ts")).collect().head
+    // the window covers every sample (and its 1 ns-later copy below), so
+    // a step's new files are read whole: each must encode exactly its
+    // own rows of the channel
+    val lo = span.getLong(0) - 1
+    val hi = span.getLong(1) + 2
+    def encodes(expected: Int): Vector[String] = {
+      val before = DecodedRowCache.encodedElements.get
+      val fast = DirectServeTyped.tryServe(spark, cfg, store, "epics:pv0",
+        lo, hi, None, ManifestBackend, refuseDisabled = false)
+        .map(_.toVector)
+      val slow = ConfiguredArchive.serveJsonTypedSpark(spark, cfg, store,
+        "epics:pv0", lo, hi, None, ManifestBackend).toVector
+      assert(fast.contains(slow))
+      assert(DecodedRowCache.encodedElements.get - before == expected)
+      slow
+    }
+    assert(n0 > 10)
+    val first = encodes(n0)
+    assert(first.nonEmpty)
+    assert(encodes(0) == first)
+    ManifestStore.commit(stored.withColumn("ts", col("ts") + 1L), store, 0L)
+    val grown = encodes(n0)
+    assert(grown.size == 2 * first.size)
+    assert(ManifestStore.compactAll(spark, store, 0L).nonEmpty)
+    assert(encodes(2 * n0) == grown)
+    assert(ManifestStore.vacuum(spark, store, graceMs = 0)
+      .exists(_.endsWith(".parquet")))
+    assert(encodes(0) == grown)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
+    val mid = lo + (hi - lo) / 2
+    ConfiguredArchive.materializeTyped(spark, cfg, store,
+      source.where(col("ts") < mid))
+    val n1 = ManifestStore.read(spark, store, 0L)
+      .where(col("channel") === "epics-id0").count().toInt
+    assert(n1 > 0 && n1 < n0)
+    val recreated = encodes(n1)
+    assert(recreated.nonEmpty && recreated.size < first.size)
+    assert(encodes(0) == recreated)
+  }
 }

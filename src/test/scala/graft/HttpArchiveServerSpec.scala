@@ -70,6 +70,14 @@ class HttpArchiveServerSpec extends AnyFunSuite {
   private def base: String = fixture._3.baseUrl
 
   private def get(url: String): (Int, String) = {
+    val (code, body, _) = getWithHeaders(url)
+    (code, body)
+  }
+
+  /** Status, body, and the two framing headers: `Content-Length` and
+    * `Transfer-Encoding` (null when absent). */
+  private def getWithHeaders(url: String)
+      : (Int, String, (String, String)) = {
     val conn = URI.create(url).toURL.openConnection()
       .asInstanceOf[HttpURLConnection]
     conn.setRequestMethod("GET")
@@ -79,9 +87,17 @@ class HttpArchiveServerSpec extends AnyFunSuite {
       if (in == null) ""
       else try new String(in.readAllBytes(), StandardCharsets.UTF_8)
       finally in.close()
+    val framing = (conn.getHeaderField("Content-Length"),
+      conn.getHeaderField("Transfer-Encoding"))
     conn.disconnect()
-    (code, body)
+    (code, body, framing)
   }
+
+  /** The edge's array framing of engine elements. */
+  private def framed(elems: Seq[String], pretty: Boolean): String =
+    if (!pretty) elems.mkString("[", ",", "]")
+    else if (elems.isEmpty) "[]"
+    else elems.mkString("[\n  ", ",\n  ", "\n]")
 
   /** Path-segment encoding: percent-encode, never '+'-for-space (a
     * literal '+' in a path is not decoded as a space by clients that
@@ -519,4 +535,96 @@ class HttpArchiveServerSpec extends AnyFunSuite {
       "[\n  \"pv:alpha\",\n  \"pv:beta\",\n  \"pv:empty\",\n  \"pv:late\",\n  \"pv:off\"\n]")
   }
 
+  test("samples bodies are sent whole with a Content-Length, " +
+      "byte-identical to serveJsonSpark with and without prettyPrint; a " +
+      "repeat is a response-cache hit and encodes nothing") {
+    val lo = T0 + 50L * 60L * NS
+    val hi = T0 + 450L * 60L * NS
+    val elems = ConfiguredArchive.serveJsonSpark(spark, cfgDir, storePath,
+      "pv:alpha", lo, hi, None, loMode = Some(ArchiveReader.AtOrWidened),
+      hiMode = Some(ArchiveReader.AtOrWidened)).toVector
+    assert(elems.size > 300)
+    val hits = fixture._3.stats.responseCacheHits
+    for (pretty <- Seq(false, true)) {
+      val url = s"$base/1/samples/${enc("pv:alpha")}?start=$lo&end=$hi" +
+        (if (pretty) "&prettyPrint" else "")
+      val encoded = graft.archive.DecodedRowCache.encodedElements.get
+      val (code, body, (length, chunked)) = getWithHeaders(url)
+      assert(code == 200)
+      assert(body == framed(elems, pretty))
+      assert(length == body.getBytes(StandardCharsets.UTF_8).length.toString)
+      assert(chunked == null)
+      // the second framing of the same rows re-encodes none of them
+      if (pretty)
+        assert(graft.archive.DecodedRowCache.encodedElements.get == encoded)
+      val hits0 = hits.get
+      assert(getWithHeaders(url) == (code, body, (length, chunked)))
+      assert(hits.get == hits0 + 1, "the repeat must hit the response cache")
+      assert(graft.archive.DecodedRowCache.encodedElements.get == encoded)
+    }
+    // the downsample fast path drains within the cap: sent whole too
+    val (c4, b4, (l4, t4)) = getWithHeaders(
+      s"$base/1/samples/${enc("pv:alpha")}?start=$lo&end=$hi&m4=10")
+    assert(c4 == 200 && t4 == null &&
+      l4 == b4.getBytes(StandardCharsets.UTF_8).length.toString)
+  }
+
+  test("a samples body over RespCacheMaxElems streams chunked and " +
+      "byte-identical to serveJsonSpark") {
+    import spark.implicits._
+    val cfg2 = Files.createTempDirectory("httpcfgBig").toString
+    val store2 = Files.createTempDirectory("httpstoreBig").toString
+    ConfigCommands.addChannel(spark, cfg2, ChannelConfig("pv:big", "id-big",
+      "ca", enabled = true, Map(), Map()))
+    val n = 20100
+    ConfiguredArchive.materialize(spark, cfg2, store2,
+      (1 to n).map(i => ("pv:big", T0 + i * 10L * NS, i * 0.25, "", 0, 0,
+          i.toLong))
+        .toDF("channel", "ts", "value", "str_value", "severity", "status",
+          "sample_id"))
+    val running2 = HttpArchiveServer.start(spark, cfg2, store2)
+    try {
+      val lo = T0
+      val hi = T0 + (n + 1) * 10L * NS
+      val elems = ConfiguredArchive.serveJsonSpark(spark, cfg2, store2,
+        "pv:big", lo, hi, None, loMode = Some(ArchiveReader.AtOrWidened),
+        hiMode = Some(ArchiveReader.AtOrWidened)).toVector
+      assert(elems.size == n)
+      for (pretty <- Seq(false, true)) {
+        val (code, body, (length, chunked)) = getWithHeaders(
+          s"http://localhost:${running2.port}" +
+          s"${HttpArchiveServer.ContextPath}/1/samples/pv:big" +
+          s"?start=$lo&end=$hi" + (if (pretty) "&prettyPrint" else ""))
+        assert(code == 200)
+        assert(length == null && chunked == "chunked")
+        assert(body == framed(elems, pretty))
+      }
+    } finally running2.stop()
+  }
+
+  test("the response cache is bounded by bytes, least recently used " +
+      "evicted first") {
+    val body = Array.fill[Byte](100)(1)
+    val w = HttpArchiveServer.BodyLru.weight(body)
+    val bound = 3 * w
+    val lru = new HttpArchiveServer.BodyLru[String](bound)
+    Seq("a", "b", "c").foreach { k =>
+      lru.put(k, body)
+      assert(lru.bytes <= bound)
+    }
+    assert(lru.bytes == bound)
+    assert(lru.get("a").isDefined) // a re-request: a is now the newest
+    lru.put("d", body)
+    assert(lru.bytes <= bound)
+    assert(lru.get("b").isEmpty, "the least recently used entry is evicted")
+    assert(Seq("a", "c", "d").forall(lru.get(_).isDefined))
+    lru.put("e", Array.fill[Byte](250)(2))
+    assert(lru.bytes <= bound)
+    assert(lru.get("c").isEmpty && lru.get("a").isEmpty &&
+      lru.get("d").isDefined && lru.get("e").isDefined)
+    // a body larger than the whole bound is not cached and evicts nothing
+    lru.put("huge", new Array[Byte](bound.toInt))
+    assert(lru.get("huge").isEmpty && lru.get("d").isDefined)
+    assert(lru.bytes <= bound)
+  }
 }

@@ -1040,6 +1040,20 @@ class PipelineSpec extends AnyFunSuite {
       == Seq((98L, 99L)))                      // hot clique gone, real pair kept
   }
 
+  test("image near-dup pairs leave nothing in the CacheManager") {
+    import graft.pipeline.Multimodal
+    implicit val s: SparkSession = spark
+    val px = Array.tabulate(64)(i => (i % 8) * 7 + (i / 8) * 13)
+    val rows = (1L to 3L).map(id =>
+      Multimodal.MediaRow(id, "image/png", 0, Multimodal.PngCodec.encode(8, 8, px)))
+    val hashes = Multimodal.imageDHash(rows.toDF()).toDF()
+    spark.catalog.clearCache()
+    (1 to 2).foreach { _ =>
+      assert(Multimodal.imageNearDupPairs(hashes).count() == 3L)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("bpeTrain learns multi-round merges and stops when pairs run out") {
     val d = docs((1L, "abab abab", "en"))
     // round 1: (a,b) ×4 beats (b,a) ×2; round 2: (ab,ab) ×2;
