@@ -149,9 +149,10 @@ object ConfigCommands {
 
   /** The config log, `_config/v{N}.json`: every version the complete
     * state ([[StateLog]]). Its memo matters here — the serving edge
-    * reads the state two or three times per HTTP request, and
-    * re-parsing a 1000-channel JSON log per read was measurable against
-    * the request latency floor.
+    * reads the state once per HTTP request
+    * ([[ConfiguredArchive.Snapshot]]), and re-parsing a 1000-channel
+    * JSON log per read was measurable against the request latency
+    * floor.
     */
   private val log = new StateLog[ConfigState]("_config",
     ConfigState(0L, Nil, Nil), memoMax = 1024, toJson, fromJson,

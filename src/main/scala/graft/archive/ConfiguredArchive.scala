@@ -35,6 +35,55 @@ class ChannelDisabledException(name: String)
   */
 object ConfiguredArchive {
 
+  /** One request's view of the archive: the config log's head and the
+    * store's head, each resolved ONCE. The serving reads of a request
+    * (the HTTP response-memo key, the typed decision, the channel's
+    * config and the direct serve's manifest) all come from it, so a
+    * memoized body is built from the versions its key names, and a
+    * request pays one head probe per log ([[VersionLog]]) instead of
+    * one per read. A version published after the snapshot is seen by
+    * the next request. The engine fallbacks still resolve the latest
+    * versions themselves.
+    *
+    * `manifest` is the head manifest of a [[ManifestBackend]] store
+    * (None for an empty store and for other backends); `storeVersion`
+    * is its version, or [[StoreBackend.metaVersion]] for other
+    * backends.
+    */
+  private[graft] final case class Snapshot(configPath: String,
+      storePath: String, backend: StoreBackend,
+      config: ConfigCommands.ConfigState, storeVersion: Option[Long],
+      manifest: Option[ManifestStore.Manifest]) {
+
+    /** The store's head resolved again, the config kept — the direct
+      * serves' retry after a vacuum deleted a file this version names. */
+    def refreshStore(spark: SparkSession): Snapshot = {
+      val (v, m) = storeHead(spark, storePath, backend)
+      copy(storeVersion = v, manifest = m)
+    }
+
+    /** What a response built from this snapshot is memoized under:
+      * None when the store has no cheap version (no safe key). */
+    def memoKey: Option[(StoreBackend, String, String, Long, Long)] =
+      storeVersion.map((backend, configPath, storePath, config.version, _))
+  }
+
+  private[graft] def snapshot(spark: SparkSession, configPath: String,
+                              storePath: String,
+                              backend: StoreBackend): Snapshot = {
+    val (v, m) = storeHead(spark, storePath, backend)
+    Snapshot(configPath, storePath, backend,
+      ConfigCommands.state(spark, configPath), v, m)
+  }
+
+  private def storeHead(spark: SparkSession, storePath: String,
+                        backend: StoreBackend)
+      : (Option[Long], Option[ManifestStore.Manifest]) =
+    if (backend eq ManifestBackend) {
+      val m = ManifestStore.latestManifest(spark, storePath)
+      (m.map(_.version), m)
+    } else (backend.metaVersion(spark, storePath), None)
+
   /** Resolve names → data ids for the enabled channel set and key the
     * frame by the id (rides the `channel` column so the cascade, the
     * stores, and the server work unchanged). Unknown and disabled
@@ -435,14 +484,25 @@ object ConfiguredArchive {
                 loMode: Option[ArchiveReader.LimitMode] = None,
                 hiMode: Option[ArchiveReader.LimitMode] = None,
                 refuseDisabled: Boolean = false): Iterator[String] =
+    serveJson(spark, snapshot(spark, configPath, storePath, backend), name,
+      startNs, endNs, count, loMode, hiMode, refuseDisabled)
+
+  /** [[serveJson]] through one request's [[Snapshot]]. */
+  private[graft] def serveJson(spark: SparkSession, snap: Snapshot,
+                               name: String, startNs: Long, endNs: Long,
+                               count: Option[Long],
+                               loMode: Option[ArchiveReader.LimitMode],
+                               hiMode: Option[ArchiveReader.LimitMode],
+                               refuseDisabled: Boolean): Iterator[String] =
     // single-segment scalar serves answer from driver-side manifest-
     // pruned row-group reads — zero Spark jobs (the cold-path latency
     // fix); anything out of that envelope falls back to the engine.
     // Byte-identity between the two paths is gated by DirectServeSpec.
-    DirectServe.tryServe(spark, configPath, storePath, name, startNs,
-        endNs, count, backend, loMode, hiMode, refuseDisabled)
-      .getOrElse(serveJsonSpark(spark, configPath, storePath, name,
-        startNs, endNs, count, backend, loMode, hiMode, refuseDisabled))
+    DirectServe.tryServe(spark, snap, name, startNs, endNs, count, loMode,
+        hiMode, refuseDisabled)
+      .getOrElse(serveJsonSpark(spark, snap.configPath, snap.storePath,
+        name, startNs, endNs, count, snap.backend, loMode, hiMode,
+        refuseDisabled))
 
   /** The DataFrame serve path — [[serveJson]] without the direct-read
     * dispatch; the fallback for out-of-envelope requests and the
@@ -662,14 +722,23 @@ object ConfiguredArchive {
                      startNs: Long, endNs: Long, count: Option[Long],
                      backend: StoreBackend = ManifestBackend,
                      refuseDisabled: Boolean = false): Iterator[String] =
+    serveJsonTyped(spark, snapshot(spark, configPath, storePath, backend),
+      name, startNs, endNs, count, refuseDisabled)
+
+  /** [[serveJsonTyped]] through one request's [[Snapshot]]. */
+  private[archive] def serveJsonTyped(spark: SparkSession, snap: Snapshot,
+                                      name: String, startNs: Long,
+                                      endNs: Long, count: Option[Long],
+                                      refuseDisabled: Boolean)
+      : Iterator[String] =
     // raw-level typed serves answer from driver-side direct reads
     // (DirectServeTyped — zero Spark jobs); decimated-level plans and
     // out-of-envelope stores run the engine. Byte-identity gated by
     // DirectServeTypedSpec.
-    DirectServeTyped.tryServe(spark, configPath, storePath, name,
-        startNs, endNs, count, backend, refuseDisabled)
-      .getOrElse(serveJsonTypedSpark(spark, configPath, storePath, name,
-        startNs, endNs, count, backend, refuseDisabled))
+    DirectServeTyped.tryServe(spark, snap, name, startNs, endNs, count,
+        refuseDisabled)
+      .getOrElse(serveJsonTypedSpark(spark, snap.configPath, snap.storePath,
+        name, startNs, endNs, count, snap.backend, refuseDisabled))
 
   /** The DataFrame typed serve — [[serveJsonTyped]] without the
     * direct-read dispatch; the fallback and the parity oracle.
@@ -693,8 +762,14 @@ object ConfiguredArchive {
 
   private[archive] def resolveServable(spark: SparkSession,
                                        configPath: String, name: String,
+                                       refuseDisabled: Boolean): ChannelConfig =
+    resolveServable(ConfigCommands.state(spark, configPath), name,
+      refuseDisabled)
+
+  private[archive] def resolveServable(config: ConfigCommands.ConfigState,
+                                       name: String,
                                        refuseDisabled: Boolean): ChannelConfig = {
-    val cfg = ConfigCommands.state(spark, configPath).config(name)
+    val cfg = config.config(name)
       .getOrElse(throw new NoSuchChannelException(name))
     if (refuseDisabled && !cfg.enabled)
       throw new ChannelDisabledException(name)

@@ -64,21 +64,6 @@ object DirectServe {
     */
   private[archive] val LimitReach: Long = 2048L * 86400L * 1000000000L
 
-  /** The memoized manifest at a version — shared with the typed path.
-    * Eviction happens OUTSIDE the mapping function (CHM forbids
-    * mutating other mappings from inside computeIfAbsent).
-    */
-  private[archive] def manifestAt(spark: SparkSession, storePath: String,
-                                  version: Long): ManifestStore.Manifest = {
-    val key = (storePath, version)
-    val hit = manifestMemo.get(key)
-    if (hit != null) return hit
-    val m = ManifestStore.readManifest(spark, storePath, version)
-    if (manifestMemo.size > 256) manifestMemo.clear()
-    manifestMemo.put(key, m)
-    m
-  }
-
   /** Entry path → absolute data path (manifest entries are
     * root-relative). */
   private[archive] def resolveDataPath(root: String, p: String): String =
@@ -105,14 +90,12 @@ object DirectServe {
     }
   }
 
-  private val manifestMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), ManifestStore.Manifest]()
   private val levelStatesMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, String), Seq[LevelState]]()
 
   // a store deleted and recreated at the same path restarts version
   // numbering — (path, version) keys would serve the DEAD store's
-  // manifest; the manifest log confirms the regression and purges us
+  // level states; the manifest log confirms the regression and purges us
   ManifestStore.log.onRegression(invalidateStore)
 
   /** One channel's rows in one file as the decoded-rows cache holds
@@ -174,7 +157,8 @@ object DirectServe {
     * (only possible when the file aged past the vacuum GRACE while the
     * request ran — [[ManifestStore.vacuum]]'s reference protection
     * covers anything younger). On a missing file the serve purges the
-    * store's memos, re-resolves the LATEST version, and retries once —
+    * store's memos, re-resolves the store's LATEST version
+    * ([[ConfiguredArchive.Snapshot.refreshStore]]), and retries once —
     * the fresh manifest no longer references the deleted file.
     */
   def tryServe(spark: SparkSession, configPath: String, storePath: String,
@@ -184,36 +168,46 @@ object DirectServe {
                loMode: Option[LimitMode],
                hiMode: Option[LimitMode],
                refuseDisabled: Boolean): Option[Iterator[String]] =
-    try tryServeOnce(spark, configPath, storePath, name, startNs, endNs,
-      count, backend, loMode, hiMode, refuseDisabled)
+    tryServe(spark,
+      ConfiguredArchive.snapshot(spark, configPath, storePath, backend),
+      name, startNs, endNs, count, loMode, hiMode, refuseDisabled)
+
+  /** [[tryServe]] at one request's snapshot. */
+  private[graft] def tryServe(spark: SparkSession,
+               snap: ConfiguredArchive.Snapshot,
+               name: String, startNs: Long, endNs: Long,
+               count: Option[Long],
+               loMode: Option[LimitMode],
+               hiMode: Option[LimitMode],
+               refuseDisabled: Boolean): Option[Iterator[String]] =
+    try tryServeOnce(spark, snap, name, startNs, endNs, count, loMode,
+      hiMode, refuseDisabled)
     catch {
       case _: java.io.FileNotFoundException =>
-        invalidateStore(storePath)
-        tryServeOnce(spark, configPath, storePath, name, startNs, endNs,
-          count, backend, loMode, hiMode, refuseDisabled)
+        invalidateStore(snap.storePath)
+        tryServeOnce(spark, snap.refreshStore(spark), name, startNs, endNs,
+          count, loMode, hiMode, refuseDisabled)
     }
 
   /** Drop this JVM's cached planning metadata and decoded rows for one
     * store — the missing-file re-resolve path, and the purge on a
     * version regression (a store deleted and recreated at its path). */
   private[archive] def invalidateStore(storePath: String): Unit = {
-    manifestMemo.keySet.removeIf(_._1 == storePath)
     levelStatesMemo.keySet.removeIf(_._1 == storePath)
     DecodedRowCache.purge(storePath)
   }
 
-  private def tryServeOnce(spark: SparkSession, configPath: String,
-               storePath: String,
+  private def tryServeOnce(spark: SparkSession,
+               snap: ConfiguredArchive.Snapshot,
                name: String, startNs: Long, endNs: Long,
                count: Option[Long],
-               backend: StoreBackend,
                loMode: Option[LimitMode],
                hiMode: Option[LimitMode],
                refuseDisabled: Boolean): Option[Iterator[String]] = {
-    if (!(backend eq ManifestBackend)) return None
-    val version = ManifestStore.latestVersion(spark, storePath)
-      .getOrElse(return None)
-    val manifest = manifestAt(spark, storePath, version)
+    // None for an empty store and for backends other than the manifest
+    val manifest = snap.manifest.getOrElse(return None)
+    val storePath = snap.storePath
+    val version = manifest.version
     val schema = manifest.schema
     val names = schema.fieldNames.toSet
     // scalar stores only: the typed union serves through serveJsonTyped
@@ -226,7 +220,7 @@ object DirectServe {
 
     // same config resolution (and the same typed refusals) as the
     // DataFrame path
-    val cfg = ConfiguredArchive.resolveServable(spark, configPath, name,
+    val cfg = ConfiguredArchive.resolveServable(snap.config, name,
       refuseDisabled)
     val channel = cfg.channelDataId
     val allowed = cfg.levels.keySet + 0L
@@ -306,11 +300,18 @@ object DirectServe {
                                   lo: Option[Long], hi: Long,
                                   backend: StoreBackend,
                                   refuseDisabled: Boolean)
+      : Option[IndexedSeq[(Long, java.lang.Double)]] =
+    tryRawRows(spark,
+      ConfiguredArchive.snapshot(spark, configPath, storePath, backend),
+      name, lo, hi, refuseDisabled)
+
+  /** [[tryRawRows]] at one request's snapshot. */
+  private[archive] def tryRawRows(spark: SparkSession,
+                                  snap: ConfiguredArchive.Snapshot,
+                                  name: String, lo: Option[Long], hi: Long,
+                                  refuseDisabled: Boolean)
       : Option[IndexedSeq[(Long, java.lang.Double)]] = {
-    if (!(backend eq ManifestBackend)) return None
-    val version = ManifestStore.latestVersion(spark, storePath)
-      .getOrElse(return None)
-    val manifest = manifestAt(spark, storePath, version)
+    val manifest = snap.manifest.getOrElse(return None)
     val schema = manifest.schema
     val names = schema.fieldNames.toSet
     if (names.contains("vtype") || !names.contains("channel") ||
@@ -319,9 +320,9 @@ object DirectServe {
     if (schema("value").dataType != DoubleType ||
         schema("ts").dataType != LongType ||
         schema("channel").dataType != StringType) return None
-    val cfg = ConfiguredArchive.resolveServable(spark, configPath, name,
+    val cfg = ConfiguredArchive.resolveServable(snap.config, name,
       refuseDisabled)
-    val ctx = new Ctx(spark.sparkContext.hadoopConfiguration, storePath,
+    val ctx = new Ctx(spark.sparkContext.hadoopConfiguration, snap.storePath,
       cfg.channelDataId)
     try {
       val entries = manifest.files.filter(_.levelSec == 0L)

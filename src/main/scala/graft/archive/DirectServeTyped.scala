@@ -92,26 +92,36 @@ object DirectServeTyped {
                name: String, startNs: Long, endNs: Long,
                count: Option[Long], backend: StoreBackend,
                refuseDisabled: Boolean): Option[Iterator[String]] =
-    // vacuum race: re-resolve the latest version and retry once on a
-    // missing data file (see DirectServe.tryServe)
-    try tryServeOnce(spark, configPath, storePath, name, startNs, endNs,
-      count, backend, refuseDisabled)
+    tryServe(spark,
+      ConfiguredArchive.snapshot(spark, configPath, storePath, backend),
+      name, startNs, endNs, count, refuseDisabled)
+
+  /** [[tryServe]] at one request's snapshot. */
+  private[archive] def tryServe(spark: SparkSession,
+               snap: ConfiguredArchive.Snapshot,
+               name: String, startNs: Long, endNs: Long,
+               count: Option[Long],
+               refuseDisabled: Boolean): Option[Iterator[String]] =
+    // vacuum race: re-resolve the store's latest version and retry once
+    // on a missing data file (see DirectServe.tryServe)
+    try tryServeOnce(spark, snap, name, startNs, endNs, count,
+      refuseDisabled)
     catch {
       case _: java.io.FileNotFoundException =>
-        DirectServe.invalidateStore(storePath)
-        tryServeOnce(spark, configPath, storePath, name, startNs, endNs,
-          count, backend, refuseDisabled)
+        DirectServe.invalidateStore(snap.storePath)
+        tryServeOnce(spark, snap.refreshStore(spark), name, startNs, endNs,
+          count, refuseDisabled)
     }
 
-  private def tryServeOnce(spark: SparkSession, configPath: String,
-               storePath: String,
+  private def tryServeOnce(spark: SparkSession,
+               snap: ConfiguredArchive.Snapshot,
                name: String, startNs: Long, endNs: Long,
-               count: Option[Long], backend: StoreBackend,
+               count: Option[Long],
                refuseDisabled: Boolean): Option[Iterator[String]] = {
-    if (!(backend eq ManifestBackend)) return None
-    val version = ManifestStore.latestVersion(spark, storePath)
-      .getOrElse(return None)
-    val manifest = DirectServe.manifestAt(spark, storePath, version)
+    // None for an empty store and for backends other than the manifest
+    val manifest = snap.manifest.getOrElse(return None)
+    val storePath = snap.storePath
+    val version = manifest.version
     val schema = manifest.schema
     val names = schema.fieldNames.toSet
     if (!names.contains("vtype") || !names.contains("channel") ||
@@ -120,7 +130,7 @@ object DirectServeTyped {
     if (schema("ts").dataType != LongType ||
         schema("channel").dataType != StringType ||
         schema("vtype").dataType != StringType) return None
-    val cfg = ConfiguredArchive.resolveServable(spark, configPath, name,
+    val cfg = ConfiguredArchive.resolveServable(snap.config, name,
       refuseDisabled)
     val channel = cfg.channelDataId
     val allowed = cfg.levels.keySet + 0L

@@ -158,23 +158,13 @@ object HttpArchiveServer {
             registryDir: Option[String] = None,
             serverId: String = "graft",
             serverName: String = "graft"): Running = {
-    // typed-union stores (the `vtype` discriminator on the raw level)
-    // serve the FULL 21-type wire format — the reference has exactly
-    // one serving path (serializeSampleToJsonV1 on typed samples);
-    // the scalar path is this engine's simplification for
-    // scalar-double stores. Re-detected per store version: a server
-    // started before the store is populated (or a transient read
-    // failure) must not pin the scalar path forever, so only a
-    // SUCCESSFUL detection is memoized, keyed on the backend's
-    // metaVersion like the level-state memo.
-    def typed: Boolean = detectTyped(spark, storePath, backend)
     val stats = new Stats
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext(ContextPath, (ex: HttpExchange) =>
       try {
         stats.requests.incrementAndGet()
-        handle(spark, configPath, storePath, backend, typed, ex,
-          refuseDisabled, stats)
+        handle(spark, configPath, storePath, backend, ex, refuseDisabled,
+          stats)
       } catch {
         case e: Throwable =>
           // last-resort 500 — contract errors are mapped before this
@@ -224,21 +214,35 @@ object HttpArchiveServer {
     Running(server, pool, stats, registration)
   }
 
-  /** Typed-layout detection, memoized per (backend, store, version):
-    * the version check is one driver-side metadata read, and a failed
-    * detection (store not yet populated) is NOT memoized, so the next
-    * request re-detects instead of serving the wrong wire format
-    * forever. A backend without cheap versions re-detects every time.
+  /** Whether the snapshot's store is a typed-union store (the `vtype`
+    * discriminator): those serve the FULL 21-type wire format — the
+    * reference has exactly one serving path (serializeSampleToJsonV1 on
+    * typed samples); the scalar path is this engine's simplification
+    * for scalar-double stores. Decided per request from the snapshot,
+    * so a store populated, or deleted and recreated in the other
+    * layout, after the server started serves its own format on the
+    * next request. A manifest store answers from the head manifest's
+    * schema (parsed once per version). Other backends probe a read of
+    * the raw level; only a SUCCESSFUL probe is memoized, keyed on the
+    * snapshot's version, and a backend without cheap versions
+    * re-probes every time.
     */
+  private def detectTyped(spark: SparkSession,
+                          snap: ConfiguredArchive.Snapshot): Boolean =
+    if (snap.backend eq ManifestBackend)
+      snap.manifest.exists(_.schema.fieldNames.contains("vtype"))
+    else probeTyped(spark, snap)
+
   private val typedMemo = new java.util.concurrent.ConcurrentHashMap[
     (StoreBackend, String, Long), java.lang.Boolean]()
 
-  private def detectTyped(spark: SparkSession, storePath: String,
-                          backend: StoreBackend): Boolean = {
+  private def probeTyped(spark: SparkSession,
+                         snap: ConfiguredArchive.Snapshot): Boolean = {
+    val (backend, storePath) = (snap.backend, snap.storePath)
     def probe: Option[Boolean] =
       try Some(backend.read(spark, storePath, 0L).columns.contains("vtype"))
       catch { case _: Throwable => None }
-    backend.metaVersion(spark, storePath) match {
+    snap.storeVersion match {
       case Some(v) =>
         val key = (backend, storePath, v)
         val hit = typedMemo.get(key)
@@ -255,8 +259,8 @@ object HttpArchiveServer {
 
   private def handle(spark: SparkSession, configPath: String,
                      storePath: String, backend: StoreBackend,
-                     typed: => Boolean, ex: HttpExchange,
-                     refuseDisabled: Boolean, stats: Stats): Unit = {
+                     ex: HttpExchange, refuseDisabled: Boolean,
+                     stats: Stats): Unit = {
     if (ex.getRequestMethod != "GET") { sendError(ex, 405, "GET only"); return }
     // RAW path: getPath percent-decodes, which would split an encoded
     // '/' inside a channel name into path segments — the reference
@@ -264,27 +268,29 @@ object HttpArchiveServer {
     val rawPath = ex.getRequestURI.getRawPath
     val rest = rawPath.stripPrefix(ContextPath)
     val params = queryParams(ex)
+    // each data endpoint reads one version of each log
+    def snap =
+      ConfiguredArchive.snapshot(spark, configPath, storePath, backend)
     rest match {
       case "" | "/" => sendJson(ex,
         """[{"key":1,"name":"Graft","description":"Spark Graft Archive"}]""")
       case p if p.startsWith("/1/samples/") =>
-        samples(spark, configPath, storePath, backend, typed, ex,
-          decodePath(p.stripPrefix("/1/samples/")), params, refuseDisabled,
-          stats)
+        samples(spark, snap, ex, decodePath(p.stripPrefix("/1/samples/")),
+          params, refuseDisabled, stats)
       case p if p.startsWith("/1/stats/") =>
-        statsPanel(spark, configPath, storePath, backend, typed, ex,
-          decodePath(p.stripPrefix("/1/stats/")), params, refuseDisabled)
+        statsPanel(spark, snap, ex, decodePath(p.stripPrefix("/1/stats/")),
+          params, refuseDisabled)
       case p if p.startsWith("/1/derived/") =>
-        derived(spark, configPath, storePath, backend, typed, ex,
-          decodePath(p.stripPrefix("/1/derived/")), params, refuseDisabled)
+        derived(spark, snap, ex, decodePath(p.stripPrefix("/1/derived/")),
+          params, refuseDisabled)
       case p if p.startsWith("/1/spectrum/") =>
-        spectrumPanel(spark, configPath, storePath, backend, typed, ex,
+        spectrumPanel(spark, snap, ex,
           decodePath(p.stripPrefix("/1/spectrum/")), params, refuseDisabled)
       case p if p.startsWith("/1/cusum/") =>
-        cusumPanel(spark, configPath, storePath, backend, typed, ex,
-          decodePath(p.stripPrefix("/1/cusum/")), params, refuseDisabled)
+        cusumPanel(spark, snap, ex, decodePath(p.stripPrefix("/1/cusum/")),
+          params, refuseDisabled)
       case "/1/staleness" =>
-        stalenessPanel(spark, configPath, storePath, backend, ex, params)
+        stalenessPanel(spark, snap, ex, params)
       case p if p.startsWith("/1/channels-by-pattern/") =>
         val glob = decodePath(p.stripPrefix("/1/channels-by-pattern/"))
         listChannels(spark, configPath, ex, params,
@@ -326,6 +332,14 @@ object HttpArchiveServer {
 
     /** The counted total, never above the bound. */
     def bytes: Long = synchronized(total)
+
+    def removeIf(p: K => Boolean): Unit = synchronized {
+      val it = map.entrySet.iterator
+      while (it.hasNext) {
+        val e = it.next()
+        if (p(e.getKey)) { total -= BodyLru.weight(e.getValue); it.remove() }
+      }
+    }
   }
 
   private[graft] object BodyLru {
@@ -343,23 +357,27 @@ object HttpArchiveServer {
   /** Entries of each panel memo (stats, spectrum, staleness, cusum). */
   private val RespCacheMaxEntries = 1024
 
+  /** The store and config versions a memoized response was built
+    * from ([[ConfiguredArchive.Snapshot.memoKey]]). */
+  private type Versions = (StoreBackend, String, String, Long, Long)
+
   /** Response cache for the chart-UI polling pattern (a panel
     * re-requesting the same channel/range at 1 Hz): the framed body of
     * a completed response, keyed by the FULL request (`prettyPrint`
-    * included) plus both the store's metaVersion and the config log's
-    * version — any commit, retention pass, or config change bumps a
-    * version and the stale entry simply stops being addressable. Only
-    * version-capable backends cache (no version = no safe
-    * invalidation), and only bodies sent whole (the unbounded-raw
-    * firehose keeps streaming uncached).
+    * included) plus the store's and the config log's versions in the
+    * request's snapshot, the versions the body was built from — any
+    * commit, retention pass, or config change bumps a version and the
+    * stale entry simply stops being addressable. Only version-capable
+    * backends cache (no version = no safe invalidation), and only
+    * bodies sent whole (the unbounded-raw firehose keeps streaming
+    * uncached).
     */
-  private val respMemo = new BodyLru[(StoreBackend, String, String, Long,
-    Long, String, Long, Long, Option[Long], Boolean, Boolean,
-    Option[(String, Int)], Boolean)](RespCacheMaxBytes)
+  private val respMemo = new BodyLru[(Versions, String, Long, Long,
+    Option[Long], Boolean, Boolean, Option[(String, Int)], Boolean)](
+    RespCacheMaxBytes)
 
-  private def samples(spark: SparkSession, configPath: String,
-                      storePath: String, backend: StoreBackend,
-                      typed: => Boolean, ex: HttpExchange, channel: String,
+  private def samples(spark: SparkSession, snap: ConfiguredArchive.Snapshot,
+                      ex: HttpExchange, channel: String,
                       params: Map[String, String],
                       refuseDisabled: Boolean, stats: Stats): Unit = {
     stats.samplesRequests.incrementAndGet()
@@ -404,7 +422,7 @@ object HttpArchiveServer {
     if (lttbK.isDefined && m4K.isDefined) {
       sendError(ex, 400, "lttb and m4 are mutually exclusive"); return
     }
-    val isTyped = typed
+    val isTyped = detectTyped(spark, snap)
     if ((lttbK.isDefined || m4K.isDefined) && isTyped) {
       sendError(ex, 400, "downsampling is not supported on typed stores")
       return
@@ -412,13 +430,9 @@ object HttpArchiveServer {
     val downsample: Option[(String, Int)] =
       lttbK.flatten.map(("lttb", _)).orElse(m4K.flatten.map(("m4", _)))
     val pretty = params.contains("prettyPrint")
-    // cache probe: both versions are driver-side metadata reads
-    val cacheKey = backend.metaVersion(spark, storePath).map { mv =>
-      (backend, configPath, storePath,
-        ConfigCommands.state(spark, configPath).version, mv, channel,
-        start.get, end.get, count.flatten, isTyped, refuseDisabled,
-        downsample, pretty)
-    }
+    // both versions come from the request's snapshot
+    val cacheKey = snap.memoKey.map((_, channel, start.get, end.get,
+      count.flatten, isTyped, refuseDisabled, downsample, pretty))
     val hit = cacheKey.flatMap(respMemo.get)
     if (hit.isDefined) {
       stats.responseCacheHits.incrementAndGet()
@@ -429,8 +443,8 @@ object HttpArchiveServer {
     // reducers), zero Spark jobs; out-of-envelope stores fall through
     def fastPoints(k: Int, f: (IndexedSeq[(Long, java.lang.Double)], Int)
         => Vector[(Long, Double)]): Option[Iterator[String]] =
-      DirectServe.tryRawRows(spark, configPath, storePath, channel,
-          Some(start.get), end.get, backend, refuseDisabled)
+      DirectServe.tryRawRows(spark, snap, channel, Some(start.get), end.get,
+          refuseDisabled)
         .map(rows => f(rows, k).iterator.map(p =>
           DirectServe.jsonOf(p._1, p._2)))
     val it =
@@ -438,9 +452,10 @@ object HttpArchiveServer {
         if (lttbK.isDefined) {
           fastPoints(lttbK.flatten.get, (rows, k) =>
             DirectPanels.lttb(rows, start.get, end.get, k)).getOrElse {
-            val df = ConfiguredArchive.queryLttb(spark, configPath,
-                storePath, channel, start.get, end.get,
-                lttbK.flatten.get, backend, refuseDisabled = refuseDisabled)
+            val df = ConfiguredArchive.queryLttb(spark, snap.configPath,
+                snap.storePath, channel, start.get, end.get,
+                lttbK.flatten.get, snap.backend,
+                refuseDisabled = refuseDisabled)
               .withColumn("severity", lit(0)).withColumn("status", lit(0))
               .orderBy("ts")
             ArchiveServer.serializedIterator(JsonV1.serializeRaw(df),
@@ -449,9 +464,9 @@ object HttpArchiveServer {
         } else if (m4K.isDefined) {
           fastPoints(m4K.flatten.get, (rows, k) =>
             DirectPanels.m4Points(rows, start.get, end.get, k)).getOrElse {
-            val m = ConfiguredArchive.queryM4(spark, configPath,
-              storePath, channel, start.get, end.get, m4K.flatten.get,
-              backend, refuseDisabled = refuseDisabled)
+            val m = ConfiguredArchive.queryM4(spark, snap.configPath,
+              snap.storePath, channel, start.get, end.get, m4K.flatten.get,
+              snap.backend, refuseDisabled = refuseDisabled)
             // the distinct time-ordered corner points
             // (Analytics.m4Points — shared with the byte-parity spec)
             val pts = Analytics.m4Points(m)
@@ -461,15 +476,12 @@ object HttpArchiveServer {
               Some(4L * m4K.flatten.get))
           }
         } else if (isTyped)
-          ConfiguredArchive.serveJsonTyped(spark, configPath, storePath,
-            channel, start.get, end.get, count.flatten, backend,
-            refuseDisabled = refuseDisabled)
+          ConfiguredArchive.serveJsonTyped(spark, snap, channel, start.get,
+            end.get, count.flatten, refuseDisabled)
         else
-          ConfiguredArchive.serveJson(spark, configPath, storePath, channel,
-            start.get, end.get, count.flatten, backend,
-            loMode = Some(ArchiveReader.AtOrWidened),
-            hiMode = Some(ArchiveReader.AtOrWidened),
-            refuseDisabled = refuseDisabled)
+          ConfiguredArchive.serveJson(spark, snap, channel, start.get,
+            end.get, count.flatten, Some(ArchiveReader.AtOrWidened),
+            Some(ArchiveReader.AtOrWidened), refuseDisabled)
       }
       catch {
         case _: NoSuchChannelException => sendError(ex, 404, "not found"); return
@@ -485,8 +497,8 @@ object HttpArchiveServer {
         case _: NoStoredDataException => Iterator.empty[String]
       }
     // a body sent whole is cached; anything larger streamed uncached
-    for (body <- sendJsonArray(ex, it, pretty); k <- cacheKey)
-      respMemo.put(k, body)
+    sendJsonArray(ex, it, pretty,
+      body => cacheKey.foreach(respMemo.put(_, body)))
   }
 
   /** `GET <ctx>/1/derived/<chanA>?other=<chanB>&op=add|sub|mul|div&
@@ -502,9 +514,8 @@ object HttpArchiveServer {
     * construction), so the array collects in one job like the
     * count-driven samples path.
     */
-  private def derived(spark: SparkSession, configPath: String,
-                      storePath: String, backend: StoreBackend,
-                      typed: => Boolean, ex: HttpExchange, channel: String,
+  private def derived(spark: SparkSession, snap: ConfiguredArchive.Snapshot,
+                      ex: HttpExchange, channel: String,
                       params: Map[String, String],
                       refuseDisabled: Boolean): Unit = {
     if (channel.isEmpty) { sendError(ex, 404, "not found"); return }
@@ -529,7 +540,7 @@ object HttpArchiveServer {
         ConfiguredArchive.DerivedOps.keys.toSeq.sorted.mkString(", "))
       return
     }
-    if (typed) {
+    if (detectTyped(spark, snap)) {
       sendError(ex, 400, "derived channels are not supported on typed stores")
       return
     }
@@ -550,18 +561,18 @@ object HttpArchiveServer {
         // sources read fast — both resolve through the config so the
         // 404/403 matrix is path-independent
         val fast = for {
-          a <- DirectServe.tryRawRows(spark, configPath, storePath,
-            channel, None, end.get, backend, refuseDisabled)
-          b <- DirectServe.tryRawRows(spark, configPath, storePath,
-            other, None, end.get, backend, refuseDisabled)
+          a <- DirectServe.tryRawRows(spark, snap, channel, None, end.get,
+            refuseDisabled)
+          b <- DirectServe.tryRawRows(spark, snap, other, None, end.get,
+            refuseDisabled)
         } yield DirectPanels.derived(a, b,
             ConfiguredArchive.DerivedOpsD(op), start.get, end.get,
             step.get)
           .iterator.map(p => DirectServe.jsonOf(p._1, p._2))
         fast.getOrElse {
-          val df = ConfiguredArchive.queryDerived(spark, configPath,
-              storePath, channel, other, op, start.get, end.get, step.get,
-              backend, refuseDisabled = refuseDisabled)
+          val df = ConfiguredArchive.queryDerived(spark, snap.configPath,
+              snap.storePath, channel, other, op, start.get, end.get,
+              step.get, snap.backend, refuseDisabled = refuseDisabled)
             .withColumn("severity", lit(0)).withColumn("status", lit(0))
             .orderBy("ts")
           ArchiveServer.serializedIterator(JsonV1.serializeRaw(df),
@@ -629,12 +640,10 @@ object HttpArchiveServer {
     * answers `{"channel":…,"samples":0}`.
     */
   private val statsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (StoreBackend, String, String, Long, Long, String, Long, Long,
-      Boolean), String]()
+    (Versions, String, Long, Long, Boolean), String]()
 
-  private def statsPanel(spark: SparkSession, configPath: String,
-                         storePath: String, backend: StoreBackend,
-                         typed: => Boolean, ex: HttpExchange,
+  private def statsPanel(spark: SparkSession,
+                         snap: ConfiguredArchive.Snapshot, ex: HttpExchange,
                          channel: String, params: Map[String, String],
                          refuseDisabled: Boolean): Unit = {
     if (channel.isEmpty) { sendError(ex, 404, "not found"); return }
@@ -648,27 +657,24 @@ object HttpArchiveServer {
     }
     // scalar-value percentiles over a typed-union store would silently
     // rank enum codes and drop string samples — refuse, like lttb/m4
-    if (typed) {
+    if (detectTyped(spark, snap)) {
       sendError(ex, 400, "stats is not supported on typed stores"); return
     }
     // the panel IS the 1 Hz polling pattern the response cache exists
     // for: one row per request, keyed like respMemo on both versions
-    val cacheKey = backend.metaVersion(spark, storePath).map { mv =>
-      (backend, configPath, storePath,
-        ConfigCommands.state(spark, configPath).version, mv, channel,
-        start.get, end.get, refuseDisabled)
-    }
+    val cacheKey = snap.memoKey.map((_, channel, start.get, end.get,
+      refuseDisabled))
     val hit = cacheKey.flatMap(k => Option(statsMemo.get(k)))
     if (hit.isDefined) { sendJson(ex, hit.get); return }
     val row: Option[(Long, Double, Double, Double, Double, Double)] =
-      try DirectServe.tryRawRows(spark, configPath, storePath, channel,
-          Some(start.get), end.get, backend, refuseDisabled) match {
+      try DirectServe.tryRawRows(spark, snap, channel, Some(start.get),
+          end.get, refuseDisabled) match {
         // driver-side percentile fold (DirectPanels.stats) — zero
         // Spark jobs on the panel's cold path
         case Some(rows) => DirectPanels.stats(rows)
         case None =>
-          ConfiguredArchive.queryStats(spark, configPath, storePath,
-              channel, start.get, end.get, backend,
+          ConfiguredArchive.queryStats(spark, snap.configPath,
+              snap.storePath, channel, start.get, end.get, snap.backend,
               refuseDisabled = refuseDisabled)
             .select("n_samples", "v_min", "p50", "p90", "p99", "v_max")
             .collect().headOption
@@ -715,8 +721,7 @@ object HttpArchiveServer {
   private val MaxSpectrumPeriods = 64
 
   private val spectrumMemo = new java.util.concurrent.ConcurrentHashMap[
-    (StoreBackend, String, String, Long, Long, String, Long, Long,
-      String, Boolean), String]()
+    (Versions, String, Long, Long, String, Boolean), String]()
 
   /** `GET <ctx>/1/spectrum/<channel>?start=S&end=E[&periods=600,3600]`
     * — the oscillation panel: power at each candidate period (seconds,
@@ -724,10 +729,10 @@ object HttpArchiveServer {
     * inclusive range, plus the dominant period. 400/404/403 mirror the
     * stats endpoint; no samples in range answers an empty panel.
     */
-  private def spectrumPanel(spark: SparkSession, configPath: String,
-                            storePath: String, backend: StoreBackend,
-                            typed: => Boolean, ex: HttpExchange,
-                            channel: String, params: Map[String, String],
+  private def spectrumPanel(spark: SparkSession,
+                            snap: ConfiguredArchive.Snapshot,
+                            ex: HttpExchange, channel: String,
+                            params: Map[String, String],
                             refuseDisabled: Boolean): Unit = {
     if (channel.isEmpty) { sendError(ex, 404, "not found"); return }
     val start = params.get("start").flatMap(_.toLongOption)
@@ -738,7 +743,7 @@ object HttpArchiveServer {
     if (start.get < 0L || end.get < start.get) {
       sendError(ex, 400, "require 0 <= start <= end"); return
     }
-    if (typed) {
+    if (detectTyped(spark, snap)) {
       sendError(ex, 400, "spectrum is not supported on typed stores"); return
     }
     val periodsSec: Seq[Long] = params.get("periods") match {
@@ -759,25 +764,22 @@ object HttpArchiveServer {
         }
         parsed.flatten.distinct.sorted
     }
-    val cacheKey = backend.metaVersion(spark, storePath).map { mv =>
-      (backend, configPath, storePath,
-        ConfigCommands.state(spark, configPath).version, mv, channel,
-        start.get, end.get, periodsSec.mkString(","), refuseDisabled)
-    }
+    val cacheKey = snap.memoKey.map((_, channel, start.get, end.get,
+      periodsSec.mkString(","), refuseDisabled))
     val hit = cacheKey.flatMap(k => Option(spectrumMemo.get(k)))
     if (hit.isDefined) { sendJson(ex, hit.get); return }
     val rows: Seq[(Long, Long, Double)] =
-      try DirectServe.tryRawRows(spark, configPath, storePath, channel,
-          Some(start.get), end.get, backend, refuseDisabled) match {
+      try DirectServe.tryRawRows(spark, snap, channel, Some(start.get),
+          end.get, refuseDisabled) match {
         // driver-side projection fold (DirectPanels.spectrum) — the
         // serving contract's end-inclusive bound is the engine's +1
         case Some(raw) => DirectPanels.spectrum(raw, start.get,
           if (end.get == Long.MaxValue) end.get else end.get + 1,
           periodsSec.map(_ * 1000000000L))
         case None =>
-          ConfiguredArchive.querySpectrum(spark, configPath, storePath,
-              channel, start.get, end.get,
-              periodsSec.map(_ * 1000000000L), backend,
+          ConfiguredArchive.querySpectrum(spark, snap.configPath,
+              snap.storePath, channel, start.get, end.get,
+              periodsSec.map(_ * 1000000000L), snap.backend,
               refuseDisabled = refuseDisabled)
             .select("period_s", "n", "power")
             .orderBy("period_s")
@@ -812,7 +814,7 @@ object HttpArchiveServer {
   }
 
   private val stalenessMemo = new java.util.concurrent.ConcurrentHashMap[
-    (StoreBackend, String, String, Long, Long, Long, Long), String]()
+    (Versions, Long, Long), String]()
 
   /** `GET <ctx>/1/staleness?asOf=NS[&grace=G]` — the fleet ops panel:
     * every configured channel's last arrival, median cadence, expected
@@ -821,8 +823,8 @@ object HttpArchiveServer {
     * nothing stored reports samples 0 and stale. Missing/invalid
     * `asOf` or a non-positive integer `grace` → 400.
     */
-  private def stalenessPanel(spark: SparkSession, configPath: String,
-                             storePath: String, backend: StoreBackend,
+  private def stalenessPanel(spark: SparkSession,
+                             snap: ConfiguredArchive.Snapshot,
                              ex: HttpExchange,
                              params: Map[String, String]): Unit = {
     val asOf = params.get("asOf").flatMap(_.toLongOption)
@@ -834,15 +836,11 @@ object HttpArchiveServer {
     if (grace.isEmpty || grace.get < 1L) {
       sendError(ex, 400, "grace must be a positive integer"); return
     }
-    val cacheKey = backend.metaVersion(spark, storePath).map { mv =>
-      (backend, configPath, storePath,
-        ConfigCommands.state(spark, configPath).version, mv,
-        asOf.get, grace.get)
-    }
+    val cacheKey = snap.memoKey.map((_, asOf.get, grace.get))
     val hit = cacheKey.flatMap(k => Option(stalenessMemo.get(k)))
     if (hit.isDefined) { sendJson(ex, hit.get); return }
-    val rows = ConfiguredArchive.queryStaleness(spark, configPath,
-        storePath, asOf.get, grace.get, backend)
+    val rows = ConfiguredArchive.queryStaleness(spark, snap.configPath,
+        snap.storePath, asOf.get, grace.get, snap.backend)
       .orderBy("channel").collect()
     def optLong(r: org.apache.spark.sql.Row, i: Int): String =
       if (r.isNullAt(i)) "null" else r.getLong(i).toString
@@ -862,8 +860,18 @@ object HttpArchiveServer {
   }
 
   private val cusumMemo = new java.util.concurrent.ConcurrentHashMap[
-    (StoreBackend, String, String, Long, Long, String, Long, Long,
-      Long, Long, Boolean), String]()
+    (Versions, String, Long, Long, Long, Long, Boolean), String]()
+
+  // a store deleted and recreated at its path restarts version
+  // numbering, so its memoized bodies go once the manifest log
+  // confirms the regression
+  ManifestStore.log.onRegression { path =>
+    respMemo.removeIf(_._1._3 == path)
+    statsMemo.keySet.removeIf(_._1._3 == path)
+    spectrumMemo.keySet.removeIf(_._1._3 == path)
+    stalenessMemo.keySet.removeIf(_._1._3 == path)
+    cusumMemo.keySet.removeIf(_._1._3 == path)
+  }
 
   /** `GET <ctx>/1/cusum/<channel>?start=S&end=E[&slack=K][&threshold=H]`
     * — the mean-shift panel: two-sided CUSUM excursion counts, first
@@ -871,9 +879,8 @@ object HttpArchiveServer {
     * range (target self-calibrates to the window mean). 400/404/403
     * mirror the stats endpoint.
     */
-  private def cusumPanel(spark: SparkSession, configPath: String,
-                         storePath: String, backend: StoreBackend,
-                         typed: => Boolean, ex: HttpExchange,
+  private def cusumPanel(spark: SparkSession,
+                         snap: ConfiguredArchive.Snapshot, ex: HttpExchange,
                          channel: String, params: Map[String, String],
                          refuseDisabled: Boolean): Unit = {
     if (channel.isEmpty) { sendError(ex, 404, "not found"); return }
@@ -885,7 +892,7 @@ object HttpArchiveServer {
     if (start.get < 0L || end.get < start.get) {
       sendError(ex, 400, "require 0 <= start <= end"); return
     }
-    if (typed) {
+    if (detectTyped(spark, snap)) {
       sendError(ex, 400, "cusum is not supported on typed stores"); return
     }
     val slack = params.get("slack").map(_.toDoubleOption)
@@ -898,27 +905,25 @@ object HttpArchiveServer {
     if (threshold.isEmpty || threshold.get <= 0.0 || !threshold.get.isFinite) {
       sendError(ex, 400, "threshold must be a positive number"); return
     }
-    val cacheKey = backend.metaVersion(spark, storePath).map { mv =>
-      (backend, configPath, storePath,
-        ConfigCommands.state(spark, configPath).version, mv, channel,
-        start.get, end.get, math.round(slack.get * 1e6),
-        math.round(threshold.get * 1e6), refuseDisabled)
-    }
+    val cacheKey = snap.memoKey.map((_, channel, start.get, end.get,
+      math.round(slack.get * 1e6), math.round(threshold.get * 1e6),
+      refuseDisabled))
     val hit = cacheKey.flatMap(k => Option(cusumMemo.get(k)))
     if (hit.isDefined) { sendJson(ex, hit.get); return }
     val row: Option[(Long, Long, Long, Option[Long], Option[Long],
         Double, Double)] =
-      try DirectServe.tryRawRows(spark, configPath, storePath, channel,
-          Some(start.get), end.get, backend, refuseDisabled) match {
+      try DirectServe.tryRawRows(spark, snap, channel, Some(start.get),
+          end.get, refuseDisabled) match {
         // driver-side exact-integer CUSUM fold (DirectPanels.cusum);
         // end-inclusive serving bound = the engine's +1
         case Some(raw) => DirectPanels.cusum(raw, start.get,
           if (end.get == Long.MaxValue) end.get else end.get + 1,
           slack.get, threshold.get)
         case None =>
-          ConfiguredArchive.queryCusum(spark, configPath, storePath,
-              channel, start.get, end.get, slack.get, threshold.get,
-              backend, refuseDisabled = refuseDisabled)
+          ConfiguredArchive.queryCusum(spark, snap.configPath,
+              snap.storePath, channel, start.get, end.get, slack.get,
+              threshold.get,
+              snap.backend, refuseDisabled = refuseDisabled)
             .select("n_samples", "n_hi", "n_lo", "t_first_hi",
               "t_first_lo", "peak_hi", "peak_lo")
             .collect().headOption
@@ -975,13 +980,15 @@ object HttpArchiveServer {
 
   /** A JSON array response. The elements drain first: when they all
     * fit in `RespCacheMaxElems` elements and `RespCacheMaxBytes` chars,
-    * the framed body goes out as one fixed-length write and is returned
-    * for the caller to cache; otherwise what was drained and the rest
-    * stream chunked and None is returned. An element that throws while
-    * draining fails the request before any header is sent.
+    * the framed body is passed to `whole` (the caller caches it there,
+    * BEFORE the client can see the response and ask again) and goes
+    * out as one fixed-length write; otherwise what was drained and the
+    * rest stream chunked. An element that throws while draining fails
+    * the request before any header is sent.
     */
   private def sendJsonArray(ex: HttpExchange, elems: Iterator[String],
-                            pretty: Boolean): Option[Array[Byte]] = {
+                            pretty: Boolean,
+                            whole: Array[Byte] => Unit = _ => ()): Unit = {
     val head = new scala.collection.mutable.ArrayBuffer[String]
     var chars = 0L
     while (elems.hasNext && head.length < RespCacheMaxElems &&
@@ -990,16 +997,14 @@ object HttpArchiveServer {
       head += e
       chars += e.length
     }
-    if (elems.hasNext) {
-      streamJsonArray(ex, head.iterator ++ elems, pretty)
-      None
-    } else {
+    if (elems.hasNext) streamJsonArray(ex, head.iterator ++ elems, pretty)
+    else {
       val sb = new java.lang.StringBuilder(
         (chars + 4L * head.length + 4L).min(Int.MaxValue - 16L).toInt)
       frameJsonArray(head.iterator, pretty, s => sb.append(s))
       val body = sb.toString.getBytes(StandardCharsets.UTF_8)
+      whole(body)
       sendJsonBytes(ex, body)
-      Some(body)
     }
   }
 

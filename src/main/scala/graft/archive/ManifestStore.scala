@@ -187,7 +187,7 @@ object ManifestStore {
   private[graft] val log = new VersionLog("_manifests")
 
   private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    VersionLog.fs(spark.sparkContext.hadoopConfiguration, path)
 
   /** Entry paths are stored RELATIVE to the table root so the store can
     * be copied/moved/re-addressed wholesale (DistCp, bucket migration)
@@ -613,7 +613,8 @@ object ManifestStore {
     */
   private def statsFor(spark: SparkSession, root: String, staged: String,
                        levelFallback: Long): Seq[FileEntry] = {
-    val f = fs(spark, staged)
+    val f = new Path(staged)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one driver-side listing of the staged dir: existence check +
     // per-file byte sizes (keyed by scheme-less path)
     val sizes = listFilesUnder(f, new Path(staged))

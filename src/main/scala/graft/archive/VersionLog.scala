@@ -1,6 +1,6 @@
 package graft.archive
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
 
 /** One `v%012d.json` version log per store root, in directory
   * `<root>/<subdir>` — the layout shared by the manifest log
@@ -26,6 +26,19 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    recreated, or the version pruned or vacuumed while this JVM was
   *    not looking) it falls back to [[list]].
   *
+  * What a probe costs: on a quiet log, two `FileSystem.exists` calls
+  * (the head and head+1) and nothing else; on the local file system
+  * they go to the raw one beneath the checksums, a plain file check.
+  * Each root's directory
+  * `Path` and the version-file `Path`s it probes are built once and
+  * kept (parsing a Hadoop `Path` is a `java.net.URI` parse, which cost
+  * more than the checks themselves), and file names are zero-padded by
+  * hand rather than through `java.util.Formatter`. The kept `Path`s
+  * are names only, so a root deleted and recreated reuses them; both
+  * maps are bounded. An HTTP request resolves each of its two logs
+  * (manifest and config) once ([[ConfiguredArchive.Snapshot]]), so a
+  * steady-state `/1/samples` request costs four existence checks.
+  *
   * Regression rule: a root deleted and recreated at the same path
   * restarts version numbering, so every (root, version)-keyed memo in
   * the process would address the DEAD log's content. The recorded max
@@ -36,10 +49,38 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   */
 private[graft] final class VersionLog(subdir: String) {
 
-  private def dir(root: String): Path = new Path(s"$root/$subdir")
+  /** A root's log directory and the version-file paths probed in it. */
+  private final class Dir(root: String) {
+    val path = new Path(s"$root/$subdir")
+    private val files =
+      new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Path]()
+    def file(v: Long): Path = {
+      val hit = files.get(v)
+      if (hit != null) hit
+      else {
+        // a reader probes the head and head+1, so old entries are dead
+        if (files.size >= VersionLog.MaxPaths) files.clear()
+        val p = new Path(path, VersionLog.fileName(v))
+        files.put(v, p)
+        p
+      }
+    }
+  }
 
-  private def file(root: String, v: Long): Path =
-    new Path(dir(root), f"v$v%012d.json")
+  private val dirs = new java.util.concurrent.ConcurrentHashMap[String, Dir]()
+
+  private def dirOf(root: String): Dir = {
+    val hit = dirs.get(root)
+    if (hit != null) hit
+    else {
+      if (dirs.size >= VersionLog.MaxRoots) dirs.clear()
+      dirs.computeIfAbsent(root, new Dir(_))
+    }
+  }
+
+  private def dir(root: String): Path = dirOf(root).path
+
+  private def file(root: String, v: Long): Path = dirOf(root).file(v)
 
   private val maxSeen =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -79,12 +120,19 @@ private[graft] final class VersionLog(subdir: String) {
   def head(f: FileSystem, root: String): Option[Long] = {
     val seen = maxSeen.get(root)
     val h = if (seen == null) 0L else seen.longValue
+    // the local file system's `exists` builds a full file status (a
+    // qualified Path, the access time); the raw one beneath its
+    // checksums asks the file itself, and sees the same version files
+    val probe = f match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case _ => f
+    }
     // version 1 may be pruned, so an empty observation proves nothing
     // about where a log created since then starts
-    if (h == 0L || !f.exists(file(root, h))) list(f, root).lastOption
+    if (h == 0L || !probe.exists(file(root, h))) list(f, root).lastOption
     else {
       var v = h
-      while (f.exists(file(root, v + 1))) v += 1
+      while (probe.exists(file(root, v + 1))) v += 1
       if (v > h) observe(f, root, v)
       Some(v)
     }
@@ -168,6 +216,39 @@ private[graft] final class VersionLog(subdir: String) {
     catch { case _: java.io.IOException => () }
 }
 
+private[graft] object VersionLog {
+
+  private val MaxRoots = 1024
+  private val MaxPaths = 64
+
+  /** `v%012d.json` for a version `v >= 0`, without `java.util.Formatter`. */
+  def fileName(v: Long): String = {
+    val digits = java.lang.Long.toString(v)
+    val sb = new java.lang.StringBuilder(18).append('v')
+    var pad = 12 - digits.length
+    while (pad > 0) { sb.append('0'); pad -= 1 }
+    sb.append(digits).append(".json").toString
+  }
+
+  private val fileSystems = new java.util.concurrent.ConcurrentHashMap[
+    String, (org.apache.hadoop.conf.Configuration, FileSystem)]()
+
+  /** The file system of a log's `root` under `conf`, resolved once per
+    * root: `Path.getFileSystem` parses the root and looks the user up
+    * in Hadoop's file-system cache on every call. */
+  def fs(conf: org.apache.hadoop.conf.Configuration,
+         root: String): FileSystem = {
+    val hit = fileSystems.get(root)
+    if (hit != null && (hit._1 eq conf)) hit._2
+    else {
+      val f = new Path(root).getFileSystem(conf)
+      if (fileSystems.size >= MaxRoots) fileSystems.clear()
+      fileSystems.put(root, (conf, f))
+      f
+    }
+  }
+}
+
 /** A version log whose every version carries the COMPLETE state — the
   * channel-config log ([[ConfigCommands]]) and the user log
   * ([[UserStore]]). Old versions serve no reconstruction purpose, so
@@ -203,7 +284,7 @@ private[graft] final class StateLog[S](subdir: String, empty: S,
 
   private def fs(spark: org.apache.spark.sql.SparkSession,
                  root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    VersionLog.fs(spark.sparkContext.hadoopConfiguration, root)
 
   private def at(f: FileSystem, root: String, v: Long): S = {
     val hit = memo.get((root, v))

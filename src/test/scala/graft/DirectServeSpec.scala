@@ -366,4 +366,31 @@ class DirectServeSpec extends AnyFunSuite {
     assert(ConfiguredArchive.serveJson(spark, cfgDir, store, "pv:g",
       T0, T0 + 3 * Day, None, ManifestBackend, exact, exact).toVector == slow)
   }
+
+  test("a serve through a snapshot resolved before a commit returns the " +
+      "older version's bytes; the next request returns the new ones") {
+    val cfgDir = Files.createTempDirectory("dscfgs").toString
+    val store = Files.createTempDirectory("dsstores").toString
+    ConfigCommands.addChannel(spark, cfgDir, ChannelConfig("pv:s", "id-s",
+      "ca", enabled = true, Map(), Map()))
+    ConfiguredArchive.materialize(spark, cfgDir, store,
+      frame((1 to 600).map(i => row("pv:s", i, Some(i * 0.5)))))
+    val (lo, hi) = (T0 + 500 * 60L * NS, T0 + 900 * 60L * NS)
+    def spark0(): Vector[String] = ConfiguredArchive.serveJsonSpark(spark,
+      cfgDir, store, "pv:s", lo, hi, None, ManifestBackend, Widened,
+      Widened).toVector
+    val snap = ConfiguredArchive.snapshot(spark, cfgDir, store,
+      ManifestBackend)
+    val older = spark0()
+    ConfiguredArchive.ingestRaw(spark, cfgDir, store,
+      frame((601 to 700).map(i => row("pv:s", i, Some(i * 0.5)))))
+    val newer = spark0()
+    assert(newer.size == older.size + 100)
+    assert(DirectServe.tryServe(spark, snap, "pv:s", lo, hi, None, Widened,
+      Widened, refuseDisabled = false).map(_.toVector).contains(older))
+    assert(ConfiguredArchive.serveJson(spark, snap, "pv:s", lo, hi, None,
+      Widened, Widened, refuseDisabled = false).toVector == older)
+    assert(ConfiguredArchive.serveJson(spark, cfgDir, store, "pv:s", lo, hi,
+      None, ManifestBackend, Widened, Widened).toVector == newer)
+  }
 }

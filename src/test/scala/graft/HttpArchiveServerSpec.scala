@@ -471,6 +471,105 @@ class HttpArchiveServerSpec extends AnyFunSuite {
     } finally running2.stop()
   }
 
+  test("a store path recreated in the other layout serves its own wire " +
+      "format on the next request, both ways") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val cfg = Files.createTempDirectory("httpcfgR").toString
+    val storeDir = Files.createTempDirectory("httpstoreR").toFile
+    val store = storeDir.toString
+    org.apache.commons.io.FileUtils.deleteDirectory(storeDir)
+    val typedAll = graft.core.TypedSamples.fromEvents(spark,
+      "/root/testdata/sf0.001")
+    val name = typedAll.select("channel").distinct()
+      .collect().map(_.getString(0)).min
+    ConfigCommands.addChannel(spark, cfg, ChannelConfig(name, s"tid-$name",
+      "ca", enabled = true, Map(), Map(3600L -> 0L)))
+    val lo = T0 + 10L * 86400L * NS
+    val hi = lo + 86400L * NS
+    def scalar(v: Double) = (1 to 100).map(i => (name, lo + i * 60L * NS,
+        v * i, "", 0, 0, i.toLong))
+      .toDF("channel", "ts", "value", "str_value", "severity", "status",
+        "sample_id")
+    def recreate(build: => Unit, bumps: Int): Long = {
+      org.apache.commons.io.FileUtils.deleteDirectory(storeDir)
+      build
+      (1 to bumps).foreach(_ => graft.archive.ManifestStore.commitEntries(
+        spark, store, Nil,
+        graft.archive.ManifestStore.latestManifest(spark, store).get.schema))
+      graft.archive.ManifestStore.latestVersion(spark, store).get
+    }
+    val running = HttpArchiveServer.start(spark, cfg, store)
+    try {
+      val url = s"${running.baseUrl}/1/samples/${enc(name)}" +
+        s"?start=$lo&end=$hi"
+      def scalarBody = ConfiguredArchive.serveJson(spark, cfg, store, name,
+        lo, hi, None).mkString("[", ",", "]")
+      def typedBody = ConfiguredArchive.serveJsonTyped(spark, cfg, store,
+        name, lo, hi, None).mkString("[", ",", "]")
+      val types = "\"type\":\"([A-Za-z]+)\"".r
+      // no store yet: a configured channel with nothing stored
+      assert(get(url) == (200, "[]"))
+      val v1 = recreate(ConfiguredArchive.materialize(spark, cfg, store,
+        scalar(1.0)), bumps = 2)
+      val b1 = get(url)
+      assert(b1 == (200, scalarBody))
+      assert(types.findAllMatchIn(b1._2).map(_.group(1)).toSet ==
+        Set("double"))
+      val v2 = recreate(ConfiguredArchive.materializeTyped(spark, cfg,
+        store, typedAll.where(col("channel") === name)), bumps = 1)
+      val b2 = get(url)
+      assert(b2 == (200, typedBody))
+      assert(types.findAllMatchIn(b2._2).map(_.group(1)).toSet.size >= 3)
+      val v3 = recreate(ConfiguredArchive.materialize(spark, cfg, store,
+        scalar(2.0)), bumps = 0)
+      // each recreate lands below the last head, so this JVM confirms
+      // a version regression rather than reading a dead version's memo
+      assert(v1 > v2 && v2 > v3, s"versions $v1, $v2, $v3")
+      val b3 = get(url)
+      assert(b3 == (200, scalarBody))
+      assert(b3 != b1 && b3._2.contains("\"value\":[200.0]"))
+    } finally running.stop()
+  }
+
+  test("a store recreated at its path never serves a memoized body of " +
+      "the dead store at the same version") {
+    import spark.implicits._
+    val cfg = Files.createTempDirectory("httpcfgM").toString
+    val storeDir = Files.createTempDirectory("httpstoreM").toFile
+    val store = storeDir.toString
+    ConfigCommands.addChannel(spark, cfg, ChannelConfig("pv:m", "id-m",
+      "ca", enabled = true, Map(), Map()))
+    def build(v: Double, bumps: Int): Long = {
+      ConfiguredArchive.materialize(spark, cfg, store, (1 to 50).map(i =>
+          ("pv:m", T0 + i * 60L * NS, v * i, "", 0, 0, i.toLong))
+        .toDF("channel", "ts", "value", "str_value", "severity", "status",
+          "sample_id"))
+      (1 to bumps).foreach(_ => graft.archive.ManifestStore.commitEntries(
+        spark, store, Nil,
+        graft.archive.ManifestStore.latestManifest(spark, store).get.schema))
+      graft.archive.ManifestStore.latestVersion(spark, store).get
+    }
+    val running = HttpArchiveServer.start(spark, cfg, store)
+    try {
+      val url = s"${running.baseUrl}/1/samples/pv:m?start=$T0" +
+        s"&end=${T0 + 60L * 60L * NS}"
+      val head = build(1.0, bumps = 2)
+      val dead = get(url)
+      org.apache.commons.io.FileUtils.deleteDirectory(storeDir)
+      assert(build(2.0, bumps = 0) < head)
+      assert(get(url)._1 == 200) // confirms the regression
+      while (graft.archive.ManifestStore.latestVersion(spark, store).get <
+          head)
+        graft.archive.ManifestStore.commitEntries(spark, store, Nil,
+          graft.archive.ManifestStore.latestManifest(spark, store).get.schema)
+      val fresh = get(url)
+      assert(fresh != dead)
+      assert(fresh == (200, ConfiguredArchive.serveJson(spark, cfg, store,
+        "pv:m", T0, T0 + 60L * 60L * NS, None).mkString("[", ",", "]")))
+    } finally running.stop()
+  }
+
   test("derived endpoint serves the calc-record series in wire format") {
     val lo = T0
     val hi = T0 + 120L * 60L * NS

@@ -59,6 +59,21 @@ class VersionLogSpec extends AnyFunSuite {
     assert(reader.list(f, r) == (1L to 6L))
   }
 
+  test("on a quiet log the probe checks the head and head+1 only; " +
+      "version file names are zero-padded to twelve digits") {
+    val f = countingFs()
+    val r = root()
+    val log = new VersionLog("_t")
+    publish(log, f, r, 1 to 3)
+    assert(log.head(f, r).contains(3L))
+    CountingFileSystem.reset()
+    assert(log.head(f, r).contains(3L))
+    assert(CountingFileSystem.checks("_t").get == 2)
+    assert(CountingFileSystem.lists.get == 0)
+    for (v <- Seq(0L, 7L, 123456789012L, 1234567890123L, Long.MaxValue))
+      assert(VersionLog.fileName(v) == f"v$v%012d.json")
+  }
+
   test("the probe falls back to a listing once the remembered head is " +
       "pruned or the log is recreated, and reports the true head") {
     val f = countingFs()
@@ -195,10 +210,74 @@ class VersionLogSpec extends AnyFunSuite {
           s"${CountingFileSystem.lists.get} times")
     } finally running.stop()
   }
+
+  test("a steady-state /1/samples request checks each version log at " +
+      "most twice, and a commit between two requests is visible to the " +
+      "second") {
+    import spark.implicits._
+    val cfg = Files.createTempDirectory("vlogsnapcfg").toString
+    val store = Files.createTempDirectory("vlogsnapstore").toString
+    ConfigCommands.addChannel(spark, cfg, ChannelConfig("pv:s", "id-s",
+      "ca", enabled = true, Map(), Map(3600L -> 0L)))
+    def rows(r: Range) = r.map(i => ("pv:s", T0 + i * 60L * NS,
+        i.toDouble, "", 0, 0, i.toLong))
+      .toDF("channel", "ts", "value", "str_value", "severity", "status",
+        "sample_id")
+    ConfiguredArchive.materialize(spark, cfg, store, rows(1 to 300))
+    spark.sparkContext.hadoopConfiguration.set("fs.vcount.impl",
+      classOf[CountingFileSystem].getName)
+    val running = HttpArchiveServer.start(spark, s"vcount:$cfg",
+      s"vcount:$store", threads = 2)
+    try {
+      def get(lo: Long, hi: Long): String = {
+        val conn = URI.create(s"${running.baseUrl}/1/samples/pv:s" +
+            s"?start=$lo&end=$hi").toURL.openConnection()
+          .asInstanceOf[HttpURLConnection]
+        try {
+          assert(conn.getResponseCode == 200)
+          new String(conn.getInputStream.readAllBytes(),
+            StandardCharsets.UTF_8)
+        } finally conn.disconnect()
+      }
+      /** (manifest-log checks, config-log checks) of one request. */
+      def checks(lo: Long, hi: Long): (Int, Int) = {
+        CountingFileSystem.reset()
+        get(lo, hi)
+        (CountingFileSystem.checks("_manifests").get,
+          CountingFileSystem.checks("_config").get)
+      }
+      val hi = T0 + 200L * 60L * NS
+      get(T0 + 10L * 60L * NS, hi) // warms the memos and the row cache
+      val hits = running.stats.responseCacheHits.get
+      // a direct serve over warm memos, then the same request again
+      val direct = checks(T0 + 20L * 60L * NS, hi)
+      assert(running.stats.responseCacheHits.get == hits)
+      val memo = checks(T0 + 20L * 60L * NS, hi)
+      assert(running.stats.responseCacheHits.get == hits + 1)
+      assert(direct._1 > 0 && direct._2 > 0,
+        "no version-file check counted: the counter is not wired")
+      for (((m, c), what) <- Seq(direct -> "direct serve",
+          memo -> "response-memo hit"))
+        assert(m <= 2 && c <= 2, s"a $what checked the manifest log $m " +
+          s"and the config log $c times")
+      // another writer (here: another root string for the same store)
+      // commits one sample past the stored history
+      val (lo, end) = (T0 + 290L * 60L * NS, T0 + 400L * 60L * NS)
+      val before = get(lo, end)
+      ConfiguredArchive.ingestRaw(spark, cfg, store, rows(350 to 350))
+      val after = get(lo, end)
+      assert(after != before)
+      assert(after.contains(s"\"time\":${T0 + 350L * 60L * NS},"))
+      assert(after == ConfiguredArchive.serveJson(spark, cfg, store, "pv:s",
+        lo, end, None).mkString("[", ",", "]"))
+    } finally running.stop()
+  }
 }
 
 /** The raw local file system under the `vcount:` scheme, counting
-  * directory listings of the `_manifests` and `_config` version logs.
+  * directory listings of the `_manifests` and `_config` version logs,
+  * and existence checks and status lookups (`open` makes one) of their
+  * version files, per log.
   */
 class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: URI = URI.create("vcount:///")
@@ -208,10 +287,23 @@ class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
       CountingFileSystem.lists.incrementAndGet()
     super.listStatus(p)
   }
+  private def check(p: Path): Unit = {
+    val parent = p.getParent
+    if (parent != null && p.getName.startsWith("v"))
+      CountingFileSystem.checks.get(parent.getName)
+        .foreach(_.incrementAndGet())
+  }
+  override def exists(p: Path): Boolean = { check(p); super.exists(p) }
+  override def getFileStatus(p: Path): FileStatus = {
+    check(p)
+    super.getFileStatus(p)
+  }
 }
 
 object CountingFileSystem {
   val Logs = Set("_manifests", "_config", "_t")
   val lists = new AtomicInteger
-  def reset(): Unit = lists.set(0)
+  val checks: Map[String, AtomicInteger] =
+    Logs.map(_ -> new AtomicInteger).toMap
+  def reset(): Unit = { lists.set(0); checks.values.foreach(_.set(0)) }
 }
