@@ -1,7 +1,6 @@
 package graft.archive
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -16,6 +15,8 @@ import org.apache.parquet.io.api.{Binary, Converter, GroupConverter,
   PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType,
+  StringType, StructType}
 
 /** Driver-side point-read serving — the cold-path latency fix for the
   * single-channel serve (the reference answers these from Cassandra
@@ -23,19 +24,29 @@ import org.apache.spark.sql.SparkSession
   * the DataFrame path pays several Spark job round trips per request,
   * ~0.4 s even on a warm session).
   *
-  * For a scalar [[ManifestBackend]] store, a single-channel request
-  * whose plan resolves to ONE segment needs no cluster at all: the
-  * manifest gives the pruned file list driver-side (level + ts-range +
-  * clustering-key range), parquet row-group stats prune inside each
-  * file, and the surviving row groups decode on the driver — the same
-  * rows a cluster read would funnel through the driver anyway, minus
-  * every job-scheduling round trip. Anything outside that envelope
-  * (typed stores, multi-segment retention fallback, non-manifest
-  * backends, more row groups than the per-request budget) falls back
-  * to the DataFrame path, so this is strictly a fast path, never a
-  * different answer — byte-identity with the Spark path is gated by
-  * DirectServeSpec across boundary modes, nulls, non-finite doubles
-  * and multi-commit duplicate timestamps.
+  * For a [[ManifestBackend]] store, a single-channel request needs no
+  * cluster at all: the manifest gives the pruned file list driver-side
+  * (level + ts-range + clustering-key range), parquet row-group stats
+  * prune inside each file, and the surviving row groups decode on the
+  * driver — the same rows a cluster read would funnel through the
+  * driver anyway, minus every job-scheduling round trip.
+  *
+  * This object holds the one row selection both direct serves share
+  * ([[Selection]]: the range scan, the two boundary lookups and the
+  * first-arrival survivor rule, by binary search over each file's
+  * ts-ascending rows), the channel scan both decoders run
+  * ([[scanChannel]]), and the vacuum retry ([[direct]]). On top of it,
+  * [[tryServe]] serves scalar stores (single-segment plans at any
+  * level, with the lo/hi boundary-mode matrix) and [[tryRawRows]] feeds
+  * the panels; [[DirectServeTyped]] serves typed-union stores and owns
+  * only their decode and wire encoding. Anything outside the envelope
+  * (multi-segment retention fallback, non-manifest backends, more row
+  * groups than the per-request budget) falls back to the DataFrame
+  * path, so this is strictly a fast path, never a different answer —
+  * byte-identity with the Spark path is gated by DirectServeSpec,
+  * DirectServeTypedSpec and DirectParityFuzzSpec across boundary
+  * modes, nulls, non-finite doubles and multi-commit duplicate
+  * timestamps.
   *
   * Scale note: this is a LATENCY path for interactive dashboards, not
   * a throughput path — per-request work is O(row groups containing the
@@ -51,16 +62,17 @@ object DirectServe {
   import ArchiveReader.{AtOrWidened, Exact, LimitMode}
 
   /** Abort signal: out of the fast path's envelope — caught by
-    * [[tryServe]] (and [[DirectServeTyped]]), which returns None so
-    * the caller falls back. */
+    * [[direct]], which returns None so the caller falls back. */
   private[archive] final class FallbackException extends RuntimeException(
     null, null, false, false)
 
-  /** The engine boundary probe's geometric reach: spans of 1, 2, …,
-    * 2048 days (4096 would exceed the 3650-day default clamp), so a
-    * boundary farther than 2048 days from the bound is NOT found —
-    * the fast paths must stop at the same distance or they would
-    * serve a sample the engine's walk never reaches.
+  /** The typed engine boundary probe's geometric reach: spans of 1, 2,
+    * …, 2048 days (4096 would exceed the 3650-day default clamp), so a
+    * boundary farther than 2048 days from the bound is NOT found — the
+    * typed fast path must stop at the same distance or it would serve
+    * a sample the engine's walk never reaches. The scalar probe's span
+    * is clamped to the distance to the channel's earliest sample, so
+    * the scalar path has no reach cap.
     */
   private[archive] val LimitReach: Long = 2048L * 86400L * 1000000000L
 
@@ -98,40 +110,58 @@ object DirectServe {
   // level states; the manifest log confirms the regression and purges us
   ManifestStore.log.onRegression(invalidateStore)
 
-  /** One channel's rows in one file as the decoded-rows cache holds
-    * them: ts-ascending in file order, column-wise. `values` is null
-    * for the ts-only planning projection, `nulls` marks null values,
-    * `sids` is null when sample_id was not decoded. Never mutated after
-    * construction.
+  /** The row view the selection reads: one channel's rows in one file,
+    * ts-ascending. `sid` is the sample_id, the duplicate-timestamp
+    * tiebreak (first arrival = min sample_id wins — the querySamples
+    * survivor rule); 0 when it was not decoded. */
+  private[archive] trait Rows {
+    def length: Int
+    def ts(i: Int): Long
+    def sid(i: Int): Long
+    /** Heap estimate, what [[DecodedRowCache]] bounds. */
+    def bytes: Long
+  }
+
+  /** Scalar rows as the decoded-rows cache holds them: column-wise.
+    * `values` is null for the ts-only planning projection, `nulls`
+    * marks null values, `sids` is null when sample_id was not decoded.
+    * Never mutated after construction.
     */
-  private[archive] final class ScalarRows(val ts: Array[Long],
-      values: Array[Double], nulls: java.util.BitSet, sids: Array[Long]) {
-    def length: Int = ts.length
+  private[archive] final class ScalarRows(val tsArr: Array[Long],
+      values: Array[Double], nulls: java.util.BitSet, sids: Array[Long])
+      extends Rows {
+    def length: Int = tsArr.length
+    def ts(i: Int): Long = tsArr(i)
     def value(i: Int): java.lang.Double =
       if (values == null || nulls.get(i)) null
       else java.lang.Double.valueOf(values(i))
-    /** sample_id, the duplicate-timestamp tiebreak (first arrival = min
-      * sample_id wins — the querySamples survivor rule); 0 when the
-      * projection doesn't decode it (planning) or the file lacks it. */
     def sid(i: Int): Long = if (sids == null) 0L else sids(i)
-    /** Heap estimate: the primitive columns and the null bitmap. */
+    /** The primitive columns and the null bitmap. */
     def bytes: Long = 64L + 8L * length *
       (1 + (if (values == null) 0 else 1) + (if (sids == null) 0 else 1)) +
       nulls.size / 8
     /** Every row's wire element ([[jsonOf]]), in row order. */
     def json: Array[String] =
       Array.tabulate(length)(i => jsonOf(ts(i), value(i)))
+    /** The same rows in `order`. */
+    def reorder(order: Array[Int]): ScalarRows = {
+      val sortedNulls = new java.util.BitSet
+      order.indices.foreach(k => if (nulls.get(order(k))) sortedNulls.set(k))
+      new ScalarRows(order.map(tsArr),
+        if (values == null) null else order.map(values), sortedNulls,
+        if (sids == null) null else order.map(sids))
+    }
   }
 
   /** A selected row: index `i` of one cached channel-file. */
-  private final class Hit(val e: DecodedRowCache.Entry[ScalarRows],
-                          val i: Int) {
+  private[archive] final class Hit[R <: Rows](
+      val e: DecodedRowCache.Entry[R], val i: Int) {
     def ts: Long = e.rows.ts(i)
     def sid: Long = e.rows.sid(i)
   }
 
   /** (ts, sample_id): the survivor order of duplicate timestamps. */
-  private val hitOrder: Ordering[Hit] = (a, b) => {
+  private def hitOrder[R <: Rows]: Ordering[Hit[R]] = (a, b) => {
     val c = java.lang.Long.compare(a.ts, b.ts)
     if (c != 0) c else java.lang.Long.compare(a.sid, b.sid)
   }
@@ -141,16 +171,26 @@ object DirectServe {
     * (the inner scan and both boundary lookups often hit the same day
     * file).
     */
-  private final class Ctx(val conf: Configuration, val root: String,
-                          val channel: String) {
+  private[archive] final class Ctx(val conf: Configuration,
+                                   val root: String, val channel: String) {
     val budget = new DecodedRowCache.Budget
+
+    /** One file's rows of this channel under `projection`, through the
+      * process-wide [[DecodedRowCache]]; `decode` reads the resolved
+      * file on a miss. */
+    def rows[R <: Rows](e: ManifestStore.FileEntry, projection: String)
+                       (decode: String => R): DecodedRowCache.Entry[R] = {
+      val file = resolveDataPath(root, e.path)
+      DecodedRowCache.entry(budget, root, file, e.bytes, channel,
+          projection) {
+        val rows = decode(file)
+        (rows, rows.bytes)
+      }
+    }
   }
 
-  /** The full fast-path serve, or None when out of envelope. Throws the
-    * SAME typed signals as the DataFrame path
-    * ([[NoSuchChannelException]], [[ChannelDisabledException]],
-    * [[NoStoredDataException]]) so HTTP error mapping stays
-    * path-independent.
+  /** A direct serve at `snap`: None when it leaves the fast path's
+    * envelope (throws [[FallbackException]]).
     *
     * Vacuum race: a concurrent maintenance process can delete a data
     * file between this request's version resolution and its page read
@@ -160,6 +200,41 @@ object DirectServe {
     * store's memos, re-resolves the store's LATEST version
     * ([[ConfiguredArchive.Snapshot.refreshStore]]), and retries once —
     * the fresh manifest no longer references the deleted file.
+    */
+  private[archive] def direct[A](spark: SparkSession,
+                                 snap: ConfiguredArchive.Snapshot)
+                                (serve: ConfiguredArchive.Snapshot => A)
+      : Option[A] = {
+    def once(s: ConfiguredArchive.Snapshot): Option[A] =
+      try Some(serve(s)) catch { case _: FallbackException => None }
+    try once(snap)
+    catch {
+      case _: java.io.FileNotFoundException =>
+        invalidateStore(snap.storePath)
+        once(snap.refreshStore(spark))
+    }
+  }
+
+  private[archive] def hasColumn(s: StructType, name: String,
+                                 t: DataType): Boolean =
+    s.fieldNames.contains(name) && s(name).dataType == t
+
+  /** The manifest of a scalar store — double `value`, long `ts`, string
+    * `channel` — or None for an empty store, a backend other than the
+    * manifest, and the typed union (served by [[DirectServeTyped]]). */
+  private def scalarManifest(snap: ConfiguredArchive.Snapshot)
+      : Option[ManifestStore.Manifest] =
+    snap.manifest.filter { m =>
+      val s = m.schema
+      !s.fieldNames.contains("vtype") && hasColumn(s, "value", DoubleType) &&
+        hasColumn(s, "ts", LongType) && hasColumn(s, "channel", StringType)
+    }
+
+  /** The full fast-path serve, or None when out of envelope. Throws the
+    * SAME typed signals as the DataFrame path
+    * ([[NoSuchChannelException]], [[ChannelDisabledException]],
+    * [[NoStoredDataException]]) so HTTP error mapping stays
+    * path-independent.
     */
   def tryServe(spark: SparkSession, configPath: String, storePath: String,
                name: String, startNs: Long, endNs: Long,
@@ -174,62 +249,25 @@ object DirectServe {
 
   /** [[tryServe]] at one request's snapshot. */
   private[graft] def tryServe(spark: SparkSession,
-               snap: ConfiguredArchive.Snapshot,
+               snap0: ConfiguredArchive.Snapshot,
                name: String, startNs: Long, endNs: Long,
                count: Option[Long],
                loMode: Option[LimitMode],
                hiMode: Option[LimitMode],
                refuseDisabled: Boolean): Option[Iterator[String]] =
-    try tryServeOnce(spark, snap, name, startNs, endNs, count, loMode,
-      hiMode, refuseDisabled)
-    catch {
-      case _: java.io.FileNotFoundException =>
-        invalidateStore(snap.storePath)
-        tryServeOnce(spark, snap.refreshStore(spark), name, startNs, endNs,
-          count, loMode, hiMode, refuseDisabled)
-    }
-
-  /** Drop this JVM's cached planning metadata and decoded rows for one
-    * store — the missing-file re-resolve path, and the purge on a
-    * version regression (a store deleted and recreated at its path). */
-  private[archive] def invalidateStore(storePath: String): Unit = {
-    levelStatesMemo.keySet.removeIf(_._1 == storePath)
-    DecodedRowCache.purge(storePath)
-  }
-
-  private def tryServeOnce(spark: SparkSession,
-               snap: ConfiguredArchive.Snapshot,
-               name: String, startNs: Long, endNs: Long,
-               count: Option[Long],
-               loMode: Option[LimitMode],
-               hiMode: Option[LimitMode],
-               refuseDisabled: Boolean): Option[Iterator[String]] = {
-    // None for an empty store and for backends other than the manifest
-    val manifest = snap.manifest.getOrElse(return None)
-    val storePath = snap.storePath
-    val version = manifest.version
-    val schema = manifest.schema
-    val names = schema.fieldNames.toSet
-    // scalar stores only: the typed union serves through serveJsonTyped
-    if (names.contains("vtype") || !names.contains("channel") ||
-        !names.contains("ts") || !names.contains("value")) return None
-    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
-    if (schema("value").dataType != DoubleType ||
-        schema("ts").dataType != LongType ||
-        schema("channel").dataType != StringType) return None
-
-    // same config resolution (and the same typed refusals) as the
-    // DataFrame path
-    val cfg = ConfiguredArchive.resolveServable(snap.config, name,
-      refuseDisabled)
-    val channel = cfg.channelDataId
-    val allowed = cfg.levels.keySet + 0L
-    val ctx = new Ctx(spark.sparkContext.hadoopConfiguration, storePath,
-      channel)
-    try {
-      val states = levelStatesOf(spark, storePath, version, manifest,
-        channel)
-      val usable = states.filter(s => allowed.contains(s.periodSec))
+    direct(spark, snap0) { snap =>
+      val manifest =
+        scalarManifest(snap).getOrElse(throw new FallbackException)
+      // same config resolution (and the same typed refusals) as the
+      // DataFrame path
+      val cfg = ConfiguredArchive.resolveServable(snap.config, name,
+        refuseDisabled)
+      val allowed = cfg.levels.keySet + 0L
+      val ctx = new Ctx(spark.sparkContext.hadoopConfiguration,
+        snap.storePath, cfg.channelDataId)
+      val usable = levelStatesOf(spark, snap.storePath, manifest.version,
+          manifest, ctx.channel)
+        .filter(s => allowed.contains(s.periodSec))
       if (usable.isEmpty) throw new NoStoredDataException(name)
       val chosen = ResolutionPlanner.selectLevel(
         usable.map(_.periodSec), startNs, endNs, count)
@@ -242,50 +280,29 @@ object DirectServe {
       // ArchiveServer.querySamples empty-segments rule)
       val segments =
         if (segments0.isEmpty) Seq((chosen, startNs, endNs)) else segments0
-      if (segments.size != 1) return None // retention fallback → engine
+      // retention fallback → engine
+      if (segments.size != 1) throw new FallbackException
       val (period, from, to) = segments.head
-      if (period != 0L &&
-          (!names.contains("mean") || schema("mean").dataType != DoubleType))
-        return None
-      val valueCol = if (period == 0L) "value" else "mean"
-
+      if (period != 0L && !hasColumn(manifest.schema, "mean", DoubleType))
+        throw new FallbackException
+      val valueCol = Some(if (period == 0L) "value" else "mean")
       val defaultMode = if (count.isEmpty) AtOrWidened else Exact
-      val effLo = loMode.getOrElse(defaultMode)
-      val effHi = hiMode.getOrElse(defaultMode)
-      val st = usable.find(_.periodSec == period)
-      val entries = manifest.files.filter(_.levelSec == period)
-
-      val rows = mutable.ArrayBuffer.empty[Hit]
-      if (effLo == Exact && effHi == Exact)
-        rows ++= rangeRows(ctx, entries, valueCol, from, to)
-      else {
-        // widened bounds exclude the edge from the inner scan — the
-        // boundary lookup serves it (the querySamples 0/1/2 matrix)
-        val lo = if (effLo == Exact) from
-                 else if (from == Long.MaxValue) from else from + 1
-        val hi = if (effHi == Exact) to
-                 else if (to == Long.MinValue) to else to - 1
-        if (lo <= hi) rows ++= rangeRows(ctx, entries, valueCol, lo, hi)
-        if (effLo == AtOrWidened && st.exists(_.earliestTs <= from))
-          rows ++= lastAtOrBefore(ctx, entries, valueCol, from)
-        if (effHi == AtOrWidened && st.exists(_.latestTs >= to))
-          rows ++= firstAtOrAfter(ctx, entries, valueCol, to)
-      }
-      // multi-commit duplicate timestamps collapse to the FIRST ARRIVAL
-      // (min sample_id) — the engine path's survivor rule
-      val sorted = rows.sorted(hitOrder)
-      val out = mutable.ArrayBuffer.empty[Hit]
-      var lastTs = Long.MinValue
-      var any = false
-      sorted.foreach { r =>
-        if (!any || r.ts != lastTs) { out += r; lastTs = r.ts; any = true }
-      }
+      val sel = new Selection(ctx.channel,
+        manifest.files.filter(_.levelSec == period), Long.MaxValue,
+        channelRows(ctx, _, valueCol))
+      val out = sel.select(from, to, loMode.getOrElse(defaultMode),
+        hiMode.getOrElse(defaultMode), usable.find(_.periodSec == period))
       // each selected row's element comes from its file's encoding,
       // made once per cached entry
-      Some(out.iterator.map(h => h.e.json(_.json)(h.i)))
-    } catch {
-      case _: FallbackException => None
+      out.map(h => h.e.json(_.json)(h.i))
     }
+
+  /** Drop this JVM's cached planning metadata and decoded rows for one
+    * store — the missing-file re-resolve path, and the purge on a
+    * version regression (a store deleted and recreated at its path). */
+  private[archive] def invalidateStore(storePath: String): Unit = {
+    levelStatesMemo.keySet.removeIf(_._1 == storePath)
+    DecodedRowCache.purge(storePath)
   }
 
   /** Raw-level rows of a config-resolved channel with `ts <= hi` (and
@@ -307,34 +324,134 @@ object DirectServe {
 
   /** [[tryRawRows]] at one request's snapshot. */
   private[archive] def tryRawRows(spark: SparkSession,
-                                  snap: ConfiguredArchive.Snapshot,
+                                  snap0: ConfiguredArchive.Snapshot,
                                   name: String, lo: Option[Long], hi: Long,
                                   refuseDisabled: Boolean)
-      : Option[IndexedSeq[(Long, java.lang.Double)]] = {
-    val manifest = snap.manifest.getOrElse(return None)
-    val schema = manifest.schema
-    val names = schema.fieldNames.toSet
-    if (names.contains("vtype") || !names.contains("channel") ||
-        !names.contains("ts") || !names.contains("value")) return None
-    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
-    if (schema("value").dataType != DoubleType ||
-        schema("ts").dataType != LongType ||
-        schema("channel").dataType != StringType) return None
-    val cfg = ConfiguredArchive.resolveServable(snap.config, name,
-      refuseDisabled)
-    val ctx = new Ctx(spark.sparkContext.hadoopConfiguration, snap.storePath,
-      cfg.channelDataId)
-    try {
-      val entries = manifest.files.filter(_.levelSec == 0L)
-      val rows = rangeRows(ctx, entries, "value",
-        lo.getOrElse(Long.MinValue), hi)
+      : Option[IndexedSeq[(Long, java.lang.Double)]] =
+    direct(spark, snap0) { snap =>
+      val manifest =
+        scalarManifest(snap).getOrElse(throw new FallbackException)
+      val cfg = ConfiguredArchive.resolveServable(snap.config, name,
+        refuseDisabled)
+      val ctx = new Ctx(spark.sparkContext.hadoopConfiguration,
+        snap.storePath, cfg.channelDataId)
+      val rows = new Selection(ctx.channel,
+          manifest.files.filter(_.levelSec == 0L), Long.MaxValue,
+          channelRows(ctx, _, Some("value")))
+        .range(lo.getOrElse(Long.MinValue), hi)
       // duplicates kept (panel multiplicity); (ts, arrival) order makes
       // equal-ts neighborhoods deterministic
-      Some(rows.sorted(hitOrder).map(h => (h.ts, h.e.rows.value(h.i)))
-        .toIndexedSeq)
-    } catch {
-      case _: FallbackException => None
+      rows.toIndexedSeq.sorted(hitOrder[ScalarRows])
+        .map(h => (h.ts, h.e.rows.value(h.i)))
     }
+
+  // ---- row selection -------------------------------------------------
+
+  /** The row selection of both direct serves over one level's manifest
+    * entries of one channel, read through `rowsOf` (the path's cached
+    * decode). Each file's slice is found by binary search over its
+    * ts-ascending rows. `reach` is how far from a widened bound its
+    * boundary sample may lie ([[LimitReach]] for typed stores,
+    * `Long.MaxValue` for scalar ones).
+    */
+  private[archive] final class Selection[R <: Rows](channel: String,
+      entries: Seq[ManifestStore.FileEntry], reach: Long,
+      rowsOf: ManifestStore.FileEntry => DecodedRowCache.Entry[R]) {
+
+    private val files = entries.filter(mayContain(_, channel))
+
+    /** Rows with `lo <= ts <= hi`, duplicates kept; each file decodes
+      * as the iterator reaches it. */
+    def range(lo: Long, hi: Long): Iterator[Hit[R]] =
+      files.iterator.filter(e => e.maxTs >= lo && e.minTs <= hi).flatMap {
+        e =>
+          val entry = rowsOf(e)
+          Iterator.range(search(entry.rows, lo, after = false),
+            search(entry.rows, hi, after = true)).map(new Hit(entry, _))
+      }
+
+    /** The rows served for `[from, to]`: with a widened bound the
+      * inner range excludes that edge and its boundary lookup serves it
+      * (the querySamples 0/1/2 matrix); duplicate timestamps then
+      * collapse to the FIRST ARRIVAL (min sample_id) — the engine
+      * path's survivor rule — in (ts, sample_id) order. `st` is the
+      * level's availability: a bound beyond it has no boundary sample.
+      */
+    def select(from: Long, to: Long, loMode: LimitMode, hiMode: LimitMode,
+               st: Option[LevelState]): Iterator[Hit[R]] = {
+      val loWide = loMode == AtOrWidened
+      val hiWide = hiMode == AtOrWidened
+      val lo = if (loWide && from != Long.MaxValue) from + 1 else from
+      val hi = if (hiWide && to != Long.MinValue) to - 1 else to
+      val hits = mutable.ArrayBuffer.empty[Hit[R]]
+      if (lo <= hi) hits ++= range(lo, hi)
+      if (loWide && st.exists(_.earliestTs <= from))
+        hits ++= boundary(from, forward = false)
+      if (hiWide && st.exists(_.latestTs >= to))
+        hits ++= boundary(to, forward = true)
+      val out = mutable.ArrayBuffer.empty[Hit[R]]
+      hits.sorted(hitOrder[R]).foreach(h =>
+        if (out.isEmpty || out.last.ts != h.ts) out += h)
+      out.iterator
+    }
+
+    /** The sample at-or-before `t` (at-or-after when `forward`) within
+      * `reach`, manifest-pruned: files that can hold one, nearest ts
+      * stat first, stopping as soon as no remaining file can beat the
+      * best hit — the walk-back probe's result without its geometric
+      * job chain. Nearer ts wins; equal ts → earlier arrival (min
+      * sample_id). The stop condition is STRICT: a file whose ts range
+      * merely ties the best may still hold an earlier arrival at the
+      * same timestamp, and a compacted file can hold same-ts rows from
+      * several source commits.
+      */
+    private def boundary(t: Long, forward: Boolean): Option[Hit[R]] = {
+      def nearer(a: Long, b: Long): Boolean = if (forward) a < b else a > b
+      // a file's ts bound nearest to t, and its other one
+      def near(e: ManifestStore.FileEntry) = if (forward) e.minTs else e.maxTs
+      def far(e: ManifestStore.FileEntry) = if (forward) e.maxTs else e.minTs
+      // the last ts within reach, saturating
+      val edge =
+        if (forward) { if (t > Long.MaxValue - reach) Long.MaxValue
+                       else t + reach }
+        else if (t < Long.MinValue + reach) Long.MinValue else t - reach
+      val it = files.filter(e => !nearer(far(e), t) && !nearer(edge, near(e)))
+        .sortBy(near)(if (forward) Ordering.Long else Ordering.Long.reverse)
+        .iterator
+      var best: Option[Hit[R]] = None
+      while (it.hasNext) {
+        val e = it.next()
+        if (best.exists(b => nearer(b.ts, near(e)))) return best
+        val entry = rowsOf(e)
+        val rows = entry.rows
+        // the row nearest t on its side, then every row at its ts
+        val step = if (forward) 1 else -1
+        var j = if (forward) search(rows, t, after = false)
+                else search(rows, t, after = true) - 1
+        if (j >= 0 && j < rows.length && !nearer(edge, rows.ts(j))) {
+          val bt = rows.ts(j)
+          while (j >= 0 && j < rows.length && rows.ts(j) == bt) {
+            val h = new Hit(entry, j)
+            if (best.forall(b => nearer(bt, b.ts) ||
+                (bt == b.ts && h.sid < b.sid))) best = Some(h)
+            j += step
+          }
+        }
+      }
+      best
+    }
+  }
+
+  /** Index of the first row with `ts >= t` (`ts > t` when `after`) in
+    * ts-ascending rows; `length` if none. */
+  private def search(rows: Rows, t: Long, after: Boolean): Int = {
+    var lo = 0; var hi = rows.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      val x = rows.ts(mid)
+      if (x < t || (after && x == t)) lo = mid + 1 else hi = mid
+    }
+    lo
   }
 
   // ---- planning ------------------------------------------------------
@@ -373,140 +490,16 @@ object DirectServe {
   private def mayContain(e: ManifestStore.FileEntry, ch: String): Boolean =
     ManifestStore.chRangeContains(e.chMin, e.chMax, ch)
 
-  // ---- row assembly --------------------------------------------------
-
-  /** Rows with `lo <= ts <= hi`, each file's slice found by binary
-    * search over its ts-ascending rows. */
-  private def rangeRows(ctx: Ctx, entries: Seq[ManifestStore.FileEntry],
-                        valueCol: String, lo: Long, hi: Long)
-      : Seq[Hit] = {
-    val out = mutable.ArrayBuffer.empty[Hit]
-    entries.filter(e => mayContain(e, ctx.channel) &&
-        e.maxTs >= lo && e.minTs <= hi)
-      .foreach { e =>
-        val entry = channelRows(ctx, e, Some(valueCol))
-        val rows = entry.rows
-        var i = firstIndexAtOrAfter(rows, lo)
-        while (i < rows.length && rows.ts(i) <= hi) {
-          out += new Hit(entry, i)
-          i += 1
-        }
-      }
-    out.toSeq
-  }
-
-  /** `h` beats `best` as the at-or-before boundary: later ts wins;
-    * equal ts → earlier arrival (min sample_id), the survivor rule. */
-  private def beatsBack(h: Hit, best: Option[Hit]): Boolean =
-    best.forall(b => h.ts > b.ts || (h.ts == b.ts && h.sid < b.sid))
-
-  private def beatsFwd(h: Hit, best: Option[Hit]): Boolean =
-    best.forall(b => h.ts < b.ts || (h.ts == b.ts && h.sid < b.sid))
-
-  /** The boundary lookup, manifest-pruned: files that can hold a
-    * sample at-or-before `t`, newest ts-stat first, stopping as soon
-    * as no remaining file can beat the best hit — the walk-back
-    * probe's result without its geometric job chain. Stop conditions
-    * are STRICT: a file whose ts range merely ties the best may still
-    * hold an earlier arrival at the same timestamp.
-    */
-  private def lastAtOrBefore(ctx: Ctx, entries: Seq[ManifestStore.FileEntry],
-                             valueCol: String, t: Long)
-      : Option[Hit] = {
-    var best: Option[Hit] = None
-    val it = entries.filter(e => mayContain(e, ctx.channel) && e.minTs <= t)
-      .sortBy(f => -f.maxTs).iterator
-    var done = false
-    while (it.hasNext && !done) {
-      val e = it.next()
-      if (best.exists(_.ts > e.maxTs)) done = true
-      else {
-        val entry = channelRows(ctx, e, Some(valueCol))
-        val rows = entry.rows
-        // all rows at the candidate boundary ts (a compacted file can
-        // hold same-ts rows from several source commits)
-        var j = lastIndexAtOrBefore(rows, t)
-        if (j >= 0) {
-          val bt = rows.ts(j)
-          while (j >= 0 && rows.ts(j) == bt) {
-            val h = new Hit(entry, j)
-            if (beatsBack(h, best)) best = Some(h)
-            j -= 1
-          }
-        }
-      }
-    }
-    best
-  }
-
-  /** Index of the LAST row with ts <= t in ts-ascending rows, -1 if
-    * none. */
-  private def lastIndexAtOrBefore(rows: ScalarRows, t: Long): Int = {
-    var lo = 0; var hi = rows.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (rows.ts(mid) <= t) lo = mid + 1 else hi = mid
-    }
-    lo - 1
-  }
-
-  /** Index of the FIRST row with ts >= t in ts-ascending rows, `length`
-    * if none. */
-  private def firstIndexAtOrAfter(rows: ScalarRows, t: Long): Int = {
-    var lo = 0; var hi = rows.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (rows.ts(mid) < t) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-
-  private def firstAtOrAfter(ctx: Ctx, entries: Seq[ManifestStore.FileEntry],
-                             valueCol: String, t: Long)
-      : Option[Hit] = {
-    var best: Option[Hit] = None
-    val it = entries.filter(e => mayContain(e, ctx.channel) && e.maxTs >= t)
-      .sortBy(_.minTs).iterator
-    var done = false
-    while (it.hasNext && !done) {
-      val e = it.next()
-      if (best.exists(_.ts < e.minTs)) done = true
-      else {
-        val entry = channelRows(ctx, e, Some(valueCol))
-        val rows = entry.rows
-        // first index with ts >= t; then all rows at that ts (see
-        // lastAtOrBefore)
-        var i = firstIndexAtOrAfter(rows, t)
-        if (i < rows.length) {
-          val bt = rows.ts(i)
-          while (i < rows.length && rows.ts(i) == bt) {
-            val h = new Hit(entry, i)
-            if (beatsFwd(h, best)) best = Some(h)
-            i += 1
-          }
-        }
-      }
-    }
-    best
-  }
-
   // ---- parquet decode ------------------------------------------------
 
   /** One channel's rows in one file through the process-wide
     * [[DecodedRowCache]] (`valueCol` None = planning: ts only,
-    * sample_id not decoded). Row groups whose channel stats exclude
-    * the channel never decode.
+    * sample_id not decoded).
     */
   private def channelRows(ctx: Ctx, e: ManifestStore.FileEntry,
                           valueCol: Option[String])
-      : DecodedRowCache.Entry[ScalarRows] = {
-    val file = resolveDataPath(ctx.root, e.path)
-    DecodedRowCache.entry(ctx.budget, ctx.root, file, e.bytes, ctx.channel,
-        valueCol.getOrElse("")) {
-      val rows = decodeFile(ctx, file, valueCol)
-      (rows, rows.bytes)
-    }
-  }
+      : DecodedRowCache.Entry[ScalarRows] =
+    ctx.rows(e, valueCol.getOrElse(""))(decodeFile(ctx, _, valueCol))
 
   /** Channel-match converter: with dictionary-encoded pages (the
     * normal case for a (channel, ts)-sorted file) the comparison runs
@@ -538,6 +531,64 @@ object DirectServe {
     override def addDouble(value: Double): Unit = { set = true; v = value }
   }
 
+  /** The materializer of one decoder: it collects the channel's rows
+    * of a file for [[scanChannel]]. */
+  private[archive] abstract class RowSink[R <: Rows]
+      extends RecordMaterializer[java.lang.Void] {
+    final def getCurrentRecord: java.lang.Void = null
+    /** The collected rows, in file order. */
+    def rows(): R
+    /** `rows` in `order`. */
+    def reorder(rows: R, order: Array[Int]): R
+  }
+
+  /** One channel's rows of one data file, ts-ascending — the scan both
+    * decoders run. The record filter drives row-group stats AND
+    * column-index page skipping inside the reader: only pages whose
+    * channel range can contain the target decode at all (parquet
+    * compares binary stats in unsigned-byte order — correct at the byte
+    * level regardless of locale, unlike a driver-side string compare).
+    * `plan` picks the projection from the file schema and the sink for
+    * it; each decoded row group is charged to the request's budget.
+    * Writers cluster a file by (channel, ts); rows that are not
+    * ts-ascending anyway are sorted stably by (ts, sample_id).
+    */
+  private[archive] def scanChannel[R <: Rows](ctx: Ctx, file: String)
+      (plan: (MessageType, Binary) => (MessageType, RowSink[R])): R = {
+    val chBin = Binary.fromString(ctx.channel)
+    val path = new Path(file)
+    val opts = HadoopReadOptions.builder(ctx.conf, path)
+      .withRecordFilter(FilterCompat.get(
+        FilterApi.eq(FilterApi.binaryColumn("channel"), chBin)))
+      .build()
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(path, ctx.conf), opts)
+    val sink = try {
+      val (proj, sink) =
+        plan(reader.getFooter.getFileMetaData.getSchema, chBin)
+      reader.setRequestedSchema(proj)
+      val io = new ColumnIOFactory().getColumnIO(proj)
+      var pages = reader.readNextFilteredRowGroup()
+      while (pages != null) {
+        val n = pages.getRowCount
+        if (n > 0) {
+          ctx.budget.decodedGroup()
+          val rr = io.getRecordReader(pages, sink)
+          var r = 0L
+          while (r < n) { rr.read(); r += 1 }
+        }
+        pages = reader.readNextFilteredRowGroup()
+      }
+      sink
+    } finally reader.close()
+    val rows = sink.rows()
+    var i = 1
+    while (i < rows.length && rows.ts(i - 1) <= rows.ts(i)) i += 1
+    if (i >= rows.length) rows
+    else sink.reorder(rows, (0 until rows.length)
+      .sortBy(j => (rows.ts(j), rows.sid(j))).toArray)
+  }
+
   /** Zero-allocation row sink: primitives land in field converters and
     * `end()` appends the row to primitive column builders iff the
     * channel matched — no per-row objects (the example
@@ -545,8 +596,8 @@ object DirectServe {
     * materialized rows to keep ~1 k).
     * Projection order: channel, ts, [value], [sample_id].
     */
-  private final class RowsMaterializer(chBin: Binary, hasValue: Boolean,
-      hasSid: Boolean) extends RecordMaterializer[java.lang.Void] {
+  private final class ScalarSink(chBin: Binary, hasValue: Boolean,
+      hasSid: Boolean) extends RowSink[ScalarRows] {
     private val ch = new ChannelConverter(chBin)
     private val ts = new LongConverter
     private val dv = new DoubleConverter
@@ -574,48 +625,17 @@ object DirectServe {
           n += 1
         }
     }
-    def getCurrentRecord: java.lang.Void = null
     def getRootConverter: GroupConverter = root
-
-    /** The decoded rows, ts-ascending. Within a file, groups are
-      * (channel, ts)-sorted by the writer — sort defensively anyway,
-      * stably by (ts, sample_id); correctness over one O(n log n). */
-    def result(): ScalarRows = {
-      val t = tsOut.result()
-      val v = if (hasValue) valueOut.result() else null
-      val s = if (hasSid) sidOut.result() else null
-      var asc = true
-      var i = 1
-      while (asc && i < t.length) { if (t(i - 1) > t(i)) asc = false; i += 1 }
-      if (asc) new ScalarRows(t, v, nulls, s)
-      else {
-        val order = (0 until t.length)
-          .sortBy(j => (t(j), if (s == null) 0L else s(j))).toArray
-        val sortedNulls = new java.util.BitSet
-        order.indices.foreach(k => if (nulls.get(order(k))) sortedNulls.set(k))
-        new ScalarRows(order.map(t), if (v == null) null else order.map(v),
-          sortedNulls, if (s == null) null else order.map(s))
-      }
-    }
+    def rows(): ScalarRows = new ScalarRows(tsOut.result(),
+      if (hasValue) valueOut.result() else null, nulls,
+      if (hasSid) sidOut.result() else null)
+    def reorder(rows: ScalarRows, order: Array[Int]): ScalarRows =
+      rows.reorder(order)
   }
 
   private def decodeFile(ctx: Ctx, file: String, valueCol: Option[String])
-      : ScalarRows = {
-    val chBin = Binary.fromString(ctx.channel)
-    val path = new Path(file)
-    // the record filter drives row-group stats AND column-index page
-    // skipping inside the reader: only pages whose channel range can
-    // contain the target decode at all (parquet compares binary stats
-    // in unsigned-byte order — correct at the byte level regardless of
-    // locale, unlike a driver-side string compare)
-    val opts = HadoopReadOptions.builder(ctx.conf, path)
-      .withRecordFilter(FilterCompat.get(
-        FilterApi.eq(FilterApi.binaryColumn("channel"), chBin)))
-      .build()
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(path, ctx.conf), opts)
-    try {
-      val fileSchema = reader.getFooter.getFileMetaData.getSchema
+      : ScalarRows =
+    scanChannel(ctx, file) { (fileSchema, chBin) =>
       if (!fileSchema.containsField("channel") ||
           !fileSchema.containsField("ts") ||
           !valueCol.forall(fileSchema.containsField))
@@ -643,23 +663,8 @@ object DirectServe {
           (valueCol.isDefined &&
             prim(2) != PrimitiveType.PrimitiveTypeName.DOUBLE))
         throw new FallbackException
-      reader.setRequestedSchema(proj)
-      val io = new ColumnIOFactory().getColumnIO(proj)
-      val mat = new RowsMaterializer(chBin, valueCol.isDefined, hasSid)
-      var pages = reader.readNextFilteredRowGroup()
-      while (pages != null) {
-        val n = pages.getRowCount
-        if (n > 0) {
-          ctx.budget.decodedGroup()
-          val rr = io.getRecordReader(pages, mat)
-          var r = 0L
-          while (r < n) { rr.read(); r += 1 }
-        }
-        pages = reader.readNextFilteredRowGroup()
-      }
-      mat.result()
-    } finally reader.close()
-  }
+      (proj, new ScalarSink(chBin, valueCol.isDefined, hasSid))
+    }
 
   // ---- wire format ---------------------------------------------------
 

@@ -3,21 +3,14 @@ package graft.archive
 import java.io.StringWriter
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter,
-  PrimitiveConverter, RecordMaterializer}
+  PrimitiveConverter}
 import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType, Type}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** [[DirectServe]] for TYPED-UNION stores — the reference's ONLY
   * serving path (every CA sample family, enum states, array elements,
@@ -28,17 +21,20 @@ import org.apache.spark.sql.SparkSession
   *
   * Envelope: raw level (the planner's choice for count-less requests
   * and most count-driven ones), ManifestBackend, the typed-union
-  * schema. Decimated-level serves and anything else falls back to the
-  * engine. Byte-identity with [[ArchiveServer.serveJsonTyped]] (the
-  * `to_json` wire) is gated by DirectServeTypedSpec over the full
-  * 21-tag synthetic frame and the EPICS migration fixture — the JSON
-  * here is written with the SAME Jackson core Spark's JacksonGenerator
-  * uses, field for field in `JsonV1.serializeTyped`'s struct order,
-  * with `to_json`'s null-field omission.
+  * schema. Decimated-level serves and anything else fall back to the
+  * engine. Row selection, the channel scan and the vacuum retry are
+  * [[DirectServe]]'s; this object owns only what is typed: the decode
+  * of a typed row ([[TRow]]) and its wire encoding. Byte-identity with
+  * [[ArchiveServer.serveJsonTyped]] (the `to_json` wire) is gated by
+  * DirectServeTypedSpec over the full 21-tag synthetic frame and the
+  * EPICS migration fixture — the JSON here is written with the SAME
+  * Jackson core Spark's JacksonGenerator uses, field for field in
+  * `JsonV1.serializeTyped`'s struct order, with `to_json`'s null-field
+  * omission.
   */
 object DirectServeTyped {
 
-  import DirectServe.LimitReach
+  import DirectServe.{FallbackException, Hit, LimitReach, hasColumn}
 
   /** One decoded typed sample — only the columns the wire format
     * serializes. Reference types: ChannelAccessSampleValueAccess.java
@@ -71,17 +67,13 @@ object DirectServeTyped {
     }
   }
 
-  /** A selected row: index `i` of one cached channel-file. */
-  private final class Hit(val e: DecodedRowCache.Entry[IndexedSeq[TRow]],
-                          val i: Int) {
-    def row: TRow = e.rows(i)
-    def ts: Long = row.ts
-  }
-
-  /** (ts, sample_id): the survivor order of duplicate timestamps. */
-  private val hitOrder: Ordering[Hit] = (a, b) => {
-    val c = java.lang.Long.compare(a.ts, b.ts)
-    if (c != 0) c else java.lang.Long.compare(a.row.sid, b.row.sid)
+  /** One channel's typed rows in one file: the selection's row view. */
+  private final class TypedRows(val rows: Array[TRow])
+      extends DirectServe.Rows {
+    def length: Int = rows.length
+    def ts(i: Int): Long = rows(i).ts
+    def sid(i: Int): Long = rows(i).sid
+    def bytes: Long = rows.iterator.map(_.bytes).sum
   }
 
   /** The full config-governed typed serve
@@ -96,160 +88,37 @@ object DirectServeTyped {
       ConfiguredArchive.snapshot(spark, configPath, storePath, backend),
       name, startNs, endNs, count, refuseDisabled)
 
-  /** [[tryServe]] at one request's snapshot. */
+  /** [[tryServe]] at one request's snapshot: both bounds widened, the
+    * boundary samples within [[LimitReach]] — exactly
+    * ArchiveServer.serveJsonTyped's assembly. */
   private[archive] def tryServe(spark: SparkSession,
-               snap: ConfiguredArchive.Snapshot,
+               snap0: ConfiguredArchive.Snapshot,
                name: String, startNs: Long, endNs: Long,
                count: Option[Long],
                refuseDisabled: Boolean): Option[Iterator[String]] =
-    // vacuum race: re-resolve the store's latest version and retry once
-    // on a missing data file (see DirectServe.tryServe)
-    try tryServeOnce(spark, snap, name, startNs, endNs, count,
-      refuseDisabled)
-    catch {
-      case _: java.io.FileNotFoundException =>
-        DirectServe.invalidateStore(snap.storePath)
-        tryServeOnce(spark, snap.refreshStore(spark), name, startNs, endNs,
-          count, refuseDisabled)
+    DirectServe.direct(spark, snap0) { snap =>
+      val manifest = snap.manifest.filter(m => hasColumn(m.schema, "vtype",
+          StringType) && hasColumn(m.schema, "ts", LongType) &&
+          hasColumn(m.schema, "channel", StringType))
+        .getOrElse(throw new FallbackException)
+      val cfg = ConfiguredArchive.resolveServable(snap.config, name,
+        refuseDisabled)
+      val ctx = new DirectServe.Ctx(spark.sparkContext.hadoopConfiguration,
+        snap.storePath, cfg.channelDataId)
+      val states = DirectServe.levelStatesOf(spark, snap.storePath,
+          manifest.version, manifest, ctx.channel)
+        .filter(s => (cfg.levels.keySet + 0L).contains(s.periodSec))
+      if (states.isEmpty) Iterator.empty
+      else if (ResolutionPlanner.selectLevel(states.map(_.periodSec),
+          startNs, endNs, count) != 0L)
+        throw new FallbackException // decimated typed serve → engine
+      else new DirectServe.Selection[TypedRows](ctx.channel,
+          manifest.files.filter(_.levelSec == 0L), LimitReach,
+          ctx.rows(_, "typed")(decodeTypedFile(ctx, _)))
+        .select(startNs, endNs, ArchiveReader.AtOrWidened,
+          ArchiveReader.AtOrWidened, states.find(_.periodSec == 0L))
+        .map(element)
     }
-
-  private def tryServeOnce(spark: SparkSession,
-               snap: ConfiguredArchive.Snapshot,
-               name: String, startNs: Long, endNs: Long,
-               count: Option[Long],
-               refuseDisabled: Boolean): Option[Iterator[String]] = {
-    // None for an empty store and for backends other than the manifest
-    val manifest = snap.manifest.getOrElse(return None)
-    val storePath = snap.storePath
-    val version = manifest.version
-    val schema = manifest.schema
-    val names = schema.fieldNames.toSet
-    if (!names.contains("vtype") || !names.contains("channel") ||
-        !names.contains("ts")) return None
-    import org.apache.spark.sql.types.{LongType, StringType}
-    if (schema("ts").dataType != LongType ||
-        schema("channel").dataType != StringType ||
-        schema("vtype").dataType != StringType) return None
-    val cfg = ConfiguredArchive.resolveServable(snap.config, name,
-      refuseDisabled)
-    val channel = cfg.channelDataId
-    val allowed = cfg.levels.keySet + 0L
-    try {
-      val states = DirectServe.levelStatesOf(spark, storePath, version,
-          manifest, channel)
-        .filter(s => allowed.contains(s.periodSec))
-      if (states.isEmpty) return Some(Iterator.empty)
-      val level = ResolutionPlanner.selectLevel(states.map(_.periodSec),
-        startNs, endNs, count)
-      if (level != 0L) return None // decimated typed serve → engine
-      val entries = manifest.files.filter(_.levelSec == 0L)
-      val conf = spark.sparkContext.hadoopConfiguration
-      // the decoded-rows cache and row-group budget shared with the
-      // scalar path: a request whose window is a real scan belongs to
-      // the engine, not the serving driver
-      val budget = new DecodedRowCache.Budget
-      def fileRows(e: ManifestStore.FileEntry)
-          : DecodedRowCache.Entry[IndexedSeq[TRow]] = {
-        val file = DirectServe.resolveDataPath(storePath, e.path)
-        DecodedRowCache.entry(budget, storePath, file, e.bytes, channel,
-            "typed") {
-          val rows = decodeTypedFile(conf, file, channel, budget)
-          (rows, rows.iterator.map(_.bytes).sum)
-        }
-      }
-      def mayContain(e: ManifestStore.FileEntry): Boolean =
-        ManifestStore.chRangeContains(e.chMin, e.chMax, channel)
-
-      // inner strict bounds + unconditional walk-back boundaries with
-      // the engine probe's geometric reach (spans 1,2,…,2048 days —
-      // 4096 > the 3650-day clamp), then ts-dedup and sort — exactly
-      // ArchiveServer.serveJsonTyped's assembly
-      val rows = mutable.ArrayBuffer.empty[Hit]
-      entries.filter(e => mayContain(e) &&
-          e.maxTs > startNs && e.minTs < endNs)
-        .foreach { e =>
-          val entry = fileRows(e)
-          entry.rows.indices.foreach { i =>
-            val ts = entry.rows(i).ts
-            if (ts > startNs && ts < endNs) rows += new Hit(entry, i)
-          }
-        }
-      val reach = LimitReach
-      // boundary tiebreak at equal ts: first arrival (min sample_id) —
-      // the engine survivor rule; stop conditions strict so a file that
-      // merely TIES the best ts still gets scanned for an earlier
-      // arrival
-      def lastAtOrBefore(t: Long): Option[Hit] = {
-        var best: Option[Hit] = None
-        val it = entries.filter(e => mayContain(e) && e.minTs <= t &&
-            e.maxTs >= t - reach)
-          .sortBy(e => -e.maxTs).iterator
-        var done = false
-        while (it.hasNext && !done) {
-          val e = it.next()
-          if (best.exists(_.ts > e.maxTs)) done = true
-          else {
-            // walk back to the boundary ts, then sweep ITS cluster only
-            val entry = fileRows(e)
-            val rs = entry.rows
-            var j = rs.length - 1
-            while (j >= 0 && rs(j).ts > t) j -= 1
-            if (j >= 0 && rs(j).ts >= t - reach) {
-              val bt = rs(j).ts
-              while (j >= 0 && rs(j).ts == bt) {
-                if (best.forall(b => bt > b.ts ||
-                    (bt == b.ts && rs(j).sid < b.row.sid)))
-                  best = Some(new Hit(entry, j))
-                j -= 1
-              }
-            }
-          }
-        }
-        best
-      }
-      def firstAtOrAfter(t: Long): Option[Hit] = {
-        var best: Option[Hit] = None
-        val it = entries.filter(e => mayContain(e) && e.maxTs >= t &&
-            e.minTs <= t + reach)
-          .sortBy(_.minTs).iterator
-        var done = false
-        while (it.hasNext && !done) {
-          val e = it.next()
-          if (best.exists(_.ts < e.minTs)) done = true
-          else {
-            val entry = fileRows(e)
-            val rs = entry.rows
-            var i = 0
-            while (i < rs.length && rs(i).ts < t) i += 1
-            if (i < rs.length && rs(i).ts <= t + reach) {
-              val bt = rs(i).ts
-              while (i < rs.length && rs(i).ts == bt) {
-                if (best.forall(b => bt < b.ts ||
-                    (bt == b.ts && rs(i).sid < b.row.sid)))
-                  best = Some(new Hit(entry, i))
-                i += 1
-              }
-            }
-          }
-        }
-        best
-      }
-      rows ++= lastAtOrBefore(startNs)
-      rows ++= firstAtOrAfter(endNs)
-      // duplicate timestamps collapse to the first arrival (min
-      // sample_id) — the engine path's survivor rule
-      val sorted = rows.sorted(hitOrder)
-      val out = mutable.ArrayBuffer.empty[Hit]
-      var lastTs = Long.MinValue
-      var any = false
-      sorted.foreach { h =>
-        if (!any || h.ts != lastTs) { out += h; lastTs = h.ts; any = true }
-      }
-      Some(out.iterator.map(element))
-    } catch {
-      case _: DirectServe.FallbackException => None
-    }
-  }
 
   // ---- typed parquet decode -----------------------------------------
 
@@ -298,40 +167,25 @@ object DirectServeTyped {
     def end(): Unit = ()
   }
 
-  /** Decode every row of `channel` in one typed-store file, in file
-    * order (ts-ascending per the write clustering, defensively
-    * sorted by the caller's merge). Missing optional columns decode
-    * as null. Row groups / pages without the channel never decode.
+  /** Decode every typed row of the channel in one typed-store file
+    * ([[DirectServe.scanChannel]]). Missing optional columns decode as
+    * null.
     */
-  private def decodeTypedFile(conf: org.apache.hadoop.conf.Configuration,
-                              file: String, channel: String,
-                              budget: DecodedRowCache.Budget)
-      : IndexedSeq[TRow] = {
-    val want = Seq("channel", "ts", "vtype", "value", "str_value",
-      "enum_value", "labels", "arr_num", "arr_str",
-      "agg_mean", "agg_min", "agg_max", "severity", "status",
-      "meta_units", "meta_precision", "meta_display_low",
-      "meta_display_high", "meta_warn_low", "meta_warn_high",
-      "meta_alarm_low", "meta_alarm_high", "sample_id")
-    val chBin = Binary.fromString(channel)
-    val path = new Path(file)
-    val opts = HadoopReadOptions.builder(conf, path)
-      .withRecordFilter(FilterCompat.get(
-        FilterApi.eq(FilterApi.binaryColumn("channel"), chBin)))
-      .build()
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
-      opts)
-    val out = mutable.ArrayBuffer.empty[TRow]
-    try {
-      val fileSchema = reader.getFooter.getFileMetaData.getSchema
+  private def decodeTypedFile(ctx: DirectServe.Ctx,
+                              file: String): TypedRows =
+    DirectServe.scanChannel(ctx, file) { (fileSchema, chBin) =>
+      val want = Seq("channel", "ts", "vtype", "value", "str_value",
+        "enum_value", "labels", "arr_num", "arr_str",
+        "agg_mean", "agg_min", "agg_max", "severity", "status",
+        "meta_units", "meta_precision", "meta_display_low",
+        "meta_display_high", "meta_warn_low", "meta_warn_high",
+        "meta_alarm_low", "meta_alarm_high", "sample_id")
       val present = want.filter(fileSchema.containsField)
       if (!present.contains("channel") || !present.contains("ts") ||
           !present.contains("vtype"))
-        throw new DirectServe.FallbackException
+        throw new FallbackException
       val fields: Seq[Type] = present.map(n =>
         fileSchema.getFields.get(fileSchema.getFieldIndex(n)))
-      val proj = new MessageType("proj", fields: _*)
-      reader.setRequestedSchema(proj)
       val idx = present.zipWithIndex.toMap
       val convs: Array[Converter] = fields.map { f =>
         f.getName match {
@@ -342,7 +196,7 @@ object DirectServeTyped {
               case PrimitiveType.PrimitiveTypeName.INT32 => new IntConv
               case PrimitiveType.PrimitiveTypeName.DOUBLE => new DblConv
               case PrimitiveType.PrimitiveTypeName.BINARY => new StrConv
-              case _ => throw new DirectServe.FallbackException
+              case _ => throw new FallbackException
             }
           case _ =>
             // list column: double elements for arr_num, strings else
@@ -387,7 +241,8 @@ object DirectServeTyped {
       // its converter, so reset in start().
       val listCols = convs.collect { case c: DblListConv => Left(c)
         case c: StrListConv => Right(c) }
-      val mat = new RecordMaterializer[java.lang.Void] {
+      val sink = new DirectServe.RowSink[TypedRows] {
+        private val out = mutable.ArrayBuffer.empty[TRow]
         private val root: GroupConverter = new GroupConverter {
           def getConverter(i: Int): Converter = convs(i)
           def start(): Unit = {
@@ -429,32 +284,13 @@ object DirectServeTyped {
                 sidC.filter(_.set).map(_.v).getOrElse(0L))
             }
         }
-        def getCurrentRecord: java.lang.Void = null
         def getRootConverter: GroupConverter = root
+        def rows(): TypedRows = new TypedRows(out.toArray)
+        def reorder(rows: TypedRows, order: Array[Int]): TypedRows =
+          new TypedRows(order.map(rows.rows))
       }
-      val io = new ColumnIOFactory().getColumnIO(proj)
-      var pages = reader.readNextFilteredRowGroup()
-      while (pages != null) {
-        val n = pages.getRowCount
-        if (n > 0) {
-          budget.decodedGroup()
-          val rr = io.getRecordReader(pages, mat)
-          var r = 0L
-          while (r < n) { rr.read(); r += 1 }
-        }
-        pages = reader.readNextFilteredRowGroup()
-      }
-    } finally reader.close()
-    if (out.length > 1) {
-      var asc = true; var i = 1
-      while (asc && i < out.length) {
-        if (out(i - 1).ts > out(i).ts) asc = false
-        i += 1
-      }
-      if (!asc) return out.sortBy(r => (r.ts, r.sid)).toIndexedSeq
+      (new MessageType("proj", fields: _*), sink)
     }
-    out.toIndexedSeq
-  }
 
   // ---- wire serialization -------------------------------------------
 
@@ -523,7 +359,7 @@ object DirectServeTyped {
     * gets null; [[element]] re-raises its error only if a request
     * selects it, as the per-row serve always did.
     */
-  private def encode(rows: IndexedSeq[TRow]): Array[String] = {
+  private def encode(rows: TypedRows): Array[String] = {
     val meta = new MetaJson
     val sw = new StringWriter(256)
     def generator(): JsonGenerator = {
@@ -536,7 +372,7 @@ object DirectServeTyped {
     var i = 0
     while (i < rows.length) {
       try {
-        write(g, rows(i), meta)
+        write(g, rows.rows(i), meta)
         g.flush()
         out(i) = sw.toString
       } catch {
@@ -550,9 +386,9 @@ object DirectServeTyped {
   }
 
   /** A selected row's element, from its file's encoding. */
-  private def element(h: Hit): String = {
+  private def element(h: Hit[TypedRows]): String = {
     val s = h.e.json(encode)(h.i)
-    if (s != null) s else jsonOf(h.row)
+    if (s != null) s else jsonOf(h.e.rows.rows(h.i))
   }
 
   /** One row on its own generator — throws what [[encode]] caught. */
@@ -676,7 +512,7 @@ object DirectServeTyped {
       // unknown tag: the engine's otherwise-branch serializes a
       // marker — an unknown tag here is a store this path does not
       // understand; refuse to guess
-      throw new DirectServe.FallbackException
+      throw new FallbackException
     }
     g.writeEndObject()
   }

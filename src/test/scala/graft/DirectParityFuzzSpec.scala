@@ -331,26 +331,43 @@ class DirectParityFuzzSpec extends AnyFunSuite {
       val span = fan.agg(min("ts"), max("ts")).collect().head
       val (lo, hi) = (span.getLong(0), span.getLong(1))
       layoutCount += names.size
+      // each channel's stored timestamps, ascending: the exact-bound,
+      // zero-width and outside-the-data window shapes sit on them
+      val stamps = fan.groupBy("channel").agg(sort_array(collect_set("ts")))
+        .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toVector)
+        .toMap
+      val H = 3600L * NS
       names.zipWithIndex.foreach { case (n, i) =>
-        val (qLo, qHi) =
+        val ts = stamps(n)
+        val (at1, at3) = (ts(ts.size / 4), ts(3 * ts.size / 4))
+        val shapes = Seq(
           if (i % 3 == 0) (lo + (hi - lo) / 3, hi - (hi - lo) / 3)
-          else (lo - 1, hi + 1)
-        val fast = Try(DirectServeTyped.tryServe(spark, cfgDir, store, n,
-          qLo, qHi, None, ManifestBackend, refuseDisabled = false)
-          .map(_.toVector))
-        val slow = Try(ConfiguredArchive.serveJsonTypedSpark(spark, cfgDir,
-          store, n, qLo, qHi, None, ManifestBackend).toVector)
-        requests += 1
-        (fast, slow) match {
-          case (Success(Some(f)), Success(s)) =>
-            assert(f == s, s"typed $n diverged")
-            engaged += 1
-          case (Success(None), Success(_)) => ()
-          case (Failure(a), Failure(b)) =>
-            assert(a.getClass == b.getClass, s"typed $n errors diverged")
-            engaged += 1
-          case (a, b) =>
-            fail(s"typed $n: one path failed, the other answered: $a vs $b")
+          else (lo - 1, hi + 1),
+          i % 4 match {
+            case 0 => (at1, at3)                      // bounds on stored ts
+            case 1 => (at1, at1)                      // zero width
+            case 2 => (ts.head - 2 * H, ts.head - H)  // before the first
+            case _ => (ts.last + H, ts.last + 2 * H)  // after the last
+          })
+        for ((qLo, qHi) <- shapes) {
+          val fast = Try(DirectServeTyped.tryServe(spark, cfgDir, store, n,
+            qLo, qHi, None, ManifestBackend, refuseDisabled = false)
+            .map(_.toVector))
+          val slow = Try(ConfiguredArchive.serveJsonTypedSpark(spark, cfgDir,
+            store, n, qLo, qHi, None, ManifestBackend).toVector)
+          requests += 1
+          (fast, slow) match {
+            case (Success(Some(f)), Success(s)) =>
+              assert(f == s, s"typed $n diverged")
+              engaged += 1
+            case (Success(None), Success(_)) => ()
+            case (Failure(a), Failure(b)) =>
+              assert(a.getClass == b.getClass, s"typed $n errors diverged")
+              engaged += 1
+            case (a, b) =>
+              fail(s"typed $n: one path failed, the other answered: " +
+                s"$a vs $b")
+          }
         }
       }
     }

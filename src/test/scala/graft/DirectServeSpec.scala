@@ -160,6 +160,23 @@ class DirectServeSpec extends AnyFunSuite {
     assert(slow.head.contains(s"\"time\":${T0 + 600 * 60L * NS}"))
   }
 
+  test("a scalar boundary sample 3000 days before the window is served " +
+      "on both paths (the scalar boundary has no reach cap)") {
+    val cfgDir = Files.createTempDirectory("dscfgf").toString
+    val store = Files.createTempDirectory("dsstoref").toString
+    ConfigCommands.addChannel(spark, cfgDir, ChannelConfig("pv:far", "id-far",
+      "ca", enabled = true, Map(), Map()))
+    val Day = 86400L * NS
+    val start = T0 + 3000 * Day
+    ConfiguredArchive.materialize(spark, cfgDir, store, frame(Seq(
+      ("pv:far", T0, Some(1.0), "", 0, 0, 1L),
+      ("pv:far", start + 30 * 60L * NS, Some(2.0), "", 0, 0, 2L))))
+    val (fast, slow) = bothIn((cfgDir, store))("pv:far", start,
+      start + 3600L * NS, None)
+    assert(fast.contains(slow))
+    assert(slow.size == 2 && slow.head.contains(s"\"time\":$T0,"))
+  }
+
   test("cross-commit duplicate timestamps collapse identically") {
     val (fast, slow) = both("pv:w", T0 + 19 * 60L * NS, T0 + 21 * 60L * NS,
       None)

@@ -101,6 +101,115 @@ class DirectServeTypedSpec extends AnyFunSuite {
     }
   }
 
+  private val Day = 86400L * NS
+  private val T0 = 1704067200L * NS
+
+  /** `scalar_double` samples copied from one row of the 21-tag store,
+    * placed at each (channel, ts, sample_id) of `at` (without `ts_raw`,
+    * which would keep the source row's time). */
+  private def typedAt(at: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val stored = ManifestStore.read(spark, fx._2, 0L)
+      .drop("level", "bucket_date", "ts_raw")
+    val tmpl = spark.createDataFrame(java.util.Arrays.asList(
+        stored.where(col("vtype") === "scalar_double").limit(1).collect()
+          : _*), stored.schema)
+      .drop("channel", "ts", "sample_id")
+    at.crossJoin(tmpl).select(stored.columns.map(col): _*)
+  }
+
+  private def typedChannels(prefix: String, names: Seq[String])
+      : (String, String) = {
+    val cfg = Files.createTempDirectory(prefix + "cfg").toString
+    val store = Files.createTempDirectory(prefix + "store").toString
+    names.foreach(n => ConfigCommands.addChannel(spark, cfg,
+      ChannelConfig(n, s"id-$n", "ca", enabled = true, Map(), Map())))
+    (cfg, store)
+  }
+
+  test("typed boundary samples reach as far as the engine probe: 2000 " +
+      "days out is served and 2100 days out is not, on both sides") {
+    import spark.implicits._
+    val start = T0 + 2200 * Day
+    val end = start + 3600L * NS
+    val inside = start + 1800L * NS
+    // channel → its one sample outside the window, and whether the
+    // widened bound reaches it (the engine probe stops at 2048 days)
+    val far = Seq(
+      "t:lo2100" -> (start - 2100 * Day, false),
+      "t:lo2000" -> (start - 2000 * Day, true),
+      "t:hi2100" -> (end + 2100 * Day, false),
+      "t:hi2000" -> (end + 2000 * Day, true))
+    val (cfg, store) = typedChannels("tdsreach", far.map(_._1))
+    // arrival ids in ts order (ingest drops a sample older than its
+    // channel's previous arrival)
+    val at = far.flatMap { case (n, (t, _)) =>
+        Seq((n, t), (n, inside)).sortBy(_._2) }
+      .zipWithIndex.map { case ((n, t), i) => (n, t, i.toLong) }
+    ConfiguredArchive.materializeTyped(spark, cfg, store,
+      typedAt(at.toDF("channel", "ts", "sample_id")))
+    for ((n, (t, reached)) <- far) {
+      val fast = DirectServeTyped.tryServe(spark, cfg, store, n, start, end,
+        None, ManifestBackend, refuseDisabled = false).map(_.toVector)
+      val slow = ConfiguredArchive.serveJsonTypedSpark(spark, cfg, store,
+        n, start, end, None, ManifestBackend).toVector
+      assert(fast.contains(slow), s"$n diverged")
+      assert(slow.exists(_.contains(s"\"time\":$inside,")), n)
+      assert(slow.exists(_.contains(s"\"time\":$t,")) == reached, n)
+    }
+  }
+
+  test("a typed request over the row-group budget falls back on a cold " +
+      "and on a warm cache alike") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val (cfg, store) = typedChannels("tdsg", Seq("t:g"))
+    // three one-day files of ~30 tiny row groups each: any one day fits
+    // the 64-group budget, all three do not
+    spark.conf.set("parquet.block.size", "1")
+    try (0 until 3).foreach { d =>
+      val day = typedAt(spark.range(0, 3000, 1, 1).select(
+        lit("t:g").as("channel"),
+        (col("id") * (28L * NS) + (T0 + d * Day)).as("ts"),
+        (col("id") + d * 3000L).as("sample_id")))
+      if (d == 0) ConfiguredArchive.materializeTyped(spark, cfg, store, day)
+      else ManifestBackend.write(ConfiguredArchive.idKeyed(day,
+        ConfigCommands.state(spark, cfg).enabledConfigs), store, 0L)
+    } finally spark.conf.unset("parquet.block.size")
+    val files = ManifestStore.latestManifest(spark, store).get.files
+    val groups = files.map { e =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$store/${e.path}"),
+          spark.sparkContext.hadoopConfiguration))
+      try r.getRowGroups.size finally r.close()
+    }
+    assert(groups.size == 3 && groups.forall(g => g > 1 && g <= 32) &&
+      groups.sum > DecodedRowCache.MaxDecodedGroups, s"groups $groups")
+
+    def serve(from: Long, to: Long) = (
+      DirectServeTyped.tryServe(spark, cfg, store, "t:g", from, to, None,
+        ManifestBackend, refuseDisabled = false).map(_.toVector),
+      ConfiguredArchive.serveJsonTypedSpark(spark, cfg, store, "t:g", from,
+        to, None, ManifestBackend).toVector)
+    val (coldFast, _) = serve(T0, T0 + 3 * Day)
+    assert(coldFast.isEmpty, "a cold request over budget must fall back")
+    // both bounds inside one day's samples: the inner scan and both
+    // boundary lookups read that day's file only
+    (0 until 3).foreach { d =>
+      val (fast, slow) = serve(T0 + d * Day + 1, T0 + d * Day + 80000L * NS)
+      assert(fast.contains(slow) && slow.size > 2800)
+    }
+    val before = DecodedRowCache.decodedGroups.get
+    val (warmFast, slow) = serve(T0, T0 + 3 * Day)
+    assert(DecodedRowCache.decodedGroups.get == before,
+      "every file of the warm request was cached")
+    assert(warmFast.isEmpty, "a warm request over budget must fall back")
+    assert(slow.size == 9000)
+    assert(ConfiguredArchive.serveJsonTyped(spark, cfg, store, "t:g",
+      T0, T0 + 3 * Day, None, ManifestBackend).toVector == slow)
+  }
+
   test("a decimated-level plan declines the fast path and the engine " +
       "answers") {
     val (cfg, store, names, lo, hi) = fx
