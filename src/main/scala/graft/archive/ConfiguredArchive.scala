@@ -42,8 +42,10 @@ object ConfiguredArchive {
     * memoized body is built from the versions its key names, and a
     * request pays one head probe per log ([[VersionLog]]) instead of
     * one per read. A version published after the snapshot is seen by
-    * the next request. The engine fallbacks still resolve the latest
-    * versions themselves.
+    * the next request. The M4 and LTTB engine fallbacks read at the
+    * request's snapshot too ([[queryM4]], [[queryLttb]]); the stats,
+    * spectrum, CUSUM and derived fallbacks still resolve a snapshot of
+    * their own.
     *
     * `manifest` is the head manifest of a [[ManifestBackend]] store
     * (None for an empty store and for other backends); `storeVersion`
@@ -537,25 +539,52 @@ object ConfiguredArchive {
                 startNs: Long, endNs: Long, k: Int,
                 backend: StoreBackend = ManifestBackend,
                 refuseDisabled: Boolean = false): DataFrame =
-    Analytics.lttb(rawScan(spark, configPath, storePath, name,
-        startNs, endNs, backend, refuseDisabled), startNs, endNs, k)
+    queryLttb(spark, snapshot(spark, configPath, storePath, backend), name,
+      startNs, endNs, k, refuseDisabled)
+
+  /** [[queryLttb]] at one request's [[Snapshot]]. */
+  private[graft] def queryLttb(spark: SparkSession, snap: Snapshot,
+                               name: String, startNs: Long, endNs: Long,
+                               k: Int, refuseDisabled: Boolean): DataFrame =
+    Analytics.lttb(rawScan(spark, snap, name, startNs, endNs,
+        refuseDisabled), startNs, endNs, k)
       .withColumn("channel", lit(name))
 
-  /** The shared front half of every config-governed analytic read:
-    * resolve the current name to its permanent id (refusing unknown —
-    * and, when asked, disabled — channels), then ONE pruned raw-level
-    * scan of that channel's rows in the inclusive range.
-    */
+  /** [[rawScan]] at a snapshot of the latest versions. */
   private def rawScan(spark: SparkSession, configPath: String,
                       storePath: String, name: String,
                       startNs: Long, endNs: Long,
                       backend: StoreBackend,
+                      refuseDisabled: Boolean): DataFrame =
+    rawScan(spark, snapshot(spark, configPath, storePath, backend), name,
+      startNs, endNs, refuseDisabled)
+
+  /** The shared front half of every config-governed analytic read:
+    * resolve the name to its permanent id in the snapshot's config
+    * (refusing unknown — and, when asked, disabled — channels), then
+    * ONE pruned raw-level scan of that channel's rows in the inclusive
+    * range, from the snapshot's manifest where it has one. Without one
+    * (a backend other than the manifest, or a manifest store that was
+    * empty at the snapshot) the scan reads the latest data. Such a body is never older than its snapshot, and it
+    * is newer only by a commit that raced the request; a memo keyed
+    * on the snapshot's version can then hold a body from a later
+    * version. That is harmless: store versions only grow (a regression
+    * purges the memos), every request resolving the newer version
+    * misses that key, and a request that still resolves the older one
+    * gets rows it could have been served a moment later anyway. An
+    * empty manifest store has no memo key at all.
+    */
+  private def rawScan(spark: SparkSession, snap: Snapshot, name: String,
+                      startNs: Long, endNs: Long,
                       refuseDisabled: Boolean): DataFrame = {
-    val cfg = resolveServable(spark, configPath, name, refuseDisabled)
-    backend.read(spark, storePath, 0L,
-        loNs = Some(startNs), hiNs = Some(endNs),
-        channel = Some(cfg.channelDataId))
-      .where(col("channel") === cfg.channelDataId &&
+    val cfg = resolveServable(snap.config, name, refuseDisabled)
+    val id = cfg.channelDataId
+    snap.manifest
+      .map(m => ManifestStore.readManifestFrame(spark, snap.storePath, m,
+        0L, Some(startNs), Some(endNs), Some(id)))
+      .getOrElse(snap.backend.read(spark, snap.storePath, 0L,
+        loNs = Some(startNs), hiNs = Some(endNs), channel = Some(id)))
+      .where(col("channel") === id &&
         col("ts") >= startNs && col("ts") <= endNs)
   }
 
@@ -645,8 +674,15 @@ object ConfiguredArchive {
               startNs: Long, endNs: Long, k: Int,
               backend: StoreBackend = ManifestBackend,
               refuseDisabled: Boolean = false): DataFrame =
-    Analytics.m4(rawScan(spark, configPath, storePath, name,
-        startNs, endNs, backend, refuseDisabled), startNs, endNs, k)
+    queryM4(spark, snapshot(spark, configPath, storePath, backend), name,
+      startNs, endNs, k, refuseDisabled)
+
+  /** [[queryM4]] at one request's [[Snapshot]]. */
+  private[graft] def queryM4(spark: SparkSession, snap: Snapshot,
+                             name: String, startNs: Long, endNs: Long,
+                             k: Int, refuseDisabled: Boolean): DataFrame =
+    Analytics.m4(rawScan(spark, snap, name, startNs, endNs,
+        refuseDisabled), startNs, endNs, k)
       .withColumn("channel", lit(name))
 
   /** The operator set [[queryDerived]] accepts — the HTTP edge checks

@@ -56,6 +56,13 @@ private[graft] object DecodedRowCache {
     * repeated request encodes nothing. */
   private[graft] val encodedElements = new AtomicLong
 
+  /** Wire elements encoded outside any entry's cached encoding,
+    * process-wide: computed points (a derived channel's grid), a typed
+    * row's re-raised encoding error, and an M4 or LTTB point of a file
+    * no raw serve has encoded yet. An M4 or LTTB request over encoded
+    * files encodes none — tests pin it. */
+  private[graft] val uncachedElements = new AtomicLong
+
   private final case class Key(file: String, bytes: Long, channel: String,
                                projection: String)
 
@@ -75,6 +82,9 @@ private[graft] object DecodedRowCache {
     /** The JSON v1 element of each row, in row order: `encode` runs on
       * the first call, and its strings then count against
       * [[MaxBytes]] for as long as the entry stays cached. */
+    /** The elements [[json]] made, or null before its first call. */
+    def encoded: Array[String] = wire
+
     def json(encode: A => Array[String]): Array[String] = {
       val cached = wire
       if (cached != null) return cached

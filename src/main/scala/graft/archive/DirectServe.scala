@@ -133,8 +133,11 @@ object DirectServe {
     def length: Int = tsArr.length
     def ts(i: Int): Long = tsArr(i)
     def value(i: Int): java.lang.Double =
-      if (values == null || nulls.get(i)) null
-      else java.lang.Double.valueOf(values(i))
+      if (isNull(i)) null else java.lang.Double.valueOf(values(i))
+    /** No value: a null sample, or the ts-only projection. */
+    def isNull(i: Int): Boolean = values == null || nulls.get(i)
+    /** The value of a row that is not [[isNull]], unboxed. */
+    def double(i: Int): Double = values(i)
     def sid(i: Int): Long = if (sids == null) 0L else sids(i)
     /** The primitive columns and the null bitmap. */
     def bytes: Long = 64L + 8L * length *
@@ -142,7 +145,7 @@ object DirectServe {
       nulls.size / 8
     /** Every row's wire element ([[jsonOf]]), in row order. */
     def json: Array[String] =
-      Array.tabulate(length)(i => jsonOf(ts(i), value(i)))
+      Array.tabulate(length)(i => element(ts(i), value(i)))
     /** The same rows in `order`. */
     def reorder(order: Array[Int]): ScalarRows = {
       val sortedNulls = new java.util.BitSet
@@ -158,6 +161,104 @@ object DirectServe {
       val e: DecodedRowCache.Entry[R], val i: Int) {
     def ts: Long = e.rows.ts(i)
     def sid: Long = e.rows.sid(i)
+  }
+
+  /** A selected scalar row's wire element: its file's encoding, made
+    * once per cached entry. */
+  private[archive] def wire(h: Hit[ScalarRows]): String = h.e.json(_.json)(h.i)
+
+  /** A panel point's wire element: the cached one when its file is
+    * encoded already, else this point alone ([[jsonOf]]). A panel
+    * picks a few points of a file, so it never encodes the whole file
+    * for them. */
+  private[archive] def pointWire(h: Hit[ScalarRows]): String = {
+    val cached = h.e.encoded
+    if (cached != null) cached(h.i) else jsonOf(h.ts, h.e.rows.value(h.i))
+  }
+
+  /** Rows `[from, until)` of one cached channel-file: a file's slice of
+    * a range, ts-ascending. */
+  private[archive] final class Run[R <: Rows](
+      val e: DecodedRowCache.Entry[R], val from: Int, val until: Int)
+
+  /** The panels' row view ([[tryRawRows]]): one channel's raw rows of a
+    * range, merged from the selected files' runs into (ts, sample_id)
+    * order, duplicates kept. The accessors read the cached columns in
+    * place, and `hit(i)` names the cached row, so a panel that serves
+    * stored samples can serve their cached wire elements. One file is
+    * read as is; more are merged once into a position index through a
+    * heap of the runs' heads, which costs one or two comparisons per
+    * row while the top run stays ahead (disjoint runs, the common
+    * ingest layout) and log(runs) otherwise. Each run is
+    * (ts, sample_id)-ascending ([[scanChannel]]) and ties go to the
+    * earlier run, so the merge is the stable (ts, sample_id) sort of
+    * every row.
+    */
+  private[archive] final class PanelRows(runs: IndexedSeq[Run[ScalarRows]]) {
+    private val files = runs.map(_.e.rows).toArray
+    val length: Int = runs.map(r => r.until - r.from).sum
+    // merged position -> run, and -> row of that run's file; null for
+    // a single run, whose rows are already in order
+    private val runAt: Array[Int] =
+      if (runs.length < 2) null else new Array[Int](length)
+    private val rowAt: Array[Int] =
+      if (runs.length < 2) null else new Array[Int](length)
+    if (runAt != null) {
+      val pos = runs.map(_.from).toArray
+      // run a's head sorts before run b's (ties: the earlier run)
+      def before(a: Int, b: Int): Boolean = {
+        val ta = files(a).ts(pos(a))
+        val tb = files(b).ts(pos(b))
+        ta < tb || ta == tb && {
+          val sa = files(a).sid(pos(a))
+          val sb = files(b).sid(pos(b))
+          sa < sb || sa == sb && a < b
+        }
+      }
+      // a binary min-heap of the runs that still hold rows
+      val heap = Array.range(0, runs.length)
+      var size = heap.length
+      def siftDown(at: Int): Unit = {
+        var i = at
+        var done = false
+        while (!done) {
+          val l = 2 * i + 1
+          var m = i
+          if (l < size && before(heap(l), heap(m))) m = l
+          if (l + 1 < size && before(heap(l + 1), heap(m))) m = l + 1
+          if (m == i) done = true
+          else {
+            val t = heap(i); heap(i) = heap(m); heap(m) = t
+            i = m
+          }
+        }
+      }
+      var h = size / 2 - 1
+      while (h >= 0) { siftDown(h); h -= 1 }
+      var n = 0
+      while (n < length) {
+        val best = heap(0)
+        runAt(n) = best
+        rowAt(n) = pos(best)
+        pos(best) += 1
+        n += 1
+        if (pos(best) == runs(best).until) { size -= 1; heap(0) = heap(size) }
+        siftDown(0)
+      }
+    }
+
+    private def file(i: Int): ScalarRows =
+      if (runAt == null) files(0) else files(runAt(i))
+    private def row(i: Int): Int =
+      if (rowAt == null) runs(0).from + i else rowAt(i)
+
+    def ts(i: Int): Long = file(i).ts(row(i))
+    def isNull(i: Int): Boolean = file(i).isNull(row(i))
+    /** The value at a position that is not [[isNull]]. */
+    def value(i: Int): Double = file(i).double(row(i))
+    def sid(i: Int): Long = file(i).sid(row(i))
+    def hit(i: Int): Hit[ScalarRows] =
+      new Hit(if (runAt == null) runs(0).e else runs(runAt(i)).e, row(i))
   }
 
   /** (ts, sample_id): the survivor order of duplicate timestamps. */
@@ -290,11 +391,9 @@ object DirectServe {
       val sel = new Selection(ctx.channel,
         manifest.files.filter(_.levelSec == period), Long.MaxValue,
         channelRows(ctx, _, valueCol))
-      val out = sel.select(from, to, loMode.getOrElse(defaultMode),
-        hiMode.getOrElse(defaultMode), usable.find(_.periodSec == period))
-      // each selected row's element comes from its file's encoding,
-      // made once per cached entry
-      out.map(h => h.e.json(_.json)(h.i))
+      sel.select(from, to, loMode.getOrElse(defaultMode),
+          hiMode.getOrElse(defaultMode), usable.find(_.periodSec == period))
+        .map(wire)
     }
 
   /** Drop this JVM's cached planning metadata and decoded rows for one
@@ -306,18 +405,18 @@ object DirectServe {
   }
 
   /** Raw-level rows of a config-resolved channel with `ts <= hi` (and
-    * `>= lo` when given), ts-ascending, duplicates across commits KEPT
-    * (the DataFrame scan keeps them too — the panels' aggregates must
-    * see identical multiplicity). None = out of the fast-path
-    * envelope; throws the same typed signals as the engine resolution.
-    * The driver-side row source for [[DirectPanels]].
+    * `>= lo` when given) in (ts, sample_id) order, duplicates across
+    * commits KEPT (the DataFrame scan keeps them too — the panels'
+    * aggregates must see identical multiplicity). None = out of the
+    * fast-path envelope; throws the same typed signals as the engine
+    * resolution. The driver-side row source for [[DirectPanels]].
     */
   private[archive] def tryRawRows(spark: SparkSession, configPath: String,
                                   storePath: String, name: String,
                                   lo: Option[Long], hi: Long,
                                   backend: StoreBackend,
                                   refuseDisabled: Boolean)
-      : Option[IndexedSeq[(Long, java.lang.Double)]] =
+      : Option[PanelRows] =
     tryRawRows(spark,
       ConfiguredArchive.snapshot(spark, configPath, storePath, backend),
       name, lo, hi, refuseDisabled)
@@ -327,7 +426,7 @@ object DirectServe {
                                   snap0: ConfiguredArchive.Snapshot,
                                   name: String, lo: Option[Long], hi: Long,
                                   refuseDisabled: Boolean)
-      : Option[IndexedSeq[(Long, java.lang.Double)]] =
+      : Option[PanelRows] =
     direct(spark, snap0) { snap =>
       val manifest =
         scalarManifest(snap).getOrElse(throw new FallbackException)
@@ -335,14 +434,10 @@ object DirectServe {
         refuseDisabled)
       val ctx = new Ctx(spark.sparkContext.hadoopConfiguration,
         snap.storePath, cfg.channelDataId)
-      val rows = new Selection(ctx.channel,
+      new PanelRows(new Selection(ctx.channel,
           manifest.files.filter(_.levelSec == 0L), Long.MaxValue,
           channelRows(ctx, _, Some("value")))
-        .range(lo.getOrElse(Long.MinValue), hi)
-      // duplicates kept (panel multiplicity); (ts, arrival) order makes
-      // equal-ts neighborhoods deterministic
-      rows.toIndexedSeq.sorted(hitOrder[ScalarRows])
-        .map(h => (h.ts, h.e.rows.value(h.i)))
+        .runs(lo.getOrElse(Long.MinValue), hi))
     }
 
   // ---- row selection -------------------------------------------------
@@ -360,15 +455,19 @@ object DirectServe {
 
     private val files = entries.filter(mayContain(_, channel))
 
-    /** Rows with `lo <= ts <= hi`, duplicates kept; each file decodes
-      * as the iterator reaches it. */
+    /** Each file's non-empty run of rows with `lo <= ts <= hi`, in
+      * manifest order, duplicates kept. */
+    def runs(lo: Long, hi: Long): IndexedSeq[Run[R]] =
+      files.filter(e => e.maxTs >= lo && e.minTs <= hi).map { e =>
+        val entry = rowsOf(e)
+        new Run(entry, search(entry.rows, lo, after = false),
+          search(entry.rows, hi, after = true))
+      }.filter(r => r.from < r.until).toIndexedSeq
+
+    /** [[runs]] as hits. */
     def range(lo: Long, hi: Long): Iterator[Hit[R]] =
-      files.iterator.filter(e => e.maxTs >= lo && e.minTs <= hi).flatMap {
-        e =>
-          val entry = rowsOf(e)
-          Iterator.range(search(entry.rows, lo, after = false),
-            search(entry.rows, hi, after = true)).map(new Hit(entry, _))
-      }
+      runs(lo, hi).iterator.flatMap(r =>
+        Iterator.range(r.from, r.until).map(new Hit(r.e, _)))
 
     /** The rows served for `[from, to]`: with a widened bound the
       * inner range excludes that edge and its boundary lookup serves it
@@ -551,7 +650,9 @@ object DirectServe {
     * `plan` picks the projection from the file schema and the sink for
     * it; each decoded row group is charged to the request's budget.
     * Writers cluster a file by (channel, ts); rows that are not
-    * ts-ascending anyway are sorted stably by (ts, sample_id).
+    * (ts, sample_id)-ascending anyway (a compacted file can hold one
+    * timestamp from several commits in any order) are sorted stably by
+    * (ts, sample_id), which is what [[PanelRows]] merges on.
     */
   private[archive] def scanChannel[R <: Rows](ctx: Ctx, file: String)
       (plan: (MessageType, Binary) => (MessageType, RowSink[R])): R = {
@@ -583,7 +684,9 @@ object DirectServe {
     } finally reader.close()
     val rows = sink.rows()
     var i = 1
-    while (i < rows.length && rows.ts(i - 1) <= rows.ts(i)) i += 1
+    while (i < rows.length && (rows.ts(i - 1) < rows.ts(i) ||
+        rows.ts(i - 1) == rows.ts(i) && rows.sid(i - 1) <= rows.sid(i)))
+      i += 1
     if (i >= rows.length) rows
     else sink.reorder(rows, (0 until rows.length)
       .sortBy(j => (rows.ts(j), rows.sid(j))).toArray)
@@ -668,6 +771,14 @@ object DirectServe {
 
   // ---- wire format ---------------------------------------------------
 
+  /** [[element]] for a point no cached encoding holds (a derived
+    * channel's computed grid, a panel point of a file not encoded
+    * yet), counted in [[DecodedRowCache.uncachedElements]]. */
+  private[archive] def jsonOf(ts: Long, v: java.lang.Double): String = {
+    DecodedRowCache.uncachedElements.incrementAndGet()
+    element(ts, v)
+  }
+
   /** One JSON v1 raw sample, byte-identical to
     * [[JsonV1.serializeRaw]]'s `to_json` output for the serve frame
     * (severity/status are the serve path's literal zeros; doubles
@@ -675,7 +786,7 @@ object DirectServe {
     * writeNumber(double) emits, with non-finite values quoted exactly
     * like Jackson's QUOTE_NON_NUMERIC_NUMBERS).
     */
-  private[archive] def jsonOf(ts: Long, v: java.lang.Double): String = {
+  private def element(ts: Long, v: java.lang.Double): String = {
     val sb = new java.lang.StringBuilder(96)
     sb.append("{\"time\":").append(ts)
     sb.append(",\"severity\":{\"level\":\"OK\",\"hasValue\":")

@@ -393,6 +393,7 @@ object DirectServeTyped {
 
   /** One row on its own generator — throws what [[encode]] caught. */
   private def jsonOf(r: TRow): String = {
+    DecodedRowCache.uncachedElements.incrementAndGet()
     val sw = new StringWriter(160)
     val g = jsonFactory.createGenerator(sw)
     write(g, r, new MetaJson)

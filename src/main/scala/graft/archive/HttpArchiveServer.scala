@@ -440,33 +440,33 @@ object HttpArchiveServer {
     }
     // driver-side downsample fast path: the manifest-pruned rows fold
     // on the driver (DirectPanels — exact replicas of the engine
-    // reducers), zero Spark jobs; out-of-envelope stores fall through
-    def fastPoints(k: Int, f: (IndexedSeq[(Long, java.lang.Double)], Int)
-        => Vector[(Long, Double)]): Option[Iterator[String]] =
+    // reducers), zero Spark jobs, and every point it picks is a stored
+    // row, served as its file's cached wire element once a raw serve
+    // has encoded that file; out-of-envelope stores fall through to
+    // the engine at the same snapshot
+    def fastPoints(fold: DirectServe.PanelRows =>
+        collection.IndexedSeq[DirectServe.Hit[DirectServe.ScalarRows]])
+        : Option[Iterator[String]] =
       DirectServe.tryRawRows(spark, snap, channel, Some(start.get), end.get,
           refuseDisabled)
-        .map(rows => f(rows, k).iterator.map(p =>
-          DirectServe.jsonOf(p._1, p._2)))
+        .map(rows => fold(rows).iterator.map(DirectServe.pointWire))
     val it =
       try {
         if (lttbK.isDefined) {
-          fastPoints(lttbK.flatten.get, (rows, k) =>
-            DirectPanels.lttb(rows, start.get, end.get, k)).getOrElse {
-            val df = ConfiguredArchive.queryLttb(spark, snap.configPath,
-                snap.storePath, channel, start.get, end.get,
-                lttbK.flatten.get, snap.backend,
-                refuseDisabled = refuseDisabled)
+          fastPoints(DirectPanels.lttb(_, start.get, end.get,
+              lttbK.flatten.get)).getOrElse {
+            val df = ConfiguredArchive.queryLttb(spark, snap, channel,
+                start.get, end.get, lttbK.flatten.get, refuseDisabled)
               .withColumn("severity", lit(0)).withColumn("status", lit(0))
               .orderBy("ts")
             ArchiveServer.serializedIterator(JsonV1.serializeRaw(df),
               Some(lttbK.flatten.get.toLong))
           }
         } else if (m4K.isDefined) {
-          fastPoints(m4K.flatten.get, (rows, k) =>
-            DirectPanels.m4Points(rows, start.get, end.get, k)).getOrElse {
-            val m = ConfiguredArchive.queryM4(spark, snap.configPath,
-              snap.storePath, channel, start.get, end.get, m4K.flatten.get,
-              snap.backend, refuseDisabled = refuseDisabled)
+          fastPoints(DirectPanels.m4Points(_, start.get, end.get,
+              m4K.flatten.get)).getOrElse {
+            val m = ConfiguredArchive.queryM4(spark, snap, channel,
+              start.get, end.get, m4K.flatten.get, refuseDisabled)
             // the distinct time-ordered corner points
             // (Analytics.m4Points — shared with the byte-parity spec)
             val pts = Analytics.m4Points(m)

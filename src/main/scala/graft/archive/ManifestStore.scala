@@ -897,7 +897,9 @@ object ManifestStore {
     df
   }
 
-  private def readManifestFrame(spark: SparkSession, path: String,
+  /** One level of the manifest `m` (see [[read]]), for a reader that
+    * resolved its version already. */
+  private[graft] def readManifestFrame(spark: SparkSession, path: String,
                                 m: Manifest,
                                 levelSec: Long, loNs: Option[Long],
                                 hiNs: Option[Long],

@@ -2,7 +2,8 @@ package graft.archive
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -12,7 +13,10 @@ import graft.TestSpark
   * handlers previously always ran) — over the shapes that break naive
   * replicas: NaN values, null-valued samples, duplicate timestamps
   * from separate commits, value ties inside a bucket, empty buckets,
-  * a held marker masking a derived grid, and division by zero.
+  * a held marker masking a derived grid, and division by zero. M4 and
+  * LTTB are also compared as wire bodies, byte for byte, over signed
+  * zeros, cross-file duplicate timestamps and extreme bucket counts,
+  * and their engine fallbacks are pinned to the request's snapshot.
   */
 class DirectPanelsSpec extends AnyFunSuite {
 
@@ -76,6 +80,10 @@ class DirectPanelsSpec extends AnyFunSuite {
 
   private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
 
+  /** A picked row as (ts, value bits). */
+  private def pt(h: DirectServe.Hit[DirectServe.ScalarRows]): (Long, Long) =
+    (h.ts, bits(h.e.rows.double(h.i)))
+
   test("m4 corner points match the engine bit for bit") {
     val (cfg, store) = fx
     val lo = T0; val hi = T0 + 600L * 60L * NS
@@ -86,7 +94,7 @@ class DirectPanelsSpec extends AnyFunSuite {
         .map(r => (r.getLong(r.fieldIndex("ts")),
           bits(r.getDouble(r.fieldIndex("value"))))).toVector
       val fast = DirectPanels.m4Points(rowsOf("pv:m", Some(lo), hi),
-        lo, hi, k).map(p => (p._1, bits(p._2)))
+        lo, hi, k).map(pt).toVector
       assert(fast == eng, s"m4 k=$k diverged")
     }
   }
@@ -101,7 +109,7 @@ class DirectPanelsSpec extends AnyFunSuite {
         .map(r => (r.getLong(r.fieldIndex("ts")),
           bits(r.getDouble(r.fieldIndex("value"))))).toVector
       val fast = DirectPanels.lttb(rowsOf("pv:m", Some(lo), hi),
-        lo, hi, k).map(p => (p._1, bits(p._2)))
+        lo, hi, k).map(pt).toVector
       assert(fast == eng, s"lttb k=$k diverged")
     }
   }
@@ -181,5 +189,160 @@ class DirectPanelsSpec extends AnyFunSuite {
         rowsOf("pv:b", None, end), ConfiguredArchive.DerivedOpsD("div"),
         start, end, step)
     }
+  }
+
+  // ---- wire bodies over the edge shapes -----------------------------
+
+  /** One channel, 300 one-minute samples, with a 60-minute gap (empty
+    * buckets), value ties, signed zeros tying as a bucket's minimum
+    * (minutes 40–49) and maximum (60–69), NaN, null markers; compacted
+    * into one file, then overlapped by a fresh commit that re-sends
+    * some timestamps with other values (later arrivals). */
+  private lazy val edge: (String, String) = {
+    import spark.implicits._
+    val cfgDir = Files.createTempDirectory("dpecfg").toString
+    val store = Files.createTempDirectory("dpestore").toString
+    ConfigCommands.addChannel(spark, cfgDir,
+      ChannelConfig("pv:e", "ide", "ca", enabled = true, Map(), Map()))
+    def frame(rows: Seq[(Int, Option[Double], Long)]): DataFrame =
+      rows.map { case (i, v, sid) =>
+        ("pv:e", T0 + i * 60L * NS, v, "", 0, 0, sid)
+      }.toDF("channel", "ts", "value", "str_value", "severity", "status",
+        "sample_id")
+    val base = (0 until 300).filterNot(i => i >= 100 && i < 160).map { i =>
+      val v: Option[Double] = i match {
+        case 41 | 47 => Some(0.0)
+        case 43 => Some(-0.0)
+        case _ if i >= 40 && i < 50 => Some(1.0 + i)
+        case 61 => Some(-0.0)
+        case 64 | 66 => Some(0.0)
+        case _ if i >= 60 && i < 70 => Some(-1.0 - i)
+        case 80 | 85 => Some(Double.NaN)
+        case 90 | 91 => None
+        case 171 | 173 => Some(-5.0) // a value tie for the minimum
+        case _ if i % 10 == 3 => Some(7.5)
+        case _ => Some(math.cos(i * 0.3) * 4.0)
+      }
+      (i, v, i.toLong)
+    }
+    ConfiguredArchive.materialize(spark, cfgDir, store,
+      frame(base.filter(_._1 < 200)))
+    ConfiguredArchive.ingestRaw(spark, cfgDir, store,
+      frame(base.filter(_._1 >= 200)))
+    ManifestStore.compactAll(spark, store, 0L)
+    // the fresh commit: duplicate timestamps with other values, one
+    // that only becomes a minimum, one a maximum, one the last corner
+    ConfiguredArchive.ingestRaw(spark, cfgDir, store, frame(Seq(
+      (200, Some(-300.0), 100200L), (205, Some(300.0), 100205L),
+      (206, Some(4.0), 100206L), (209, Some(-0.5), 100209L),
+      (250, Some(123.0), 100250L), (299, Some(-7.0), 100299L),
+      (300, Some(1.0), 100300L))))
+    val files = ManifestStore.latestManifest(spark, store).get.files
+      .filter(_.levelSec == 0L)
+    assert(files.size >= 2 && files.exists(a => files.exists(b =>
+      (a ne b) && a.minTs <= b.maxTs && b.minTs <= a.maxTs)),
+      "the fixture needs two overlapping raw files")
+    (cfgDir, store)
+  }
+
+  private def engineBody(df: DataFrame): Vector[String] =
+    JsonV1.serializeRaw(df.withColumn("severity", lit(0))
+        .withColumn("status", lit(0)))
+      .orderBy("ts").select("json").collect().map(_.getString(0)).toVector
+
+  private def edgeRows(lo: Long, hi: Long): DirectServe.PanelRows = {
+    val (cfg, store) = edge
+    DirectServe.tryRawRows(spark, cfg, store, "pv:e", Some(lo), hi,
+      ManifestBackend, refuseDisabled = false).get
+  }
+
+  private val EdgeWindows = Seq(
+    (T0, T0 + 300L * 60L * NS),
+    (T0 + 37L * 60L * NS + 13L * NS, T0 + 301L * 60L * NS))
+
+  test("m4 bodies equal the engine's byte for byte over ties, cross-file " +
+      "duplicate timestamps, NaN, signed zeros, nulls, empty buckets, " +
+      "k = 1, k above the row count and an overflowing (ts - lo) * k") {
+    val (cfg, store) = edge
+    for ((lo, hi) <- EdgeWindows;
+         k <- Seq(1, 7, 30, 97, 5000, 2000000000)) {
+      val eng = engineBody(Analytics.m4Points(ConfiguredArchive.queryM4(
+        spark, cfg, store, "pv:e", lo, hi, k)))
+      val picked = DirectPanels.m4Points(edgeRows(lo, hi), lo, hi, k)
+      // each point alone (cold at first), then from its file's encoding
+      for (fast <- Seq(picked.map(DirectServe.pointWire).toVector,
+                       picked.map(DirectServe.wire).toVector))
+        assert(fast == eng, s"m4 k=$k over [$lo, $hi) diverged")
+    }
+  }
+
+  test("lttb bodies equal the engine's byte for byte over the same " +
+      "shapes") {
+    val (cfg, store) = edge
+    for ((lo, hi) <- EdgeWindows; k <- Seq(3, 12, 30, 5000, 2000000000)) {
+      val eng = engineBody(ConfiguredArchive.queryLttb(spark, cfg, store,
+        "pv:e", lo, hi, k))
+      val picked = DirectPanels.lttb(edgeRows(lo, hi), lo, hi, k)
+      for (fast <- Seq(picked.map(DirectServe.pointWire).toVector,
+                       picked.map(DirectServe.wire).toVector))
+        assert(fast == eng, s"lttb k=$k over [$lo, $hi) diverged")
+    }
+  }
+
+  test("m4 and lttb at k = 2,000,000,000 allocate nothing sized by k") {
+    val (lo, hi) = EdgeWindows.head
+    val rows = edgeRows(lo, hi)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def allocated(f: => Any): Long = {
+      val id = Thread.currentThread.getId
+      val before = mx.getThreadAllocatedBytes(id)
+      f
+      mx.getThreadAllocatedBytes(id) - before
+    }
+    // one array slot per bucket would be gigabytes; a few hundred rows
+    // cost kilobytes
+    for ((name, fold) <- Seq[(String, () => Any)](
+        "m4" -> (() => DirectPanels.m4Points(rows, lo, hi, 2000000000)),
+        "lttb" -> (() => DirectPanels.lttb(rows, lo, hi, 2000000000)))) {
+      fold() // warm
+      val bytes = allocated(fold())
+      assert(bytes < (4L << 20), s"$name allocated $bytes bytes")
+    }
+  }
+
+  test("an m4 or lttb fallback through a snapshot resolved before a " +
+      "commit returns the older version's bytes") {
+    import spark.implicits._
+    val cfgDir = Files.createTempDirectory("dpscfg").toString
+    val store = Files.createTempDirectory("dpsstore").toString
+    ConfigCommands.addChannel(spark, cfgDir,
+      ChannelConfig("pv:s", "ids", "ca", enabled = true, Map(), Map()))
+    def frame(is: Seq[Int], v: Int => Double, sid: Int => Long) =
+      is.map(i => ("pv:s", T0 + i * 60L * NS, v(i), "", 0, 0, sid(i)))
+        .toDF("channel", "ts", "value", "str_value", "severity", "status",
+          "sample_id")
+    ConfiguredArchive.materialize(spark, cfgDir, store,
+      frame(0 until 300, i => math.sin(i * 0.1), _.toLong))
+    val (lo, hi) = (T0, T0 + 400L * 60L * NS)
+    def bodies(): (Vector[String], Vector[String]) = (
+      engineBody(Analytics.m4Points(ConfiguredArchive.queryM4(spark,
+        cfgDir, store, "pv:s", lo, hi, 10))),
+      engineBody(ConfiguredArchive.queryLttb(spark, cfgDir, store, "pv:s",
+        lo, hi, 10)))
+    val snap = ConfiguredArchive.snapshot(spark, cfgDir, store,
+      ManifestBackend)
+    val older = bodies()
+    // new rows past the old end, and a re-sent timestamp that becomes
+    // a bucket's maximum
+    ConfiguredArchive.ingestRaw(spark, cfgDir, store,
+      frame((300 until 400) :+ 150, i => if (i == 150) 99.0 else i * 0.01,
+        i => 1000L + i))
+    val newer = bodies()
+    assert(newer._1 != older._1 && newer._2 != older._2)
+    assert(engineBody(Analytics.m4Points(ConfiguredArchive.queryM4(spark,
+      snap, "pv:s", lo, hi, 10, refuseDisabled = false))) == older._1)
+    assert(engineBody(ConfiguredArchive.queryLttb(spark, snap, "pv:s", lo,
+      hi, 10, refuseDisabled = false)) == older._2)
   }
 }

@@ -73,9 +73,14 @@ class DirectParityFuzzSpec extends AnyFunSuite {
   /** Build one store from `layouts` with up to three commits (one
     * materialize + up to two ingests — cross-commit duplicates happen
     * whenever a dup-ts row lands in a later commit than its twin).
+    * With `resend`, every other channel also gets a fourth commit that
+    * re-sends every third of its rows with another value, so those
+    * channels hold at least two overlapping files with duplicate
+    * timestamps of different values (later arrivals).
     */
-  private def buildScalarStore(layouts: Seq[ChLayout],
-                               withLevel: Boolean): (String, String) = {
+  private def buildScalarStore(layouts: Seq[ChLayout], withLevel: Boolean,
+                               resend: Boolean = false)
+      : (String, String) = {
     import spark.implicits._
     val cfgDir = Files.createTempDirectory("fzcfg").toString
     val store = Files.createTempDirectory("fzstore").toString
@@ -87,18 +92,28 @@ class DirectParityFuzzSpec extends AnyFunSuite {
           levels))
     }
     var sid = 0L
-    val all = layouts.flatMap { l =>
+    val sent = layouts.flatMap { l =>
       l.rows.map { case (ts, v, sev, c) =>
         sid += 1
         (l.name, ts, v, "", sev, 0, sid, c)
       }
     }
+    val resent =
+      if (!resend) Nil
+      else layouts.zipWithIndex.filter(_._2 % 2 == 0).flatMap { case (l, _) =>
+        l.rows.zipWithIndex.filter(_._2 % 3 == 0).map {
+          case ((ts, v, sev, _), _) =>
+            sid += 1
+            (l.name, ts, Some(v.fold(2.5)(_ * 2.0 + 1.0)), "", sev, 0, sid, 3)
+        }
+      }
+    val all = sent ++ resent
     def frame(c: Int): DataFrame = all.filter(_._8 == c)
       .map(r => (r._1, r._2, r._3, r._4, r._5, r._6, r._7))
       .toDF("channel", "ts", "value", "str_value", "severity", "status",
         "sample_id")
     ConfiguredArchive.materialize(spark, cfgDir, store, frame(0))
-    Seq(1, 2).foreach { c =>
+    Seq(1, 2, 3).foreach { c =>
       if (all.exists(_._8 == c))
         ConfiguredArchive.ingestRaw(spark, cfgDir, store, frame(c))
     }
@@ -214,11 +229,13 @@ class DirectParityFuzzSpec extends AnyFunSuite {
           s"answered: $e vs $f")
       }
     var layoutCount = 0
+    var crossFile = 0
     for (storeIdx <- 0 until 2) {
       val layouts = (0 until 16).map(ci =>
         gen(chanGen(s"pv:p$storeIdx:c$ci"), seed = 7000L * storeIdx + ci))
       layoutCount += layouts.size
-      val (cfgDir, store) = buildScalarStore(layouts, withLevel = false)
+      val (cfgDir, store) =
+        buildScalarStore(layouts, withLevel = false, resend = true)
       layouts.foreach { l =>
         if (l.rows.nonEmpty) {
           val name = l.name
@@ -228,6 +245,10 @@ class DirectParityFuzzSpec extends AnyFunSuite {
             Some(lo), hi, ManifestBackend, refuseDisabled = false)
           assert(rowsOpt.isDefined, s"$name: raw row fetch declined")
           val rows = rowsOpt.get
+          // equal-ts neighbours read from two different files
+          if ((1 until rows.length).exists(i =>
+              rows.ts(i) == rows.ts(i - 1) &&
+                (rows.hit(i).e ne rows.hit(i - 1).e))) crossFile += 1
           // m4 + lttb
           for (k <- Seq(3, 11)) {
             samely(s"$name m4 k=$k")(
@@ -237,7 +258,7 @@ class DirectParityFuzzSpec extends AnyFunSuite {
                 .map(r => (r.getLong(r.fieldIndex("ts")),
                   bits(r.getDouble(r.fieldIndex("value"))))).toVector,
               DirectPanels.m4Points(rows, lo, hi, k)
-                .map(p => (p._1, bits(p._2))).toVector)
+                .map(h => (h.ts, bits(h.e.rows.double(h.i)))).toVector)
             samely(s"$name lttb k=$k")(
               ConfiguredArchive.queryLttb(spark, cfgDir, store,
                   name, lo, hi, k)
@@ -245,7 +266,7 @@ class DirectParityFuzzSpec extends AnyFunSuite {
                 .map(r => (r.getLong(r.fieldIndex("ts")),
                   bits(r.getDouble(r.fieldIndex("value"))))).toVector,
               DirectPanels.lttb(rows, lo, hi, k)
-                .map(p => (p._1, bits(p._2))).toVector)
+                .map(h => (h.ts, bits(h.e.rows.double(h.i)))).toVector)
           }
           // stats — an all-null channel may answer n=0 on the engine
           // side and None on the fold; both mean "no distribution"
@@ -283,8 +304,9 @@ class DirectParityFuzzSpec extends AnyFunSuite {
       }
     }
     info(s"panels: $layoutCount layouts x {m4,lttb}x2 + stats + " +
-      "spectrum + cusum")
+      s"spectrum + cusum; $crossFile with cross-file duplicate timestamps")
     assert(layoutCount >= 32)
+    assert(crossFile >= 8, s"only $crossFile channels hold overlapping files")
   }
 
   // ---- typed layouts --------------------------------------------------

@@ -668,6 +668,48 @@ class HttpArchiveServerSpec extends AnyFunSuite {
       l4 == b4.getBytes(StandardCharsets.UTF_8).length.toString)
   }
 
+  test("an m4 request encodes only its points on a cold file, none on " +
+      "a warm one, and is byte-identical to the engine path's body") {
+    import org.apache.spark.sql.functions.lit
+    import graft.archive.DecodedRowCache
+    val lo = T0 + 20L * 60L * NS
+    val hi = T0 + 580L * 60L * NS
+    val ch = enc("pv:alpha")
+    def m4(k: Int): String = {
+      val hits = fixture._3.stats.responseCacheHits.get
+      val (code, body) = get(s"$base/1/samples/$ch?start=$lo&end=$hi&m4=$k")
+      assert(code == 200)
+      assert(fixture._3.stats.responseCacheHits.get == hits,
+        "the m4 request must be served, not replayed from the response cache")
+      val pts = graft.archive.Analytics.m4Points(ConfiguredArchive.queryM4(
+          spark, cfgDir, storePath, "pv:alpha", lo, hi, k))
+        .withColumn("severity", lit(0)).withColumn("status", lit(0))
+      val expected = graft.archive.JsonV1.serializeRaw(pts)
+        .orderBy("ts").select("json").collect().map(_.getString(0))
+      assert(expected.length > k)
+      assert(body == framed(expected.toSeq, pretty = false))
+      body
+    }
+    def points(body: String): Long = "\\{\"time\":".r.findAllIn(body).size
+    // cold: the files' rows are decoded, but only the picked points are
+    // encoded, not every row of the files
+    DecodedRowCache.purge(storePath)
+    var encoded = DecodedRowCache.encodedElements.get
+    var uncached = DecodedRowCache.uncachedElements.get
+    val cold = m4(11)
+    assert(DecodedRowCache.encodedElements.get == encoded,
+      "a cold m4 request encoded whole files")
+    assert(DecodedRowCache.uncachedElements.get - uncached == points(cold))
+    // a raw request warms the files: their rows' wire elements
+    assert(get(s"$base/1/samples/$ch?start=$lo&end=$hi")._1 == 200)
+    encoded = DecodedRowCache.encodedElements.get
+    uncached = DecodedRowCache.uncachedElements.get
+    m4(13)
+    assert(DecodedRowCache.encodedElements.get == encoded)
+    assert(DecodedRowCache.uncachedElements.get == uncached,
+      "the m4 fast path re-encoded stored samples")
+  }
+
   test("a samples body over RespCacheMaxElems streams chunked and " +
       "byte-identical to serveJsonSpark") {
     import spark.implicits._
